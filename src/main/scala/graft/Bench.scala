@@ -47,8 +47,7 @@ object Bench {
       System.err.println(s"[bench] stage warm-up failed: ${e.getMessage}")
     }
     // Warm EVERY key once, untimed, against the tiny sf0.001 sibling
-    // (r16, superseding the curated family list below — kept as
-    // documentation of WHY warming matters per family). Rationale: the
+    // (r16, superseding a curated per-family warm list). Rationale: the
     // r16 8-vs-32-CPU comparison showed per-key times identical at both
     // widths (stats_spearman 4.09 vs 3.93, kmeans_iter 2.09 vs 2.08 …) —
     // at sf0.1 the timed region is dominated by SERIAL driver-side work
@@ -63,58 +62,6 @@ object Bench {
     // their honest sf0.1 fit (SessionMemo is (session, dir)-keyed) and
     // caches are cleared before the timed loop.
     val warmQueries = SparkEntry.queries.keys.toSeq.sorted
-    val warmFamilies = Seq(
-      // measured r10 in-suite outliers (>2× isolated medians before being
-      // warmed: agg_hash_sum 12.11 s vs 1.80, agg_collect_list 9.32 vs
-      // 1.34, …) — decimal agg, sorted collect_list, PMI/broadcast,
-      // pair-graph degree, basket explosion, ExactQuantiles families
-      "agg_hash_sum", "agg_collect_list", "token_pmi", "graph_degree",
-      "basket_lift", "histogram_equidepth",
-      // operator families the rounds 4-10 synthetic warms used to cover:
-      // SortMergeJoin + broadcast join, WindowExec + running frames,
-      // JSON-path codegen (r9: fn_json 9.1 s vs 1.9 isolated),
-      // substring/sequence grams (r9: bpe_pair_counts 9.1 vs 0.8),
-      // banded 3-arg levenshtein + CC, posexplode centroid update
-      "join_sortmerge", "window_frame_rows", "fn_json", "bpe_pair_counts",
-      "dedup_name_variants", "kmeans_iter",
-      // session_window plans through UpdatingSessions/MergingSessions
-      // classes nothing else loads (r11: 2.39 s first-touch vs 0.7 warm)
-      "stream_session",
-      // gram/dedup pipeline (HOF transform + explode + distinct + window +
-      // cached self-join + CC): 8.8 s first-touch vs 2.2 steady (r9)
-      "dedup_cluster",
-      // 4-gram broadcast-probe family (r12 profile: 7.28 s cold / 1.1 s
-      // steady isolated; 1.73 s residual after dedup_cluster's 3-gram
-      // warm; 0.9-1.2 s from the first timed run with this entry)
-      "decontaminate",
-      // ANN/PQ family (r13 driver: ann_ivfpq 10.85 s vs 1.60 in-suite
-      // median, ann_ivf 3.93 vs ~1.1 isolated): in alphabetical order
-      // ann_ivfpq is the family's FIRST timed key, so it absorbed the
-      // whole-family first-touch codegen (integer-Lloyd rounds, ADC
-      // lookup exprs, broadcast cell join) on top of its own fit. The
-      // SessionMemo is (session, dir)-keyed, so this sf0.001 pass does
-      // NOT pre-train the sf0.1 model (the timed first key still pays
-      // one honest small fit) — it only loads the generated classes,
-      // exactly the decontaminate treatment
-      "ann_ivfpq", "ann_ivf",
-      // JSON round-trip family (r14: fn_json_table 4.11 s first-touch in
-      // the gate bench — to_json/JsonToStructs-with-array/posexplode
-      // codegen classes nothing else loads; the query itself is a
-      // map-only projection)
-      "fn_json_table",
-      // span family (r14): the positioned double-fold gram expression is
-      // its own codegen shape; span_attribution is the family's first
-      // timed key alphabetically and would absorb it
-      "span_attribution",
-      // decimal-predicate sparse-cosine family (r14): DECIMAL(38,0)
-      // cross-multiplied gate + decimal moment sums are their own codegen
-      // classes (measured 15.0 s first-touch vs 4.1 s steady at sf0.1);
-      // stats_corr_matrix shares the decimal-sum shape
-      "sim_sparse_cosine", "stats_corr_matrix")
-    // a renamed key here is a code bug — fail the bench loudly, don't
-    // silently skip the warm and re-skew whichever query absorbed it
-    warmFamilies.foreach(q => require(SparkEntry.queries.contains(q),
-      s"warm-up list names unknown query '$q'"))
     // Prefer the sibling sf0.001 fixture; if the layout doesn't have one,
     // warm on sfDir itself — a one-time cost outside the timed region
     // beats skewing the first queries of each family, but it ALSO
@@ -237,6 +184,8 @@ object Bench {
     // full-precision 220-key queries_full line to the file as well
     // (additions-only: the stdout contract is byte-unchanged) so a
     // complete per-key diff is always recoverable from the archive.
+    // The file is line-oriented, NOT one JSON document: line 1 is the
+    // contract line, line 2 the queries_full line — parse it per line.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench_last.json"),
       line + "\n" +

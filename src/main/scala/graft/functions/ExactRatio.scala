@@ -1,43 +1,55 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, expr}
 
-/** Exact scaled-integer rationals for cross-engine hash surfaces.
+/** Exact scaled-integer statistics for cross-engine hash surfaces, and the
+  * one statement of the exactness contract every normalized statistic
+  * follows (query scaladocs point here rather than restating it).
   *
-  * Round 14 proved (driver forensics, VERDICT r14 "What's wrong #1") that a
-  * `round(cast(bigint AS double) / (sqrt(..) * sqrt(..)), 6)` presentation
-  * column is a coin flip across oracle environments: whenever the true value
-  * sits near a `…5e-7` rounding-bucket boundary, the last ulp of the
-  * division/sqrt/round chain can resolve differently per engine build even
-  * though every input integer is identical. Five keys failed the driver's
-  * hash while passing the bit-exact local replica at all three SFs.
+  * Every emitter returns SQL text for a [[Flavor]]: Spark consumes it
+  * through `expr` / [[applySpark]], the DuckDB oracle interpolates it /
+  * [[applyDuck]] — one function writes both engines' twins.
   *
-  * The cure is to never hash a double at all: every normalized statistic is
-  * re-expressed as a scaled-integer rational computed with EXACT integer
-  * arithmetic only — comparisons, `+`, `*`, `%`, `abs`, `greatest`, CASE and
-  * non-negative integer division, each of which is defined identically on
-  * Spark (DECIMAL(38,0), `div`) and DuckDB (HUGEINT, `//`). Two disciplines
-  * make that safe at any magnitude:
+  * The contract:
+  *  1. '''Never hash a double.''' A `round(x / (sqrt(..) * sqrt(..)), 6)`
+  *     column is a coin flip across oracle builds whenever the true value
+  *     sits near a rounding-bucket boundary: the last ulp of the
+  *     division/sqrt/round chain resolves differently per engine build
+  *     although every input integer is identical. Every normalized
+  *     statistic is therefore a scaled-integer rational computed with
+  *     exact integer arithmetic only — comparisons, `+`, `-`, `*`, `%`,
+  *     [[safeAbs]], `greatest`, CASE and non-negative integer division.
+  *  2. '''Never emit decimal128.''' The driver's hash canonicalizes decimal
+  *     columns differently per side (every DECIMAL(38,0) output column
+  *     failed, magnitude-independent), so unbounded moments ship as a
+  *     [[modDigest]] and ratios as BIGINT.
+  *  3. '''Never divide a negative.''' Spark's `div` truncates toward zero
+  *     while DuckDB's `//` floors; they agree only on non-negative
+  *     operands, so numerators pass through [[safeAbs]] and the sign ships
+  *     as a separate exact INT ([[signInt]]).
+  *  4. '''Keep every quotient inside int64.''' Spark's `div` always returns
+  *     BIGINT and silently WRAPS a larger quotient, while DuckDB's HUGEINT
+  *     `//` is exact to 128 bits. [[e6]] states the bound as its
+  *     precondition; the shift ladders ([[ratE6Stages]], [[r2e6Stages]])
+  *     enforce it at any magnitude.
+  *  5. '''Moments are exact 128-bit sums''' ([[bigSum]]): per-row products
+  *     in int64, accumulated as DECIMAL(38,0) / HUGEINT, so cross-multiplied
+  *     terms such as n·Σxy − Σx·Σy ([[Pearson]], [[Slope]]) are exact and
+  *     order-independent. Formation past 10³⁸ fails loudly on both engines.
   *
-  *  1. '''Magnitude shift.''' The raw cross-moments reach ~10²⁵ at sf0.1
-  *     (and grow as n²·unit² with the corpus), so `1e6·num²` overflows even
-  *     128-bit integers. Before the rational, each operand is floor-divided
-  *     by a power of ten chosen by a CASE ladder of exact integer
-  *     comparisons (digits above a kept-width budget). The shifted ratio is
-  *     no longer bit-identical to `floor(1e6·r²)` in the last place — but it
-  *     IS a deterministic exact-integer function of the data, evaluated
-  *     identically on both engines, which is all a hash surface needs; the
-  *     relative truncation error is ≤ 10⁻¹⁰ whenever the statistic is
-  *     meaningfully non-zero.
-  *  2. '''No negative division.''' Spark's `div` truncates toward zero while
-  *     DuckDB's `//` floors — they agree only on non-negative operands, so
-  *     numerators pass through `abs()` and the sign is carried as a separate
-  *     exact INT column.
-  *
-  * Helpers emit STAGED column lists (each stage referencing the previous
-  * stage's columns by name) so the generated SQL stays linear in size —
-  * inlining the shift ladder into the power ladder would blow up ~30×.
+  * '''Magnitude shift.''' Cross-moments reach ~10²⁵ at sf0.1 (growing as
+  * n²·unit²), so `1e6·num²` overflows even 128-bit integers. Before a
+  * laddered rational each operand is floor-divided by a power of ten
+  * chosen by a CASE ladder of exact comparisons (digits above a kept-width
+  * budget). The shifted ratio is not bit-identical to `floor(1e6·r²)` in
+  * the last place, but it is a deterministic exact-integer function of
+  * the data, evaluated identically on both engines — all a hash surface
+  * needs; the relative truncation error is ≤ 10⁻¹⁰ whenever the statistic
+  * is meaningfully non-zero. Ladders are STAGED column lists (each stage
+  * references the previous stage's columns by name) so the generated SQL
+  * stays linear in size — inlining the shift ladder into the power ladder
+  * would blow up ~30×.
   */
 object ExactRatio {
 
@@ -56,6 +68,85 @@ object ExactRatio {
     */
   val DuckF: Flavor =
     Flavor(x => s"CAST(($x) AS HUGEINT)", (a, b) => s"(($a) // ($b))")
+
+  /** Exact moment sum Σx as a 128-bit integer (contract rule 5). */
+  def bigSum(f: Flavor, x: String): String = s"sum(${f.bigCast(x)})"
+
+  /** floor(10⁶·a / b) as BIGINT by ONE integer division. Precondition,
+    * stated once for every caller: a ≥ 0, b ≥ 1 and a/b < 9.2·10¹², so
+    * the quotient fits int64 (rules 3 and 4) — the count shares, rates and
+    * effect sizes. A ratio whose operands can drift further apart takes
+    * [[ratE6Stages]] instead.
+    */
+  def e6(f: Flavor, a: String, b: String): String =
+    s"CAST(${f.intDiv(s"${bigLit(f, 6)} * ($a)", b)} AS BIGINT)"
+
+  /** n·Σxy − Σx·Σy: n² × the (co)variance, exact with no division. */
+  def coMoment(f: Flavor, n: String, sxy: String, sx: String, sy: String): String =
+    s"${f.bigCast(n)} * $sxy - $sx * $sy"
+
+  /** Pearson correlation tail over exact moment sums (n, Σx, Σy, Σxy, Σx²,
+    * Σy²): [[columns]] forms `cov_n2` (n²·cov), `vxx` and `vyy`;
+    * [[nonDegenerate]] excludes a constant column (r is undefined there
+    * and NaN/Infinity renderings are not hash-stable). The companion's
+    * presentation reads only those three named columns.
+    */
+  final case class Pearson(f: Flavor, n: String, sx: String, sy: String,
+                           sxy: String, sxx: String, syy: String) {
+    def columns: Seq[(String, String)] = Seq(
+      "cov_n2" -> f.bigCast(coMoment(f, n, sxy, sx, sy)),
+      "vxx" -> f.bigCast(coMoment(f, n, sxx, sx, sx)),
+      "vyy" -> f.bigCast(coMoment(f, n, syy, sy, sy)))
+    def nonDegenerate: String =
+      s"${coMoment(f, n, sxx, sx, sx)} > 0 AND ${coMoment(f, n, syy, sy, sy)} > 0"
+  }
+
+  object Pearson {
+    /** The tail over [[sums]]' column names. */
+    def apply(f: Flavor): Pearson = Pearson(f, "n", "sx", "sy", "sxy", "sxx", "syy")
+    /** Exact sums Σx, Σy, Σxy, Σx², Σy² of integer columns x, y, named
+      * sx, sy, sxy, sxx, syy. */
+    def sums(f: Flavor, x: String, y: String): Seq[(String, String)] =
+      Slope.sums(f, x, y) :+ ("syy" -> bigSum(f, s"$y * $y"))
+    /** Stages appending r² ×10⁶ as `out` ([[r2e6Stages]]). */
+    def stages(f: Flavor, out: String): Seq[Seq[(String, String)]] =
+      r2e6Stages(f, "cov_n2", "vxx", "vyy", out)
+    /** Sign of r as INT. */
+    val sign: String = signInt("cov_n2")
+    /** The covariance's mod-1e9+7 witness. */
+    def digest(f: Flavor): String = modDigest(f, "cov_n2")
+  }
+
+  /** Exact OLS slope tail over moment sums (n, Σx, Σy, Σxy, Σx²):
+    * [[columns]] forms `num` (n·Σxy − ΣxΣy), `den` (n·Σx² − (Σx)²) and
+    * `sl_a` = |num|; [[nonDegenerate]] needs two points and a varying x.
+    */
+  final case class Slope(f: Flavor, n: String, sx: String, sy: String,
+                         sxy: String, sxx: String) {
+    private def num = f.bigCast(coMoment(f, n, sxy, sx, sy))
+    def columns: Seq[(String, String)] = Seq(
+      "num" -> num,
+      "den" -> f.bigCast(coMoment(f, n, sxx, sx, sx)),
+      "sl_a" -> safeAbs(f, num))
+    def nonDegenerate: String = s"$n >= 2 AND ${coMoment(f, n, sxx, sx, sx)} > 0"
+  }
+
+  object Slope {
+    /** The tail over [[sums]]' column names. */
+    def apply(f: Flavor): Slope = Slope(f, "n", "sx", "sy", "sxy", "sxx")
+    /** Exact sums Σx, Σy, Σxy, Σx² of integer columns x, y, named sx, sy,
+      * sxy, sxx. */
+    def sums(f: Flavor, x: String, y: String): Seq[(String, String)] = Seq(
+      "sx" -> bigSum(f, x), "sy" -> bigSum(f, y),
+      "sxy" -> bigSum(f, s"$x * $y"), "sxx" -> bigSum(f, s"$x * $x"))
+    /** Stages appending `sl_e6` ≈ floor(10⁶·|num|/den) ([[ratE6Stages]]). */
+    def stages(f: Flavor): Seq[Seq[(String, String)]] = ratE6Stages(f, "sl_a", "den", "sl_e6")
+    /** `num_m9`, `den_m9` and the signed slope ×10⁶ as `out`. */
+    def presentation(f: Flavor, out: String): Seq[(String, String)] = Seq(
+      "num_m9" -> modDigest(f, "num"),
+      "den_m9" -> modDigest(f, "den"),
+      out -> s"CAST(${signInt("num")} * sl_e6 AS BIGINT)")
+  }
 
   /** Exact absolute value of a big-integer expression. NEVER use bare
     * `abs()` (or unary minus) on a Spark DECIMAL(38,0) surface: this
@@ -137,16 +228,11 @@ object ExactRatio {
 
   /** Stages appending `out` ≈ floor(1e6 · a / b) as BIGINT for exact
     * integer columns a ≥ 0, b ≥ 1, each < 1e38 — the single-ratio surface
-    * (F statistics, η², regression slopes). The shift budget is governed
-    * by Spark's `div`: IntegralDivide always returns BIGINT and silently
-    * WRAPS any quotient above int64 (verified on the bundled Spark 4.1.2:
-    * `CAST('1e25-ish' AS DECIMAL(38,0)) div 1` returns garbage), while
-    * DuckDB's HUGEINT `//` is exact to 128 bits — so every staged div
-    * must keep its QUOTIENT under 9.2e18 or the two engines silently
-    * diverge. The common shift u therefore reduces BOTH operands to ≤ 12
-    * digits (u = max over the two shiftOver terms — the r2e6Stages
-    * discipline): a' ≤ 1e12 and b' ≤ 1e12, so `a div 10^u`, `b div 10^u`
-    * and the final `1e6·a' div b'` (≤ 1e18 even when b' collapses to the
+    * (F statistics, η², regression slopes). Rule 4 sets the shift budget:
+    * the common shift u reduces BOTH operands to ≤ 12 digits (u = max
+    * over the two shiftOver terms — the r2e6Stages discipline): a' ≤ 1e12
+    * and b' ≤ 1e12, so `a div 10^u`, `b div 10^u` and the final
+    * `1e6·a' div b'` (≤ 1e18 even when b' collapses to the
     * `greatest(b', 1)` guard) all fit int64. Truncation error (ADVICE
     * r16): the COMMON shift u = max(shift(a), shift(b)) truncates the
     * smaller operand hard when magnitudes are skewed — relative error is
@@ -177,19 +263,22 @@ object ExactRatio {
   }
 
   /** Bounded exactness witness for a (possibly huge) exact integer
-    * column: `abs(x) mod 1000000007` as BIGINT. Round-15 forensics: the
-    * driver's hash breaks on ANY decimal128 output column (its
-    * duckdb/pandas stack canonicalizes decimals differently per side —
-    * the 7 r15 hash-red keys were EXACTLY the 7 keys emitting
-    * DECIMAL(38,0), magnitude-independent), so unbounded moments like
-    * n²·cov may never ship raw. The modular digest keeps a full-width
-    * exactness witness (any single-limb discrepancy between the engines'
-    * 128-bit moments survives mod p with probability 1 − 1/p) on an
-    * int64 surface that can never overflow at any data scale. Sign is
-    * carried separately by [[signInt]] where it matters.
+    * column: `abs(x) mod 1000000007` as BIGINT (rule 2). Any single-limb
+    * discrepancy between the engines' 128-bit values survives mod p with
+    * probability 1 − 1/p, on an int64 surface that can never overflow at
+    * any data scale. Sign is carried separately by [[signInt]] where it
+    * matters.
     */
   def modDigest(f: Flavor, x: String): String =
     s"CAST((${f.bigCast(safeAbs(f, x))} % 1000000007) AS BIGINT)"
+
+  /** Named Spark columns for an emitted (name, SQL) list. */
+  def sparkCols(cols: Seq[(String, String)]): Seq[Column] =
+    cols.map { case (name, sql) => expr(sql).as(name) }
+
+  /** `sql AS name, …` select-list text for an emitted (name, SQL) list. */
+  def duckCols(cols: Seq[(String, String)]): String =
+    cols.map { case (name, sql) => s"$sql AS $name" }.mkString(", ")
 
   /** Apply staged columns to a DataFrame (Spark flavor); Catalyst collapses
     * the chained projections into one.
@@ -198,8 +287,7 @@ object ExactRatio {
     // one select per stage, NOT a withColumn per column: withColumn runs
     // the full analyzer once per call, and a ladder is 9–12 columns — the
     // per-run DataFrame-construction cost was measurable (r18)
-    stages.foldLeft(df)((d, st) =>
-      d.select(col("*") +: st.map(ce => expr(ce._2).as(ce._1)): _*))
+    stages.foldLeft(df)((d, st) => d.select(col("*") +: sparkCols(st): _*))
 
   /** [[applySpark]] for a BOUNDED group-domain frame (≤ a few hundred
     * rows by construction — per-flag / per-event-type / per-decile
@@ -249,6 +337,5 @@ object ExactRatio {
     * per stage; the caller's outer SELECT picks the contract columns.
     */
   def applyDuck(inner: String, stages: Seq[Seq[(String, String)]]): String =
-    stages.foldLeft(s"($inner)")((q, st) =>
-      s"(SELECT *, ${st.map(ce => s"${ce._2} AS ${ce._1}").mkString(", ")} FROM $q)")
+    stages.foldLeft(s"($inner)")((q, st) => s"(SELECT *, ${duckCols(st)} FROM $q)")
 }

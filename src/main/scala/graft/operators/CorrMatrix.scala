@@ -2,26 +2,17 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.ExactRatio
 
 /** One-pass Pearson correlation matrix over k integer-valued columns —
   * the profiling/collinearity audit behind the `stats_corr_matrix` query,
   * exposed generically: any frame, any column count.
   *
-  * Exactness contract: the caller snaps measures to integers FIRST
-  * (cents, percent points, counts — the caller owns the units); every
-  * moment is then an exact sum — per-row products in int64, accumulated
-  * as DECIMAL(38,0) — so n²·covariance (the cross-multiplied integer
-  * that needs no division) is engine-exact and order-independent; it
-  * ships as `cov_m9` = abs mod 1e9+7 (a bounded int64 witness — r15
-  * forensics: the driver's hash breaks on any decimal128 output column,
-  * so the raw 128-bit moment may never be emitted).
-  * The normalized correlation is exposed as `r2_e6` ≈ floor(1e6·r²) plus
-  * `r_sign`, both exact integers built by [[graft.functions.ExactRatio]]
-  * — no double is ever emitted (r14 forensics: a round(double) ratio
-  * column is a cross-engine hash coin flip near bucket boundaries).
-  * Degenerate pairs (either variance term zero — a constant column) are
-  * EXCLUDED by exact integer comparison: r is undefined there and
-  * NaN/Infinity renderings are not hash-stable cross-engine.
+  * Exactness: the caller snaps measures to integers FIRST (cents, percent
+  * points, counts — the caller owns the units); the moments and the
+  * `cov_m9` / `r2_e6` / `r_sign` presentation are ExactRatio's Pearson
+  * tail (the contract lives in [[graft.functions.ExactRatio]]). Pairs
+  * with a constant column are excluded.
   *
   * Scale shape: ONE map-side-combinable aggregate over the fact table to
   * a single (1 + k + k(k+1)/2)-number row; the k(k−1)/2-row pair matrix
@@ -44,27 +35,21 @@ object CorrMatrix {
     val k = cols.size
     val b = df.select(cols.zipWithIndex.map { case (c, i) =>
       col(c).cast("long").as(s"x${i + 1}") }: _*)
-    val sumCols = (1 to k).map(i =>
-        sum(expr(s"cast(x$i as decimal(38,0))")).as(s"s$i")) ++
+    val f = ExactRatio.SparkF
+    val sumCols = (1 to k).map(i => expr(ExactRatio.bigSum(f, s"x$i")).as(s"s$i")) ++
       (for (i <- 1 to k; j <- i to k)
-        yield sum(expr(s"cast(x$i * x$j as decimal(38,0))")).as(s"q${i}_$j"))
+        yield expr(ExactRatio.bigSum(f, s"x$i * x$j")).as(s"q${i}_$j"))
     val aggs = count(lit(1)).as("n") +: sumCols
     val m = b.agg(aggs.head, aggs.tail: _*)
-    def term(i: Int, j: Int) =
-      s"cast(n as decimal(38,0)) * q${i}_$j - s$i * s$j"
     val pairs = for (i <- 1 to k; j <- (i + 1) to k) yield struct(
-      lit(cols(i - 1)).as("col_x"), lit(cols(j - 1)).as("col_y"),
-      col("n").as("n"),
-      expr(s"cast(${term(i, j)} as decimal(38,0))").as("cov_n2"),
-      expr(s"cast(${term(i, i)} as decimal(38,0))").as("vxx"),
-      expr(s"cast(${term(j, j)} as decimal(38,0))").as("vyy"))
-    import graft.functions.ExactRatio
+      lit(cols(i - 1)).as("col_x") +: lit(cols(j - 1)).as("col_y") +:
+        col("n").as("n") +: ExactRatio.sparkCols(ExactRatio.Pearson(f, "n",
+          s"s$i", s"s$j", s"q${i}_$j", s"q${i}_$i", s"q${j}_$j").columns): _*)
     val exploded = m.select(explode(array(pairs: _*)).as("p")).select("p.*")
       .filter(col("vxx") > 0 && col("vyy") > 0)
-    ExactRatio.applySparkDomain(exploded,
-        ExactRatio.r2e6Stages(ExactRatio.SparkF, "cov_n2", "vxx", "vyy", "r2_e6"))
-      .withColumn("r_sign", expr(ExactRatio.signInt("cov_n2")))
-      .withColumn("cov_m9", expr(ExactRatio.modDigest(ExactRatio.SparkF, "cov_n2")))
+    ExactRatio.applySparkDomain(exploded, ExactRatio.Pearson.stages(f, "r2_e6"))
+      .withColumn("r_sign", expr(ExactRatio.Pearson.sign))
+      .withColumn("cov_m9", expr(ExactRatio.Pearson.digest(f)))
       .select("col_x", "col_y", "n", "cov_m9", "r2_e6", "r_sign")
       .orderBy("col_x", "col_y")
   }

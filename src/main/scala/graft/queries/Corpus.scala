@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.ExactRatio
+import graft.functions.ExactRatio.{DuckF, Slope, SparkF, duckCols, e6, sparkCols}
 
 /** Round-12 corpus-preparation suite (SURVEY.md §2.13 extension): the four
   * document-level operations a training-data pipeline runs between raw
@@ -267,8 +269,8 @@ object Corpus {
     * training actually plans by: `domain_mix` balances DOCUMENT counts,
     * but a 50-token doc and a 5k-token doc are not the same spend, so the
     * budget table reports exact token counts and each cell's share of the
-    * corpus budget as share_e6 = floor(1e6·tokens/total) — integer-only
-    * (r15 rule). Scale: token counts are per-row `size(split(…))` (no
+    * corpus budget as share_e6 = floor(1e6·tokens/total) via
+    * [[ExactRatio.e6]]. Scale: token counts are per-row `size(split(…))` (no
     * explode — the only O(data) stage is one map + combinable aggregate
     * onto the ≤ |sources|×|langs| domain); the corpus total rides a
     * window over that bounded cell table (allowlisted).
@@ -281,7 +283,7 @@ object Corpus {
        |w AS (SELECT source, lang, n_docs, n_tokens,
        |    CAST(sum(n_tokens) OVER () AS BIGINT) AS total FROM g)
        |SELECT source, lang, n_docs, n_tokens,
-       |  CAST((CAST('1000000' AS HUGEINT) * n_tokens) // total AS BIGINT) AS share_e6
+       |  ${e6(DuckF, "n_tokens", "total")} AS share_e6
        |FROM w ORDER BY source, lang""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val g = Tables.documents(s, d)
@@ -291,7 +293,7 @@ object Corpus {
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
     g.withColumn("total", sum("n_tokens").over(Window.partitionBy()))
       .select(col("source"), col("lang"), col("n_docs"), col("n_tokens"),
-        expr("cast((cast('1000000' as decimal(38,0)) * n_tokens) div total as bigint)").as("share_e6"))
+        expr(e6(SparkF, "n_tokens", "total")).as("share_e6"))
       .orderBy("source", "lang")
   }
 
@@ -301,8 +303,7 @@ object Corpus {
     * sit near 40-60% hapax share of vocabulary; templated text collapses
     * far below), token total, and the two ratios every corpus report
     * prints — hapax share of vocab and type-token ratio — as exact
-    * ×10⁶ integers (HUGEINT/DECIMAL(38,0) cross-multiplied floor
-    * division; the r16 int64-only hash rule). Scale: ONE O(data) explode
+    * ×10⁶ integers via [[ExactRatio.e6]]. Scale: ONE O(data) explode
     * collapses immediately onto the (source, token) DOMAIN through a
     * combinable count; the per-source profile is a second combinable
     * aggregate on that domain. No windows, no joins.
@@ -316,9 +317,8 @@ object Corpus {
        |  CAST(count(*) AS BIGINT) AS vocab,
        |  CAST(sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
        |  CAST(sum(tf) AS BIGINT) AS n_tokens,
-       |  CAST((CAST('1000000' AS HUGEINT) * sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END))
-       |    // count(*) AS BIGINT) AS hapax_e6,
-       |  CAST((CAST('1000000' AS HUGEINT) * count(*)) // sum(tf) AS BIGINT) AS ttr_e6
+       |  ${e6(DuckF, "sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END)", "count(*)")} AS hapax_e6,
+       |  ${e6(DuckF, "count(*)", "sum(tf)")} AS ttr_e6
        |FROM tf GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
     Tables.documents(s, d)
       .select(col("source"), explode(split(lower(col("text")), " ")).as("tok"))
@@ -329,10 +329,8 @@ object Corpus {
         sum(when(col("tf") === 1, 1L).otherwise(0L)).as("hapax"),
         sum("tf").as("n_tokens"))
       .select(col("source"), col("vocab"), col("hapax"), col("n_tokens"),
-        expr("cast((cast('1000000' as decimal(38,0)) * hapax) div vocab as bigint)")
-          .as("hapax_e6"),
-        expr("cast((cast('1000000' as decimal(38,0)) * vocab) div n_tokens as bigint)")
-          .as("ttr_e6"))
+        expr(e6(SparkF, "hapax", "vocab")).as("hapax_e6"),
+        expr(e6(SparkF, "vocab", "n_tokens")).as("ttr_e6"))
       .orderBy("source")
   }
 
@@ -355,21 +353,13 @@ object Corpus {
     * provably the smallest k with id ≤ q_k, identical on both engines —
     * so x_k (docs seen) and y_k (vocab = trigram types whose FIRST doc ≤ q_k)
     * are cumulative sums over a 16-row bounded domain (allowlisted
-    * window). ln snaps to ×10⁶ BIGINTs (MarginSpec-gated), OLS moments
-    * exact DECIMAL(38,0), slope via the shift-guarded ExactRatio ladder,
-    * moments witnessed as mod-1e9+7 digests (the r16 hash rule). Scale:
+    * window). ln snaps to ×10⁶ BIGINTs (MarginSpec-gated) and the slope
+    * is ExactRatio's Slope tail (exactness contract: [[ExactRatio]]). Scale:
     * one O(data) trigram explode collapsing onto the trigram-type domain
     * (min(doc_id) per type is combinable), one doc-id scan; everything
     * after runs on ≤16 rows.
     */
-  private val corpusHeaps = Q("corpus_heaps", {
-    import graft.functions.ExactRatio
-    val inner =
-      """SELECT n,
-        |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS num,
-        |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS den,
-        |  abs(CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS HUGEINT)) AS sl_a
-        |FROM m WHERE n >= 2 AND CAST(n AS HUGEINT) * sxx - sx * sx > 0""".stripMargin
+  private val corpusHeaps = Q("corpus_heaps",
     s"""WITH b AS (SELECT min(doc_id) AS lo, greatest(max(doc_id) - min(doc_id), 1) AS dl
        |  FROM documents),
        |db AS (SELECT least(CAST(16 AS BIGINT),
@@ -395,18 +385,11 @@ object Corpus {
        |    CAST(floor(ln(CAST(xk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS x,
        |    CAST(floor(ln(CAST(yk AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS y
        |  FROM cum WHERE xk >= 1 AND yk >= 1),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-       |    sum(CAST(x * y AS HUGEINT)) AS sxy,
-       |    sum(CAST(x * x AS HUGEINT)) AS sxx FROM sn)
-       |SELECT n,
-       |  ${ExactRatio.modDigest(ExactRatio.DuckF, "num")} AS num_m9,
-       |  ${ExactRatio.modDigest(ExactRatio.DuckF, "den")} AS den_m9,
-       |  CAST(${ExactRatio.signInt("num")} * sl_e6 AS BIGINT) AS beta_e6
-       |FROM ${ExactRatio.applyDuck(inner,
-          ExactRatio.ratE6Stages(ExactRatio.DuckF, "sl_a", "den", "sl_e6"))} q""".stripMargin
-  }) { (s, d) =>
-    import graft.functions.ExactRatio
+       |m AS (SELECT CAST(count(*) AS BIGINT) AS n, ${duckCols(Slope.sums(DuckF, "x", "y"))} FROM sn)
+       |SELECT n, ${duckCols(Slope.presentation(DuckF, "beta_e6"))}
+       |FROM ${ExactRatio.applyDuck(s"SELECT n, ${duckCols(Slope(DuckF).columns)}" +
+          s" FROM m WHERE ${Slope(DuckF).nonDegenerate}",
+          Slope.stages(DuckF))} q""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
     // the 1-row bounds frame feeds BOTH bucketings — pinned so the doc-id
     // min/max scan runs once, not once per broadcast consumer (r17 scan
@@ -445,24 +428,11 @@ object Corpus {
       .select(
         expr("cast(floor(ln(cast(xk as double)) * 1000000 + 0.5) as bigint)").as("x"),
         expr("cast(floor(ln(cast(yk as double)) * 1000000 + 0.5) as bigint)").as("y"))
-    val m = sn.agg(count(lit(1)).as("n"),
-      sum(expr("cast(x as decimal(38,0))")).as("sx"),
-      sum(expr("cast(y as decimal(38,0))")).as("sy"),
-      sum(expr("cast(x * y as decimal(38,0))")).as("sxy"),
-      sum(expr("cast(x * x as decimal(38,0))")).as("sxx"))
-    val base = m.filter(col("n") >= 2 &&
-        expr("cast(n as decimal(38,0)) * sxx - sx * sx > 0"))
-      .select(col("n"),
-        expr("cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))").as("num"),
-        expr("cast(cast(n as decimal(38,0)) * sxx - sx * sx as decimal(38,0))").as("den"),
-        expr(graft.functions.ExactRatio.safeAbs(graft.functions.ExactRatio.SparkF,
-          "cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))")).as("sl_a"))
-    ExactRatio.applySparkDomain(base,
-        ExactRatio.ratE6Stages(ExactRatio.SparkF, "sl_a", "den", "sl_e6"))
-      .select(col("n"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "num")).as("num_m9"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "den")).as("den_m9"),
-        expr(s"cast(${ExactRatio.signInt("num")} * sl_e6 as bigint)").as("beta_e6"))
+    val m = sn.agg(count(lit(1)).as("n"), sparkCols(Slope.sums(SparkF, "x", "y")): _*)
+    val base = m.filter(expr(Slope(SparkF).nonDegenerate))
+      .select(col("n") +: sparkCols(Slope(SparkF).columns): _*)
+    ExactRatio.applySparkDomain(base, Slope.stages(SparkF))
+      .select(col("n") +: sparkCols(Slope.presentation(SparkF, "beta_e6")): _*)
   }
 
   /** Top-100 trigram coverage: what fraction of all trigram OCCURRENCES
@@ -492,7 +462,7 @@ object Corpus {
        |    CAST(sum(tf) AS BIGINT) AS top_occ
        |  FROM (SELECT tf FROM tf ORDER BY tf DESC, tri LIMIT 100) c)
        |SELECT n_types, total_occ, n_top, top_occ,
-       |  CAST((CAST('1000000' AS HUGEINT) * top_occ) // total_occ AS BIGINT) AS cov_e6
+       |  ${e6(DuckF, "top_occ", "total_occ")} AS cov_e6
        |FROM tot, top""".stripMargin) { (s, d) =>
     val tf = Tables.documents(s, d)
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
@@ -507,8 +477,7 @@ object Corpus {
       .agg(count(lit(1)).as("n_top"), sum("tf").as("top_occ"))
     tot.crossJoin(top)
       .select(col("n_types"), col("total_occ"), col("n_top"), col("top_occ"),
-        expr("cast((cast('1000000' as decimal(38,0)) * top_occ) div total_occ as bigint)")
-          .as("cov_e6"))
+        expr(e6(SparkF, "top_occ", "total_occ")).as("cov_e6"))
   }
 
   val all: Seq[Q] = Seq(corpusTokenBudget, textHapax, corpusHeaps,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.ExactRatio
+import graft.functions.ExactRatio.{DuckF, Slope, SparkF, duckCols, sparkCols}
 
 /** Round-8 data-curation / pipeline-analytics suite (SURVEY.md §2.13).
   *
@@ -738,13 +740,10 @@ object Curation {
     * pairs with [[textBoilerplate]] and the `text_repetition` screen).
     * Log-log OLS over the DETERMINISTIC top-500 tokens (tf DESC, token
     * ASC tie-break — both engines cut the same set): ln(rank)/ln(tf)
-    * snap to ×10⁶ integers (the col_entropy ln discipline), the OLS
-    * numerator/denominator are exact DECIMAL(38,0) cross-products
-    * (n·Σxy − ΣxΣy overflows int64 at ~10¹⁹ — decimal from the start),
-    * and the slope ships as slope_e6 = sign(num)·floor(1e6·|num|/den)
-    * via ExactRatio — exact integers only on the hash surface (the r14
-    * lesson: a hashed round(double) ratio flipped per oracle build).
-    * Scale: the tf aggregate is the only
+    * snap to ×10⁶ integers (the col_entropy ln discipline), and the
+    * slope is ExactRatio's Slope tail: slope_e6 =
+    * sign(num)·floor(1e6·|num|/den) over exact 128-bit cross-products
+    * (exactness contract: [[ExactRatio]]). Scale: the tf aggregate is the only
     * O(data) stage; top-500 plans as a bounded TakeOrdered heap and the
     * rank window runs on 500 rows (bounded by construction, never a
     * global sort of the vocabulary).
@@ -761,22 +760,11 @@ object Curation {
        |    CAST(floor(ln(CAST(r AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS x,
        |    CAST(floor(ln(CAST(tf AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS y
        |  FROM rk),
-       |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-       |    sum(CAST(x * y AS HUGEINT)) AS sxy,
-       |    sum(CAST(x * x AS HUGEINT)) AS sxx FROM sn)
-       |SELECT n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "num")} AS num_m9,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "den")} AS den_m9,
-       |  CAST(${graft.functions.ExactRatio.signInt("num")} * sl_e6 AS BIGINT) AS slope_e6
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT n,
-          |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS num,
-          |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS den,
-          |  abs(CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS HUGEINT)) AS sl_a
-          |FROM m WHERE n >= 2 AND CAST(n AS HUGEINT) * sxx - sx * sx > 0""".stripMargin,
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "sl_a", "den", "sl_e6"))} q""".stripMargin) { (s, d) =>
+       |m AS (SELECT CAST(count(*) AS BIGINT) AS n, ${duckCols(Slope.sums(DuckF, "x", "y"))} FROM sn)
+       |SELECT n, ${duckCols(Slope.presentation(DuckF, "slope_e6"))}
+       |FROM ${ExactRatio.applyDuck(s"SELECT n, ${duckCols(Slope(DuckF).columns)}" +
+          s" FROM m WHERE ${Slope(DuckF).nonDegenerate}",
+          Slope.stages(DuckF))} q""".stripMargin) { (s, d) =>
     val tf = Tables.documents(s, d)
       .select(explode(split(lower(col("text")), " ")).as("tok"))
       .filter(col("tok") =!= "")
@@ -789,25 +777,11 @@ object Curation {
     val sn = rk.select(
       expr("cast(floor(ln(cast(r as double)) * 1000000 + 0.5) as bigint)").as("x"),
       expr("cast(floor(ln(cast(tf as double)) * 1000000 + 0.5) as bigint)").as("y"))
-    val m = sn.agg(count(lit(1)).as("n"),
-      sum(expr("cast(x as decimal(38,0))")).as("sx"),
-      sum(expr("cast(y as decimal(38,0))")).as("sy"),
-      sum(expr("cast(x * y as decimal(38,0))")).as("sxy"),
-      sum(expr("cast(x * x as decimal(38,0))")).as("sxx"))
-    import graft.functions.ExactRatio
-    val base = m.filter(col("n") >= 2 &&
-        expr("cast(n as decimal(38,0)) * sxx - sx * sx > 0"))
-      .select(col("n"),
-        expr("cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))").as("num"),
-        expr("cast(cast(n as decimal(38,0)) * sxx - sx * sx as decimal(38,0))").as("den"),
-        expr(graft.functions.ExactRatio.safeAbs(graft.functions.ExactRatio.SparkF,
-          "cast(cast(n as decimal(38,0)) * sxy - sx * sy as decimal(38,0))")).as("sl_a"))
-    ExactRatio.applySparkDomain(base,
-        ExactRatio.ratE6Stages(ExactRatio.SparkF, "sl_a", "den", "sl_e6"))
-      .select(col("n"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "num")).as("num_m9"),
-        expr(ExactRatio.modDigest(ExactRatio.SparkF, "den")).as("den_m9"),
-        expr(s"cast(${ExactRatio.signInt("num")} * sl_e6 as bigint)").as("slope_e6"))
+    val m = sn.agg(count(lit(1)).as("n"), sparkCols(Slope.sums(SparkF, "x", "y")): _*)
+    val base = m.filter(expr(Slope(SparkF).nonDegenerate))
+      .select(col("n") +: sparkCols(Slope(SparkF).columns): _*)
+    ExactRatio.applySparkDomain(base, Slope.stages(SparkF))
+      .select(col("n") +: sparkCols(Slope.presentation(SparkF, "slope_e6")): _*)
   }
 
   /** Data-quality expectation audit — the rule table a pipeline publishes

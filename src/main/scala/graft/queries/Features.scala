@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.ExactRatio.{DuckF, SparkF, bigSum, e6}
 
 /** Feature-engineering and linkage suite: the per-entity rolling features,
   * embedding-space audits, conditional language-model scores and dirty-
@@ -83,7 +84,7 @@ object Features {
     // ANSI bigint-overflow at any corpus scale
     val dist = el.join(broadcast(cent), Seq("label", "pos"))
       .groupBy("vec_id", "label")
-      .agg(sum(expr("cast((n * ve - s_e6) * (n * ve - s_e6) as decimal(38,0))")).as("d2"))
+      .agg(expr(bigSum(SparkF, "(n * ve - s_e6) * (n * ve - s_e6)")).as("d2"))
     dist.groupBy("label")
       .agg(count(lit(1)).as("n"), sum("d2").as("sd2"))
       .select(col("label"), col("n"),
@@ -386,8 +387,8 @@ object Features {
       .filter(col("nxt").isNotNull)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_held"),
-        sum(expr("cast(vc * (nxt - ts_us) as decimal(38,0))")).as("wsum"),
-        sum(expr("cast(nxt - ts_us as decimal(38,0))")).as("tsum"))
+        expr(bigSum(SparkF, "vc * (nxt - ts_us)")).as("wsum"),
+        expr(bigSum(SparkF, "nxt - ts_us")).as("tsum"))
       .select(col("user_id"), col("n_held"),
         expr("cast(cast(wsum as double) / cast(tsum as double) / 100 as double)").as("twa"))
       .orderBy("user_id")
@@ -497,7 +498,7 @@ object Features {
       .groupBy("nat")
       .agg(count(lit(1)).as("n"),
         sum(expr("cast(i as decimal(19,0)) * cast(x as decimal(19,0))")).as("six"),
-        sum(expr("cast(x as decimal(38,0))")).as("sx"))
+        expr(bigSum(SparkF, "x")).as("sx"))
       .select(col("nat"), col("n"),
         expr("""(cast(2 as double) * cast(six as double)
                 - (cast(n as double) + cast(1 as double)) * cast(sx as double))
@@ -953,8 +954,7 @@ object Features {
        |  FROM w)
        |SELECT cls, CAST(count(*) AS BIGINT) AS n_parts,
        |  CAST(sum(r) AS BIGINT) AS revenue_cents,
-       |  CAST((CAST('1000000' AS HUGEINT) * CAST(sum(r) AS HUGEINT))
-       |    // CAST(max(t) AS HUGEINT) AS BIGINT) AS share_e6
+       |  ${e6(DuckF, DuckF.bigCast("sum(r)"), DuckF.bigCast("max(t)"))} AS share_e6
        |FROM c GROUP BY cls ORDER BY cls""".stripMargin) { (s, d) =>
     val pr = Tables.lineitem(s, d)
       .groupBy(col("l_partkey").as("pk"))
@@ -969,8 +969,7 @@ object Features {
       .groupBy("cls")
       .agg(count(lit(1)).as("n_parts"),
         sum("r").cast("bigint").as("revenue_cents"),
-        expr("cast((cast('1000000' as decimal(38,0)) * sum(r))" +
-          s" div $t as bigint)").as("share_e6"))
+        expr(e6(SparkF, "sum(r)", t)).as("share_e6"))
       .orderBy("cls")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.functions.ExactRatio
 import graft.multimodal.Multimodal
 
 /** SURVEY.md §2.13 (north-star `[N]`) — the large-scale training-data
@@ -642,16 +643,15 @@ object LlmOps {
     // sample; this one never leaves the cluster). Everything runs in
     // exact ×10⁶-quantized integer space so all three rounds are
     // bit-identical cross-engine: distances are BIGINT sums of squared
-    // integer gaps, assignment is min(struct(d2, c)) — a COMBINABLE
-    // argmin aggregate, no per-vector window — with the (distance, id)
-    // tie-break explicit, and centroid updates are truncating integer
-    // means (`div`/`//` both truncate toward zero). Seeds = the 4
-    // lowest-vec_id vectors (TakeOrdered, deterministic). Per round: one
-    // broadcast of the k×d centroid table + one shuffle of |V|·k skinny
-    // distance rows + one co-keyed join back — O(rounds) stages, no
-    // driver-side data. Output: per-cluster size, exact-decimal inertia
-    // (to the round-2 centroids vectors were assigned against), and the
-    // round-3 centroid component checksum.
+    // integer gaps, assignment is the lexicographic min of struct(d2, c)
+    // — the (distance, id) tie-break explicit — and centroid updates are
+    // truncating integer means (`div`/`//` both truncate toward zero).
+    // Seeds = the 4 lowest-vec_id vectors (TakeOrdered, deterministic).
+    // Per round: a map-side argmin against the inlined centroid literals
+    // + one (c, pos) mean exchange — O(rounds) stages. Output:
+    // per-cluster size, exact-decimal inertia (to the round-2 centroids
+    // vectors were assigned against), and the round-3 centroid component
+    // checksum.
     Q("kmeans_iter", kmeansOracle) { (s, d) =>
       import s.implicits._
       val v = graft.Caching.ensureCached(Tables.embeddings(s, d)
@@ -680,10 +680,13 @@ object LlmOps {
       // vector. The assignment carries qv forward, so the update
       // aggregates straight off it instead of re-joining v. Per round:
       // 3 exchanges + broadcast build -> 1 exchange ((c, pos) mean).
-      // Jobs (tools/actioncount, local[32]/sf0.1): build 17 -> 4,
-      // run 5 -> 3; isolated timekey 2.55 -> 1.36 s (MlSpec re-derives
-      // the fit bit-exactly; oracle hash green at 3 SFs).
+      // Jobs (JobsSpec's audited baseline): build 17 -> 8, run unchanged
+      // at 5 (MlSpec re-derives the fit bit-exactly).
       def assignAgainst(c: Seq[(Long, Seq[Long])]) = {
+        // an empty centroid list would render as array_min(array()) —
+        // invalid SQL — so an empty corpus fails here, by name
+        require(c.nonEmpty,
+          "kmeans_iter: no centroids to assign against (embeddings has no rows)")
         val structs = c.map { case (ci, cv) =>
           val arr = cv.mkString("array(", "L,", "L)")
           s"struct(aggregate(zip_with(qv, $arr, (a, b) -> (a - b) * (a - b)), " +
@@ -718,7 +721,7 @@ object LlmOps {
       val cks = cent.map { case (c, cv) => (c, cv.sum) }.toDF("c", "cent_sum")
       asgn.groupBy("c")
         .agg(count(lit(1)).as("n"),
-          expr("cast(sum(cast(d2 as decimal(38,0))) as double) / 1e12").as("inertia"))
+          expr(s"cast(${ExactRatio.bigSum(ExactRatio.SparkF, "d2")} as double) / 1e12").as("inertia"))
         .join(broadcast(cks), "c")
         .select(col("c"), col("n"), col("inertia"), col("cent_sum"))
         .orderBy("c")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.ExactRatio.{DuckF, SparkF, bigSum, e6}
 import Sqlh.{dsum, dsumSpark, revenue}
 
 /** Round-9 pipeline-analytics suite (SURVEY.md §2.13): the remaining
@@ -132,8 +133,8 @@ object Pipeline {
     * the shared banded/df-capped kernel (never all-pairs, kernel cached
     * once per session); membership is a distinct over pair endpoints
     * (≤ 2·|pairs| rows) left-joined to the doc dimension, then one
-    * combinable aggregate per source. Integer-only hash surface (r15
-    * rule): counts + floor-divided rate.
+    * combinable aggregate per source. Integer-only hash surface: counts
+    * + an [[graft.functions.ExactRatio.e6]] rate.
     */
   private val dedupRateBySource = Q("dedup_rate_by_source",
     s"""WITH ${LlmOps.jaccardCte},
@@ -142,8 +143,7 @@ object Pipeline {
        |  UNION ALL SELECT db AS doc_id FROM jpairs) u)
        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
        |  CAST(sum(CASE WHEN dup.doc_id IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_dup,
-       |  CAST((CAST('1000000' AS HUGEINT) * sum(CASE WHEN dup.doc_id IS NULL THEN 0 ELSE 1 END))
-       |    // count(*) AS BIGINT) AS rate_e6
+       |  ${e6(DuckF, "sum(CASE WHEN dup.doc_id IS NULL THEN 0 ELSE 1 END)", "count(*)")} AS rate_e6
        |FROM documents d LEFT JOIN dup ON dup.doc_id = d.doc_id
        |GROUP BY d.source ORDER BY d.source""".stripMargin) { (s, d) =>
     val pairs = LlmOps.jaccardPairs(s, d)
@@ -157,7 +157,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"),
         sum(coalesce(col("isdup"), lit(0L))).as("n_dup"))
       .select(col("source"), col("n_docs"), col("n_dup"),
-        expr("cast((cast('1000000' as decimal(38,0)) * n_dup) div n_docs as bigint)").as("rate_e6"))
+        expr(e6(SparkF, "n_dup", "n_docs")).as("rate_e6"))
       .orderBy("source")
   }
 
@@ -421,7 +421,7 @@ object Pipeline {
        |    n_users + ${caseOf(g => s"b$g")} AS n_sessions
        |  FROM sp, m)
        |SELECT gap_s, n_sessions, n_events,
-       |  CAST((CAST('1000000' AS HUGEINT) * n_events) // n_sessions AS BIGINT) AS eps_e6
+       |  ${e6(DuckF, "n_events", "n_sessions")} AS eps_e6
        |FROM sw ORDER BY gap_s""".stripMargin
   }) { (s, d) =>
     val gaps = Seq(60L, 300L, 900L, 1800L, 3600L)
@@ -440,7 +440,7 @@ object Pipeline {
       .select(col("gap_s"),
         expr(s"n_users + $caseSql").as("n_sessions"), col("n_events"))
       .withColumn("eps_e6",
-        expr("cast((cast('1000000' as decimal(38,0)) * n_events) div n_sessions as bigint)"))
+        expr(e6(SparkF, "n_events", "n_sessions")))
       .orderBy("gap_s")
   }
 
@@ -544,11 +544,11 @@ object Pipeline {
         expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("pi"))
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"),
-        sum(expr("cast(qi as decimal(38,0))")).as("sx"),
-        sum(expr("cast(pi as decimal(38,0))")).as("sy"),
-        sum(expr("cast(qi * qi as decimal(38,0))")).as("sxx"),
-        sum(expr("cast(pi * pi as decimal(38,0))")).as("syy"),
-        sum(expr("cast(qi * pi as decimal(38,0))")).as("sxy"))
+        expr(bigSum(SparkF, "qi")).as("sx"),
+        expr(bigSum(SparkF, "pi")).as("sy"),
+        expr(bigSum(SparkF, "qi * qi")).as("sxx"),
+        expr(bigSum(SparkF, "pi * pi")).as("syy"),
+        expr(bigSum(SparkF, "qi * pi")).as("sxy"))
     m.select(col("l_returnflag"), col("n"),
         expr(
           """(cast(n as double) * cast(sxy as double) - cast(sx as double) * cast(sy as double))

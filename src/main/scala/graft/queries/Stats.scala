@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import graft.functions.ExactRatio
+import graft.functions.ExactRatio.{DuckF, Pearson, SparkF, duckCols, e6, sparkCols}
 
 /** Round-9 statistics / distribution-diagnostics suite: the dataset-level
   * summaries a training-data pipeline computes to audit a corpus before
@@ -66,7 +68,7 @@ object Stats {
       .agg(count(lit(1)).as("n"),
         expr("cast(min(vi) as double) / 100").as("lo"),
         expr("cast(max(vi) as double) / 100").as("hi"),
-        expr("cast(sum(cast(vi as decimal(38,0))) as double) / 100").as("sum_v"))
+        expr(s"cast(${ExactRatio.bigSum(SparkF, "vi")} as double) / 100").as("sum_v"))
       .orderBy("bin")
   }
 
@@ -1053,9 +1055,8 @@ object Stats {
        |    JOIN ct x ON x.nat = c.nat CROSS JOIN tot t),
        |chi AS (SELECT CAST(sum($si) AS BIGINT) AS chi2_9 FROM j)
        |SELECT t.nv AS n, t.nseg AS n_seg, t.nnat AS n_nat, chi.chi2_9,
-       |  CAST((CAST('1000000' AS HUGEINT) * chi.chi2_9)
-       |    // (CAST('1000000000' AS HUGEINT) * t.nv
-       |      * greatest(least(t.nseg, t.nnat) - 1, 1)) AS BIGINT) AS v2_e6
+       |  ${e6(DuckF, "chi.chi2_9",
+            s"${DuckF.bigCast("'1000000000'")} * t.nv * greatest(least(t.nseg, t.nnat) - 1, 1)")} AS v2_e6
        |FROM chi CROSS JOIN tot t""".stripMargin
   }) { (s, d) =>
     val e = "CAST(rtv AS DOUBLE) * ctv / nv"
@@ -1072,9 +1073,9 @@ object Stats {
         countDistinct("seg").as("n_seg"), countDistinct("nat").as("n_nat"),
         sum(expr(si)).as("chi2_9"))
       .select(col("n"), col("n_seg"), col("n_nat"), col("chi2_9"),
-        expr("cast((cast('1000000' as decimal(38,0)) * chi2_9)" +
-          " div (cast('1000000000' as decimal(38,0)) * n" +
-          " * greatest(least(n_seg, n_nat) - 1, 1)) as bigint)").as("v2_e6"))
+        expr(e6(SparkF, "chi2_9",
+          s"${SparkF.bigCast("'1000000000'")} * n * greatest(least(n_seg, n_nat) - 1, 1)"))
+          .as("v2_e6"))
   }
 
   /** Two-sample Kolmogorov–Smirnov statistic between the event stream's
@@ -1111,8 +1112,7 @@ object Stats {
        |    CAST(max(abs(f1 * n2 - f2 * n1)) AS BIGINT) AS d_num
        |  FROM c JOIN t ON t.event_type = c.event_type GROUP BY c.event_type)
        |SELECT d.event_type, t.n1, t.n2, d_num,
-       |  CAST((CAST('1000000' AS HUGEINT) * d_num)
-       |    // (CAST(n1 AS HUGEINT) * n2) AS BIGINT) AS d_e6
+       |  ${e6(DuckF, "d_num", s"${DuckF.bigCast("n1")} * n2")} AS d_e6
        |FROM d JOIN t ON t.event_type = d.event_type
        |ORDER BY d.event_type""".stripMargin) { (s, d) =>
     val b = Tables.events(s, d).select(col("event_type"),
@@ -1138,26 +1138,17 @@ object Stats {
       .agg(max(expr("abs(f1 * n2 - f2 * n1)")).as("d_num"),
         max("n1").as("n1"), max("n2").as("n2"))
       .select(col("event_type"), col("n1"), col("n2"), col("d_num"),
-        expr("cast((cast('1000000' as decimal(38,0)) * d_num)" +
-          " div (cast(n1 as decimal(38,0)) * n2) as bigint)").as("d_e6"))
+        expr(e6(SparkF, "d_num", s"${SparkF.bigCast("n1")} * n2")).as("d_e6"))
       .orderBy("event_type")
   }
 
   /** One-pass Pearson correlation matrix over lineitem's four numeric
     * measures — the profiling step before feature selection ("are price
-    * and quantity collinear?"). Every moment is an EXACT integer sum:
-    * measures snap to integers first (quantity, cents, percent points),
-    * per-row products stay in int64 (≤ ~10¹⁴), and the sums are
-    * DECIMAL(38,0) on the Spark side / native 128-bit on the oracle —
-    * so n·Sxy − Sx·Sy is exact on both engines and `cov_n2` (= n² ×
-    * covariance) is engine-exact; it ships as cov_m9 = abs mod 1e9+7
-    * (a bounded int64 witness — the driver's hash mangles any decimal128
-    * column, r15 forensics). The normalized
-    * correlation ships as r2_e6 + r_sign — ExactRatio's shift-guarded
-    * integer rational; no double is hashed (the r14 driver forensics:
-    * a round(,6) ratio over sqrt terms flipped per oracle build).
-    * Degenerate pairs are excluded by exact integer comparison on both
-    * engines. Scale: ONE combinable aggregate over the
+    * and quantity collinear?"). Measures snap to integers first
+    * (quantity, cents, percent points; per-row products ≤ ~10¹⁴ in
+    * int64); moments, cov_m9 and r2_e6 + r_sign are ExactRatio's Pearson
+    * tail on both engines (exactness contract: [[ExactRatio]]). Scale:
+    * ONE combinable aggregate over the
     * fact table to a single 15-number row; the 6-row pair matrix is a
     * driver-free explode of that row. k columns → k(k−1)/2 output
     * rows, one pass, no shuffle beyond the final 1-row exchange.
@@ -1174,20 +1165,16 @@ object Stats {
       yield s"sum(x$i * x$j) AS q$i$j").mkString(", ")
     val branches = (for (i <- 1 to 4; j <- (i + 1) to 4) yield
       s"""SELECT '${names(i - 1)}' AS col_x, '${names(j - 1)}' AS col_y, n,
-         |  CAST(CAST(n AS HUGEINT) * q$i$j - s$i * s$j AS DECIMAL(38,0)) AS cov_n2,
-         |  CAST(CAST(n AS HUGEINT) * q$i$i - s$i * s$i AS DECIMAL(38,0)) AS vxx,
-         |  CAST(CAST(n AS HUGEINT) * q$j$j - s$j * s$j AS DECIMAL(38,0)) AS vyy
+         |  ${duckCols(Pearson(DuckF, "n", s"s$i", s"s$j",
+              s"q$i$j", s"q$i$i", s"q$j$j").columns)}
          |  FROM m""".stripMargin).mkString("\nUNION ALL ")
-    import graft.functions.ExactRatio
     val inner = s"SELECT * FROM ($branches) u WHERE vxx > 0 AND vyy > 0"
-    val laddered = ExactRatio.applyDuck(inner,
-      ExactRatio.r2e6Stages(ExactRatio.DuckF, "cov_n2", "vxx", "vyy", "r2_e6"))
+    val laddered = ExactRatio.applyDuck(inner, Pearson.stages(DuckF, "r2_e6"))
     s"""WITH b AS (SELECT ${cols.zipWithIndex.map { case (c, i) => s"$c AS x${i + 1}" }.mkString(", ")}
        |  FROM lineitem),
        |m AS (SELECT CAST(count(*) AS BIGINT) AS n, $sums, $prods FROM b)
-       |SELECT col_x, col_y, n,
-       |  ${ExactRatio.modDigest(ExactRatio.DuckF, "cov_n2")} AS cov_m9,
-       |  r2_e6, ${ExactRatio.signInt("cov_n2")} AS r_sign
+       |SELECT col_x, col_y, n, ${Pearson.digest(DuckF)} AS cov_m9,
+       |  r2_e6, ${Pearson.sign} AS r_sign
        |FROM $laddered q ORDER BY col_x, col_y""".stripMargin
   }) { (s, d) =>
     // snap to integer units (quantity, cents, percent points) then hand
@@ -1208,12 +1195,9 @@ object Stats {
     * between them is the classic nonlinearity probe). Ranks are DOUBLED
     * average ranks so ties stay in integer arithmetic: for a row with
     * value v, 2·avgrank = rank(v) + cumcount(≤ v) exactly (min position
-    * plus max position of the tie run), so rx/ry are BIGINTs and the
-    * Pearson-over-ranks moments reuse the CorrMatrix exactness contract —
-    * DECIMAL(38,0) product chains and sums, the covariance witnessed as
-    * cov_m9 (abs mod 1e9+7 — no decimal128 on the hash surface), and the
-    * normalized rho shipped as rho2_e6 + rho_sign (ExactRatio's exact
-    * integer rational — no hashed double). Scale: rows collapse FIRST to
+    * plus max position of the tie run), so rx/ry are BIGINTs and
+    * cov_m9 / rho2_e6 / rho_sign are ExactRatio's Pearson tail over the
+    * ranks (exactness contract: [[ExactRatio]]). Scale: rows collapse FIRST to
     * the (flag, x, y) joint DOMAIN through one combinable aggregate (the
     * only O(data) stage — at 100 TB the cents domain is bounded, so the
     * domain table stops growing with the corpus); both doubled ranks are
@@ -1240,25 +1224,14 @@ object Stats {
        |      + count(*) OVER (PARTITION BY flag ORDER BY y
        |          RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ry
        |  FROM b),
-       |m AS (SELECT flag, CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(rx AS HUGEINT)) AS sx, sum(CAST(ry AS HUGEINT)) AS sy,
-       |    sum(CAST(rx * ry AS HUGEINT)) AS sxy,
-       |    sum(CAST(rx * rx AS HUGEINT)) AS sxx,
-       |    sum(CAST(ry * ry AS HUGEINT)) AS syy
+       |m AS (SELECT flag, CAST(count(*) AS BIGINT) AS n, ${duckCols(Pearson.sums(DuckF, "rx", "ry"))}
        |  FROM r GROUP BY flag)
-       |SELECT flag, n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "cov_n2")} AS cov_m9,
-       |  rho2_e6, ${graft.functions.ExactRatio.signInt("cov_n2")} AS rho_sign
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT flag, n,
-          |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS cov_n2,
-          |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS vxx,
-          |  CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DECIMAL(38,0)) AS vyy
-          |FROM m
-          |WHERE CAST(n AS HUGEINT) * sxx - sx * sx > 0
-          |  AND CAST(n AS HUGEINT) * syy - sy * sy > 0""".stripMargin,
-        graft.functions.ExactRatio.r2e6Stages(
-          graft.functions.ExactRatio.DuckF, "cov_n2", "vxx", "vyy", "rho2_e6"))} q
+       |SELECT flag, n, ${Pearson.digest(DuckF)} AS cov_m9,
+       |  rho2_e6, ${Pearson.sign} AS rho_sign
+       |FROM ${ExactRatio.applyDuck(
+          s"SELECT flag, n, ${duckCols(Pearson(DuckF).columns)}" +
+            s" FROM m WHERE ${Pearson(DuckF).nonDegenerate}",
+          Pearson.stages(DuckF, "rho2_e6"))} q
        |ORDER BY flag""".stripMargin) { (s, d) =>
     val b = Tables.lineitem(s, d).select(col("l_returnflag").as("flag"),
       expr("cast(l_quantity as bigint)").as("x"),
@@ -1320,22 +1293,12 @@ object Stats {
           guarded("syy", "r2y", "r2y")): _*)
       .select(col("flag"), col("n"), merged("sx"), merged("sy"),
         merged("sxy"), merged("sxx"), merged("syy"))
-    def term(q: String, a: String, b2: String) =
-      s"cast(n as decimal(38,0)) * $q - $a * $b2"
-    // a zero variance term means every value in the group is identical —
-    // rho is undefined there, and inf/NaN renderings are not hash-stable
-    // cross-engine, so degenerate groups are excluded on BOTH sides
-    val filtered = m.filter(expr(s"${term("sxx", "sx", "sx")} > 0") &&
-        expr(s"${term("syy", "sy", "sy")} > 0"))
-      .select(col("flag"), col("n"),
-        expr(s"cast(${term("sxy", "sx", "sy")} as decimal(38,0))").as("cov_n2"),
-        expr(s"cast(${term("sxx", "sx", "sx")} as decimal(38,0))").as("vxx"),
-        expr(s"cast(${term("syy", "sy", "sy")} as decimal(38,0))").as("vyy"))
-    import graft.functions.ExactRatio
-    ExactRatio.applySparkDomain(filtered,
-        ExactRatio.r2e6Stages(ExactRatio.SparkF, "cov_n2", "vxx", "vyy", "rho2_e6"))
-      .withColumn("rho_sign", expr(ExactRatio.signInt("cov_n2")))
-      .withColumn("cov_m9", expr(ExactRatio.modDigest(ExactRatio.SparkF, "cov_n2")))
+    // a constant group has no defined rho — excluded on BOTH engines
+    val filtered = m.filter(expr(Pearson(SparkF).nonDegenerate))
+      .select(col("flag") +: col("n") +: sparkCols(Pearson(SparkF).columns): _*)
+    ExactRatio.applySparkDomain(filtered, Pearson.stages(SparkF, "rho2_e6"))
+      .withColumn("rho_sign", expr(Pearson.sign))
+      .withColumn("cov_m9", expr(Pearson.digest(SparkF)))
       .select("flag", "n", "cov_m9", "rho2_e6", "rho_sign")
       .orderBy("flag")
   }
@@ -1344,11 +1307,9 @@ object Stats {
     * seasonality/trend screen a pipeline runs before picking a drift
     * detector (high AC1 → day-over-day momentum, PSI windows must span
     * it). Pairs are ADJACENT observed days (day, day+1 both present);
-    * counts are integers, so the Pearson moments over (c_t, c_{t−1})
-    * reuse the exact-integer discipline: products in int64, DECIMAL(38,0)
-    * sums, the covariance witnessed as cov_m9 (abs mod 1e9+7 — no
-    * decimal128 on the hash surface), and the normalized AC1 shipped as
-    * ac12_e6 + ac1_sign (ExactRatio). Scale: the daily table
+    * counts are integers, so cov_m9 / ac12_e6 / ac1_sign are ExactRatio's
+    * Pearson tail over (c_t, c_{t−1}) (exactness contract:
+    * [[ExactRatio]]). Scale: the daily table
     * is |types|×|days| rows (tiny at any SF) — the heavy lifting is the
     * ONE map-combinable count aggregate over events; the lag window and
     * moment aggregate run on the reduced domain.
@@ -1362,25 +1323,14 @@ object Stats {
        |    lag(day) OVER (PARTITION BY event_type ORDER BY day) AS pday,
        |    lag(c) OVER (PARTITION BY event_type ORDER BY day) AS pc
        |  FROM daily),
-       |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(c AS HUGEINT)) AS sx, sum(CAST(pc AS HUGEINT)) AS sy,
-       |    sum(CAST(c * pc AS HUGEINT)) AS sxy,
-       |    sum(CAST(c * c AS HUGEINT)) AS sxx,
-       |    sum(CAST(pc * pc AS HUGEINT)) AS syy
+       |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, ${duckCols(Pearson.sums(DuckF, "c", "pc"))}
        |  FROM p WHERE pday = day - 1 GROUP BY event_type)
-       |SELECT event_type, n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "cov_n2")} AS cov_m9,
-       |  ac12_e6, ${graft.functions.ExactRatio.signInt("cov_n2")} AS ac1_sign
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT event_type, n,
-          |  CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DECIMAL(38,0)) AS cov_n2,
-          |  CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DECIMAL(38,0)) AS vxx,
-          |  CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DECIMAL(38,0)) AS vyy
-          |FROM m
-          |WHERE n >= 2 AND CAST(n AS HUGEINT) * sxx - sx * sx > 0
-          |  AND CAST(n AS HUGEINT) * syy - sy * sy > 0""".stripMargin,
-        graft.functions.ExactRatio.r2e6Stages(
-          graft.functions.ExactRatio.DuckF, "cov_n2", "vxx", "vyy", "ac12_e6"))} q
+       |SELECT event_type, n, ${Pearson.digest(DuckF)} AS cov_m9,
+       |  ac12_e6, ${Pearson.sign} AS ac1_sign
+       |FROM ${ExactRatio.applyDuck(
+          s"SELECT event_type, n, ${duckCols(Pearson(DuckF).columns)}" +
+            s" FROM m WHERE n >= 2 AND ${Pearson(DuckF).nonDegenerate}",
+          Pearson.stages(DuckF, "ac12_e6"))} q
        |ORDER BY event_type""".stripMargin) { (s, d) =>
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), expr("cast(ts_us div 86400000000 as bigint)").as("day"))
@@ -1391,27 +1341,13 @@ object Stats {
       .withColumn("pc", lag("c", 1).over(w))
       .filter(col("pday") === col("day") - 1)
     val m = p.groupBy("event_type").agg(count(lit(1)).as("n"),
-      sum(expr("cast(c as decimal(38,0))")).as("sx"),
-      sum(expr("cast(pc as decimal(38,0))")).as("sy"),
-      sum(expr("cast(c * pc as decimal(38,0))")).as("sxy"),
-      sum(expr("cast(c * c as decimal(38,0))")).as("sxx"),
-      sum(expr("cast(pc * pc as decimal(38,0))")).as("syy"))
-    def term(q: String, a: String, b2: String) =
-      s"cast(n as decimal(38,0)) * $q - $a * $b2"
-    // same degenerate-variance exclusion as stats_spearman: a type whose
-    // daily counts never vary has no defined AC1 on either engine
-    val filtered = m.filter(col("n") >= 2 &&
-        expr(s"${term("sxx", "sx", "sx")} > 0") &&
-        expr(s"${term("syy", "sy", "sy")} > 0"))
-      .select(col("event_type"), col("n"),
-        expr(s"cast(${term("sxy", "sx", "sy")} as decimal(38,0))").as("cov_n2"),
-        expr(s"cast(${term("sxx", "sx", "sx")} as decimal(38,0))").as("vxx"),
-        expr(s"cast(${term("syy", "sy", "sy")} as decimal(38,0))").as("vyy"))
-    import graft.functions.ExactRatio
-    ExactRatio.applySparkDomain(filtered,
-        ExactRatio.r2e6Stages(ExactRatio.SparkF, "cov_n2", "vxx", "vyy", "ac12_e6"))
-      .withColumn("ac1_sign", expr(ExactRatio.signInt("cov_n2")))
-      .withColumn("cov_m9", expr(ExactRatio.modDigest(ExactRatio.SparkF, "cov_n2")))
+      sparkCols(Pearson.sums(SparkF, "c", "pc")): _*)
+    // a type whose daily counts never vary has no defined AC1
+    val filtered = m.filter(expr(s"n >= 2 AND ${Pearson(SparkF).nonDegenerate}"))
+      .select(col("event_type") +: col("n") +: sparkCols(Pearson(SparkF).columns): _*)
+    ExactRatio.applySparkDomain(filtered, Pearson.stages(SparkF, "ac12_e6"))
+      .withColumn("ac1_sign", expr(Pearson.sign))
+      .withColumn("cov_m9", expr(Pearson.digest(SparkF)))
       .select("event_type", "n", "cov_m9", "ac12_e6", "ac1_sign")
       .orderBy("event_type")
   }
@@ -1447,8 +1383,7 @@ object Stats {
        |    CAST(sum(c1 * (2 * cum2 + c2)) AS BIGINT) AS u2
        |  FROM c GROUP BY event_type HAVING max(n1) > 0 AND max(n2) > 0)
        |SELECT event_type, n1, n2, u2,
-       |  CAST((CAST('1000000' AS HUGEINT) * u2)
-       |    // (CAST(2 AS HUGEINT) * n1 * n2) AS BIGINT) AS auc_e6
+       |  ${e6(DuckF, "u2", s"${DuckF.bigCast("2")} * n1 * n2")} AS auc_e6
        |FROM u ORDER BY event_type""".stripMargin) { (s, d) =>
     val b = Tables.events(s, d).select(col("event_type"),
       expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"),
@@ -1473,117 +1408,107 @@ object Stats {
         sum(expr("c1 * (2 * cum2 + c2)")).as("u2"))
       .filter(col("n1") > 0 && col("n2") > 0)
       .select(col("event_type"), col("n1"), col("n2"), col("u2"),
-        expr("cast((cast('1000000' as decimal(38,0)) * u2)" +
-          " div (cast(2 as decimal(38,0)) * n1 * n2) as bigint)").as("auc_e6"))
+        expr(e6(SparkF, "u2", s"${SparkF.bigCast("2")} * n1 * n2")).as("auc_e6"))
       .orderBy("event_type")
   }
 
   /** One-way ANOVA F of event value (cents) across event types — the
     * mean-shift screen that completes the drift suite (KS: shape, U:
     * dominance, AC1: momentum, this: do the GROUP MEANS differ more than
-    * within-group noise explains?). Exactness: group moments (n, Σvc,
-    * Σvc²) are exact integer sums; the total scatter ×N
-    * (sst_n = N·Σvc² − S², DECIMAL(38,0) internally, witnessed on the
-    * hash surface as sst_m9 = mod 1e9+7) is engine-exact; SSB is an exact
-    * BIGINT because each group's term n_g(m_g−m)² =
-    * (s_g·N − S·n_g)²/(n_g·N²) is computed from exact ≤10³³ integers
-    * with ONE double division and floor(x+0.5)-snapped — both engines
-    * do the identical IEEE operation, and the integer SUM of snapped
-    * terms is order-free (the stats_cramers_v discipline; never sum raw
-    * doubles across groups). f_e6/eta2_e6 are ExactRatio integer
-    * rationals over the exact SS terms — no hashed double. Degenerate
-    * guards are exact-integer: SST>0 via sst_n, SSW>0 via
-    * max_g(n_g·ss_g − s_g²)>0 — no double comparison decides inclusion.
-    * Scale: ONE combinable aggregate over events (the only O(data)
-    * stage); everything after runs on the |types|-row table. Int64: vc²
-    * ≤ 10¹⁰ per row keeps per-row products exact; the DECIMAL(38,0)
-    * sums carry to ~10³⁸ total cents² — beyond any corpus.
+    * within-group noise explains?). Group moments (n, Σvc, Σvc²) are
+    * exact integer sums; the F machinery from there on is the shared
+    * one-way ANOVA tail ([[anovaSpark]] / [[anovaDuck]]). Scale: ONE
+    * combinable aggregate over events (the only O(data) stage);
+    * everything after runs on the |types|-row table. Int64: vc² ≤ 10¹⁰
+    * per row keeps per-row products exact.
     */
   private val statsAnova = Q("stats_anova",
-    s"""WITH b AS (SELECT event_type AS g,
+    anovaDuck(s"""WITH b AS (SELECT event_type AS g,
        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
        |gm AS (SELECT g, CAST(count(*) AS BIGINT) AS ng,
-       |    sum(CAST(vc AS HUGEINT)) AS sg,
-       |    sum(CAST(vc * vc AS HUGEINT)) AS ssg FROM b GROUP BY g),
-       |t AS (SELECT CAST(count(*) AS BIGINT) AS k,
-       |    CAST(sum(ng) AS HUGEINT) AS n, sum(sg) AS s, sum(ssg) AS ss,
-       |    max(CAST(ng AS HUGEINT) * ssg - sg * sg) AS maxa FROM gm),
-       |e AS (SELECT t.k, t.n, t.maxa,
-       |    CAST(t.n * t.ss - t.s * t.s AS DECIMAL(38,0)) AS sst_n,
-       |    CAST(sum(CAST(floor(
-       |      CAST((gm.sg * t.n - t.s * gm.ng) * (gm.sg * t.n - t.s * gm.ng) AS DOUBLE)
-       |        / (CAST(gm.ng AS DOUBLE) * CAST(t.n AS DOUBLE) * CAST(t.n AS DOUBLE))
-       |      + 0.5) AS BIGINT)) AS BIGINT) AS ssb_c2
-       |  FROM gm CROSS JOIN t GROUP BY t.k, t.n, t.maxa, t.s, t.ss)
-       |SELECT k, n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "sst_n")} AS sst_m9,
-       |  ssb_c2, f_e6, eta2_e6
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT CAST(e.k AS BIGINT) AS k, CAST(e.n AS BIGINT) AS n, sst_n, ssb_c2,
-          |  CAST(ssb_c2 AS HUGEINT) * (e.n - e.k) * e.n AS fa,
-          |  greatest(CAST(sst_n AS HUGEINT) - e.n * ssb_c2, 1) * (e.k - 1) AS fb,
-          |  CAST(ssb_c2 AS HUGEINT) * e.n AS ea,
-          |  CAST(sst_n AS HUGEINT) AS eb
-          |FROM e
-          |WHERE e.k >= 2 AND CAST(e.n AS BIGINT) > e.k AND sst_n > 0 AND maxa > 0""".stripMargin,
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "fa", "fb", "f_e6") ++
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "ea", "eb", "eta2_e6"))} q""".stripMargin) { (s, d) =>
+       |    ${ExactRatio.bigSum(DuckF, "vc")} AS sg,
+       |    ${ExactRatio.bigSum(DuckF, "vc * vc")} AS ssg FROM b GROUP BY g)""".stripMargin)) { (s, d) =>
     val b = Tables.events(s, d).select(col("event_type").as("g"),
       expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
-    val gm = b.groupBy("g").agg(count(lit(1)).as("ng"),
-      sum(expr("cast(vc as decimal(38,0))")).as("sg"),
-      sum(expr("cast(vc * vc as decimal(38,0))")).as("ssg"))
-    // totals as windows over the |types|-row table (one tiny exchange),
-    // never a re-aggregating join back to a second events scan
+    anovaSpark(b.groupBy("g").agg(count(lit(1)).as("ng"),
+      expr(ExactRatio.bigSum(SparkF, "vc")).as("sg"),
+      expr(ExactRatio.bigSum(SparkF, "vc * vc")).as("ssg")))
+  }
+
+  /** The one-way ANOVA tail shared by [[statsAnova]] and [[statsLevene]],
+    * from per-group moments (g, ng, sg, ssg) to the output row
+    * (k, n, sst_m9, ssb_c2, f_e6, eta2_e6). The total scatter ×N
+    * (sst_n = N·Σv² − S²) is exact and ships as its digest; SSB is an
+    * exact BIGINT because each group's term n_g(m_g−m)² =
+    * (s_g·N − S·n_g)²/(n_g·N²) is computed from exact integers with ONE
+    * double division and floor(x+0.5)-snapped — both engines do the
+    * identical IEEE operation, and the integer SUM of snapped terms is
+    * order-free. f_e6/eta2_e6 are shift-laddered rationals over
+    * DIVISION-FREE 128-bit products, f = ssb·(n−k)·n / (ssw_e·(k−1)) and
+    * η² = ssb·n / sst_n with ssw_e = sst_n − n·ssb (a pre-division stage
+    * would be an unguarded `div`, ExactRatio rule 4). Degenerate guards
+    * are exact: SST > 0 via sst_n, SSW > 0 via max_g(n_g·ss_g − s_g²) > 0.
+    * Scale ceiling (ADVICE r16): fa ≈ ssb·n² reaches 10³⁸ near n ≈ 10⁸
+    * rows with cents² moments; past it the key fails loudly on both
+    * engines rather than wrap.
+    */
+  private[graft] def anovaRatios(f: ExactRatio.Flavor): Seq[(String, String)] = Seq(
+    "fa" -> s"${f.bigCast("ssb_c2")} * (n - k) * n",
+    "fb" -> (s"greatest(${f.bigCast("sst_n")} - ${f.bigCast("n")} * ssb_c2," +
+      s" ${f.bigCast("1")}) * (k - 1)"),
+    "ea" -> s"${f.bigCast("ssb_c2")} * n",
+    "eb" -> f.bigCast("sst_n"))
+
+  private def anovaStages(f: ExactRatio.Flavor) =
+    ExactRatio.ratE6Stages(f, "fa", "fb", "f_e6") ++
+      ExactRatio.ratE6Stages(f, "ea", "eb", "eta2_e6")
+
+  /** Per-group SSB term, snapped to an exact BIGINT (see [[anovaRatios]]). */
+  private def anovaSsbTerm(sg: String, ng: String, n: String, s: String) =
+    s"CAST(floor(CAST(($sg * $n - $s * $ng) * ($sg * $n - $s * $ng) AS DOUBLE)" +
+      s" / (CAST($ng AS DOUBLE) * CAST($n AS DOUBLE) * CAST($n AS DOUBLE)) + 0.5) AS BIGINT)"
+
+  /** Spark ANOVA tail over the per-group moment frame `gm`. */
+  private def anovaSpark(gm: org.apache.spark.sql.DataFrame) = {
+    // totals as windows over the |groups|-row table (one tiny exchange),
+    // never a re-aggregating join back to a second fact scan
     val w = Window.partitionBy(lit(1))
-    val e = gm
-      .withColumn("k", count(lit(1)).over(w))
-      .withColumn("n", sum(expr("cast(ng as decimal(38,0))")).over(w))
+    gm.withColumn("k", count(lit(1)).over(w))
+      .withColumn("n", sum(expr(SparkF.bigCast("ng"))).over(w))
       .withColumn("s", sum("sg").over(w))
       .withColumn("ss", sum("ssg").over(w))
-      .withColumn("maxa", max(expr("cast(ng as decimal(38,0)) * ssg - sg * sg")).over(w))
-    e.groupBy("k", "n", "s", "ss", "maxa")
-      .agg(sum(expr("cast(floor(" +
-        "cast((sg * n - s * ng) * (sg * n - s * ng) as double)" +
-        " / (cast(ng as double) * cast(n as double) * cast(n as double))" +
-        " + 0.5) as bigint)")).as("ssb_c2"))
+      .withColumn("maxa", max(expr(ExactRatio.coMoment(SparkF, "ng", "ssg", "sg", "sg"))).over(w))
+      .groupBy("k", "n", "s", "ss", "maxa")
+      .agg(sum(expr(anovaSsbTerm("sg", "ng", "n", "s"))).as("ssb_c2"))
       .select(expr("cast(k as bigint)").as("k"), expr("cast(n as bigint)").as("n"),
-        expr("cast(n * ss - s * s as decimal(38,0))").as("sst_n"),
+        expr(SparkF.bigCast("n * ss - s * s")).as("sst_n"),
         col("ssb_c2"), col("maxa"))
       .filter(col("k") >= 2 && expr("n > k") && col("sst_n") > 0 && col("maxa") > 0)
-      .select(col("k"), col("n"), col("sst_n"), col("ssb_c2"),
-        // ratio operands are DIVISION-FREE 128-bit products (the old
-        // `sst_n div n` pre-division stage had an unguarded Spark `div`
-        // whose quotient wraps int64 at extreme scale — ADVICE r15):
-        // f = ssb·(n−k)·n / (ssw_e·(k−1)) and η² = ssb·n / sst_n with
-        // ssw_e = sst_n − n·ssb exact; formation overflow past 1e38
-        // fails LOUD on both engines (ANSI decimal / HUGEINT), and the
-        // only divisions left are ratE6Stages' shift-guarded ones.
-        // Scale ceiling (ADVICE r16): fa ≈ ssb·n² grows ~n² faster than
-        // the old pre-divided forms, so with cents² moments the 1e38 cap
-        // is reached near n ≈ 1e8 rows per key — the key then fails
-        // loudly instead of returning a result. Accepted trade (loud
-        // beats the silent int64 div wrap it replaced); a deployment
-        // needing larger n re-introduces a shift-guarded pre-reduction
-        // of sst_n before the multiply.
-        expr("cast(ssb_c2 as decimal(38,0)) * (n - k) * n").as("fa"),
-        expr("greatest(cast(sst_n as decimal(38,0))" +
-          " - cast(n as decimal(38,0)) * ssb_c2," +
-          " cast(1 as decimal(38,0))) * (k - 1)").as("fb"),
-        expr("cast(ssb_c2 as decimal(38,0)) * n").as("ea"),
-        expr("cast(sst_n as decimal(38,0))").as("eb"))
-      .transform { base =>
-        import graft.functions.ExactRatio
-        ExactRatio.applySparkDomain(base,
-          ExactRatio.ratE6Stages(ExactRatio.SparkF, "fa", "fb", "f_e6") ++
-          ExactRatio.ratE6Stages(ExactRatio.SparkF, "ea", "eb", "eta2_e6"))
-      }
-      .withColumn("sst_m9", expr(
-        graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.SparkF, "sst_n")))
+      .select(Seq(col("k"), col("n"), col("sst_n"), col("ssb_c2")) ++
+        sparkCols(anovaRatios(SparkF)): _*)
+      .transform(ExactRatio.applySparkDomain(_, anovaStages(SparkF)))
+      .withColumn("sst_m9", expr(ExactRatio.modDigest(SparkF, "sst_n")))
       .select("k", "n", "sst_m9", "ssb_c2", "f_e6", "eta2_e6")
   }
+
+  /** DuckDB ANOVA tail: `ctes` is a `WITH …` prefix ending in the per-group
+    * moment CTE `gm`. */
+  private def anovaDuck(ctes: String) =
+    s"""$ctes,
+       |t AS (SELECT CAST(count(*) AS BIGINT) AS k,
+       |    CAST(sum(ng) AS HUGEINT) AS n, sum(sg) AS s, sum(ssg) AS ss,
+       |    max(${ExactRatio.coMoment(DuckF, "ng", "ssg", "sg", "sg")}) AS maxa FROM gm),
+       |e AS (SELECT t.k, t.n, t.maxa,
+       |    ${DuckF.bigCast("t.n * t.ss - t.s * t.s")} AS sst_n,
+       |    CAST(sum(${anovaSsbTerm("gm.sg", "gm.ng", "t.n", "t.s")}) AS BIGINT) AS ssb_c2
+       |  FROM gm CROSS JOIN t GROUP BY t.k, t.n, t.maxa, t.s, t.ss)
+       |SELECT k, n, ${ExactRatio.modDigest(DuckF, "sst_n")} AS sst_m9,
+       |  ssb_c2, f_e6, eta2_e6
+       |FROM ${ExactRatio.applyDuck(
+          "SELECT CAST(e.k AS BIGINT) AS k, CAST(e.n AS BIGINT) AS n, sst_n, ssb_c2, " +
+            duckCols(anovaRatios(DuckF)) +
+            " FROM e WHERE e.k >= 2 AND CAST(e.n AS BIGINT) > e.k AND sst_n > 0 AND maxa > 0",
+          anovaStages(DuckF))} q""".stripMargin
 
   /** CUSUM changepoint per event type over the daily count series — the
     * "WHEN did it shift" localization that follows a positive drift test
@@ -1613,8 +1538,7 @@ object Stats {
        |  FROM r WHERE n >= 2)
        |SELECT event_type, max(n) AS n_days, max(t) AS total,
        |  min(day) AS cp_day, max(amax) AS cus_num,
-       |  CAST((CAST('1000000' AS HUGEINT) * max(amax))
-       |    // (CAST(max(n) AS HUGEINT) * max(t)) AS BIGINT) AS frac_e6
+       |  ${e6(DuckF, "max(amax)", s"${DuckF.bigCast("max(n)")} * max(t)")} AS frac_e6
        |FROM cus WHERE a = amax GROUP BY event_type
        |ORDER BY event_type""".stripMargin) { (s, d) =>
     val daily = Tables.events(s, d)
@@ -1639,8 +1563,7 @@ object Stats {
         min("day").as("cp_day"), max("amax").as("cus_num"))
       .select(col("event_type"), col("n_days"), col("total"), col("cp_day"),
         col("cus_num"),
-        expr("cast((cast('1000000' as decimal(38,0)) * cus_num)" +
-          " div (cast(n_days as decimal(38,0)) * total) as bigint)").as("frac_e6"))
+        expr(e6(SparkF, "cus_num", s"${SparkF.bigCast("n_days")} * total")).as("frac_e6"))
       .orderBy("event_type")
   }
 
@@ -1712,7 +1635,6 @@ object Stats {
     * windows/regroups of those ≤125 rows.
     */
   private val statsTheilU = Q("stats_theil_u", {
-    import graft.functions.ExactRatio
     val inner =
       """SELECT n, n_seg, n_nat, smi, hnv,
         |  abs(CAST(smi AS HUGEINT)) AS ua,
@@ -1745,7 +1667,6 @@ object Stats {
        |FROM ${ExactRatio.applyDuck(inner,
           ExactRatio.ratE6Stages(ExactRatio.DuckF, "ua", "ub", "u0_e6"))} q""".stripMargin
   }) { (s, d) =>
-    import graft.functions.ExactRatio
     val cells = Tables.customer(s, d)
       .groupBy(col("c_mktsegment").as("seg"), col("c_nationkey").as("nat"))
       .agg(count(lit(1)).as("o"))
@@ -1769,8 +1690,8 @@ object Stats {
       countDistinct("seg").as("n_seg"), countDistinct("nat").as("n_nat"),
       sum(expr("cast(o as decimal(38,0)) * mi_e6")).cast("decimal(38,0)").as("smi"))
     val base = mi.crossJoin(hn)
-      .withColumn("ua", expr(graft.functions.ExactRatio.safeAbs(
-        graft.functions.ExactRatio.SparkF, "cast(smi as decimal(38,0))")))
+      .withColumn("ua", expr(ExactRatio.safeAbs(
+        ExactRatio.SparkF, "cast(smi as decimal(38,0))")))
       .withColumn("ub", expr("greatest(cast(hnv as decimal(38,0)), cast(1 as decimal(38,0)))"))
     ExactRatio.applySparkDomain(base,
         ExactRatio.ratE6Stages(ExactRatio.SparkF, "ua", "ub", "u0_e6"))
@@ -1798,10 +1719,10 @@ object Stats {
        |g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_d FROM b GROUP BY digit),
        |w AS (SELECT digit, n_d, CAST(sum(n_d) OVER () AS BIGINT) AS n FROM g)
        |SELECT digit, n_d, n,
-       |  CAST((CAST('1000000' AS HUGEINT) * n_d) // n AS BIGINT) AS share_e6,
+       |  ${e6(DuckF, "n_d", "n")} AS share_e6,
        |  CAST(floor(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit)
        |    / ln(CAST(10 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS benford_e6,
-       |  CAST((CAST('1000000' AS HUGEINT) * n_d) // n AS BIGINT)
+       |  ${e6(DuckF, "n_d", "n")}
        |    - CAST(floor(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit)
        |      / ln(CAST(10 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS diff_e6
        |FROM w ORDER BY digit""".stripMargin) { (s, d) =>
@@ -1812,7 +1733,7 @@ object Stats {
     val g = b.groupBy("digit").agg(count(lit(1)).as("n_d"))
     g.withColumn("n", sum("n_d").over(Window.partitionBy()))
       .withColumn("share_e6",
-        expr("cast((cast('1000000' as decimal(38,0)) * n_d) div n as bigint)"))
+        expr(e6(SparkF, "n_d", "n")))
       .withColumn("benford_e6",
         expr("cast(floor(ln(1.0d + 1.0d / digit) / ln(10.0d) * 1000000 + 0.5) as bigint)"))
       .select(col("digit"), col("n_d"), col("n"), col("share_e6"),
@@ -1873,8 +1794,8 @@ object Stats {
        |    CAST(sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n2
        |  FROM rl GROUP BY event_type)
        |SELECT event_type, n_obs, n_runs, n_above, n_below, z2_e6,
-       |  ${graft.functions.ExactRatio.signInt("za")} AS z_sign
-       |FROM ${graft.functions.ExactRatio.applyDuck(
+       |  ${ExactRatio.signInt("za")} AS z_sign
+       |FROM ${ExactRatio.applyDuck(
         """SELECT event_type, n1 + n2 AS n_obs, r AS n_runs,
           |  n1 AS n_above, n2 AS n_below,
           |  CAST((r - 1) * (n1 + n2) - 2 * n1 * n2 AS HUGEINT) AS za,
@@ -1883,8 +1804,8 @@ object Stats {
           |  CAST(2 AS HUGEINT) * n1 * n2 * (2 * n1 * n2 - (n1 + n2)) AS zd
           |FROM m
           |WHERE n1 >= 1 AND n2 >= 1 AND 2 * n1 * n2 > n1 + n2""".stripMargin,
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "abs(zn)", "zd", "z2_e6"))} q
+        ExactRatio.ratE6Stages(
+          ExactRatio.DuckF, "abs(zn)", "zd", "z2_e6"))} q
        |ORDER BY event_type""".stripMargin) { (s, d) =>
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), expr("cast(ts_us div 86400000000 as bigint)").as("day"))
@@ -1919,7 +1840,6 @@ object Stats {
           " * ((r - 1) * (n1 + n2) - 2 * n1 * n2) * (n1 + n2 - 1)").as("zn"),
         expr("cast(2 as decimal(38,0)) * n1 * n2" +
           " * (2 * n1 * n2 - (n1 + n2))").as("zd"))
-    import graft.functions.ExactRatio
     ExactRatio.applySparkDomain(base,
         // zn = za² · (n−1) ≥ 0 by construction, but Spark's bare decimal
         // abs is the lossy decimal128 negate path on negatives (r17,
@@ -1949,7 +1869,6 @@ object Stats {
     * onto the 9-digit domain; everything after runs on 9 rows.
     */
   private val statsBenfordChisq = Q("stats_benford_chisq", {
-    import graft.functions.ExactRatio
     val be6 = "CAST(floor(ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE) / digit)" +
       " / ln(CAST(10 AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)"
     val inner =
@@ -1969,7 +1888,6 @@ object Stats {
        |FROM ${ExactRatio.applyDuck(inner,
           ExactRatio.ratE6Stages(ExactRatio.DuckF, "nc", "dc", "c_e6"))} q""".stripMargin
   }) { (s, d) =>
-    import graft.functions.ExactRatio
     val be6 = "cast(floor(ln(1.0d + 1.0d / digit) / ln(10.0d) * 1000000 + 0.5) as bigint)"
     val g = Tables.lineitem(s, d)
       .filter(col("l_extendedprice") > 0)
@@ -2075,8 +1993,7 @@ object Stats {
        |  CAST(sum(a.n) AS BIGINT) AS actual_sum,
        |  CAST(sum(abs(a.n - b.n)) AS BIGINT) AS abs_err_sum,
        |  CAST(max(abs(a.n - b.n)) AS BIGINT) AS max_abs_err,
-       |  CAST((CAST('1000000' AS HUGEINT) * sum(abs(a.n - b.n)))
-       |    // CAST(count(*) AS HUGEINT) AS BIGINT) AS mae_e6
+       |  ${e6(DuckF, "sum(abs(a.n - b.n))", DuckF.bigCast("count(*)"))} AS mae_e6
        |FROM c a JOIN c b
        |  ON a.event_type = b.event_type AND a.day = b.day + 7
        |GROUP BY a.event_type ORDER BY a.event_type""".stripMargin) { (s, d) =>
@@ -2100,8 +2017,102 @@ object Stats {
         sum(col("n_act")).as("actual_sum"),
         sum(abs(col("n_act") - col("n_pred"))).as("abs_err_sum"),
         max(abs(col("n_act") - col("n_pred"))).as("max_abs_err"),
-        expr("cast((cast('1000000' as decimal(38,0)) * sum(abs(n_act - n_pred)))" +
-          " div cast(count(1) as decimal(38,0)) as bigint)").as("mae_e6"))
+        expr(e6(SparkF, "sum(abs(n_act - n_pred))", SparkF.bigCast("count(1)")))
+          .as("mae_e6"))
+      .orderBy("event_type")
+  }
+
+  /** Brown–Forsythe / Levene variance-homogeneity test across event
+    * types — the companion [[statsAnova]] needs before its F is taken at
+    * face value (ANOVA assumes equal group variances; BF tests exactly
+    * that by running the SAME one-way F on absolute deviations from each
+    * group's MEDIAN — robust to the heavy tails a mean-centered Levene
+    * isn't). Exactness: values snap to cents; the per-group doubled
+    * median med2 = lower-middle + upper-middle is an exact BIGINT from
+    * the agg_weighted_median cross-multiplied idiom (2·cw ≥ tw / ≥ tw+1
+    * — no interpolation, no doubles); deviations z = |2·vc − med2| are
+    * exact integers, and the F machinery is the ANOVA tail shared with
+    * [[statsAnova]] ([[anovaSpark]] / [[anovaDuck]]). Scale:
+    * ONE combinable aggregate onto the (type, cent) domain is the only
+    * O(data) stage; the median windows, the deviation projection and
+    * both moment aggregates all run on that bounded domain over one
+    * exchange on type (plus the |types|-row total window, allowlisted).
+    */
+  private val statsLevene = Q("stats_levene",
+    anovaDuck(s"""WITH b AS (SELECT event_type AS g,
+       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
+       |dom AS (SELECT g, vc, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY g, vc),
+       |cum AS (SELECT g, vc, c,
+       |    CAST(sum(c) OVER (PARTITION BY g ORDER BY vc) AS BIGINT) AS cw,
+       |    CAST(sum(c) OVER (PARTITION BY g) AS BIGINT) AS tw FROM dom),
+       |zc AS (SELECT g, c,
+       |    abs(2 * vc - (min(CASE WHEN 2 * cw >= tw THEN vc END) OVER (PARTITION BY g)
+       |      + min(CASE WHEN 2 * cw >= tw + 1 THEN vc END) OVER (PARTITION BY g))) AS z
+       |  FROM cum),
+       |gm AS (SELECT g, CAST(sum(c) AS BIGINT) AS ng,
+       |    sum(CAST(c AS HUGEINT) * z) AS sg,
+       |    sum(CAST(c AS HUGEINT) * z * z) AS ssg FROM zc GROUP BY g)""".stripMargin)) { (s, d) =>
+    val dom = Tables.events(s, d)
+      .select(col("event_type").as("g"),
+        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
+      .groupBy("g", "vc").agg(count(lit(1)).as("c"))
+    val perG = Window.partitionBy("g")
+    val cum = dom
+      .withColumn("cw", sum("c").over(perG.orderBy("vc")))
+      .withColumn("tw", sum("c").over(perG))
+    val zc = cum
+      .withColumn("m2",
+        min(when(expr("2 * cw >= tw"), col("vc"))).over(perG) +
+          min(when(expr("2 * cw >= tw + 1"), col("vc"))).over(perG))
+      .select(col("g"), col("c"), expr("abs(2 * vc - m2)").as("z"))
+    anovaSpark(zc.groupBy("g").agg(sum("c").as("ng"),
+      sum(expr("cast(c as decimal(38,0)) * z")).as("sg"),
+      sum(expr("cast(c as decimal(38,0)) * z * z")).as("ssg")))
+  }
+
+  /** Fano factor (variance-to-mean ratio) of the daily event count per
+    * type — the burstiness screen completing the drift suite: Poisson
+    * traffic sits at 1, clumped/bursty ingest far above, metronomic
+    * load far below; alongside [[eventsAutocorr]] it tells a watermark
+    * tuner whether spikes are momentum or noise. Daily counts are
+    * BIGINTs, var_n2 = n·Σc² − (Σc)² ships as its digest var_m9 and the
+    * ratio as fano_e6 = floor(1e6·var_n2/(n·Σc)) via ExactRatio.e6 —
+    * no pre-shift, since the Fano factor stays far inside e6's int64
+    * precondition (exactness contract: [[ExactRatio]]). Scale: ONE
+    * map-combinable count onto the (type, day) domain is the only
+    * O(data) stage; the moments are a second combinable aggregate on
+    * the |types|×|days| table. Degenerate guard exact: n ≥ 2 days and
+    * a positive total.
+    */
+  /** n·Σc² − (Σc)² = n² × the daily-count variance. */
+  private def fanoVar(f: ExactRatio.Flavor) = ExactRatio.coMoment(f, "n", "scc", "sc", "sc")
+
+  private val eventsBurstiness = Q("events_burstiness",
+    s"""WITH daily AS (SELECT event_type,
+       |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
+       |    CAST(count(*) AS BIGINT) AS c
+       |  FROM events GROUP BY event_type, day),
+       |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+       |    ${ExactRatio.bigSum(DuckF, "c")} AS sc,
+       |    ${ExactRatio.bigSum(DuckF, "c * c")} AS scc
+       |  FROM daily GROUP BY event_type)
+       |SELECT event_type, n, CAST(sc AS BIGINT) AS total,
+       |  ${ExactRatio.modDigest(DuckF, fanoVar(DuckF))} AS var_m9,
+       |  ${e6(DuckF, fanoVar(DuckF), s"${DuckF.bigCast("n")} * sc")} AS fano_e6
+       |FROM m WHERE n >= 2 AND sc > 0
+       |ORDER BY event_type""".stripMargin) { (s, d) =>
+    val daily = Tables.events(s, d)
+      .groupBy(col("event_type"), expr("cast(ts_us div 86400000000 as bigint)").as("day"))
+      .agg(count(lit(1)).as("c"))
+    daily.groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        expr(ExactRatio.bigSum(SparkF, "c")).as("sc"),
+        expr(ExactRatio.bigSum(SparkF, "c * c")).as("scc"))
+      .filter(col("n") >= 2 && col("sc") > 0)
+      .select(col("event_type"), col("n"),
+        expr("cast(sc as bigint)").as("total"),
+        expr(ExactRatio.modDigest(SparkF, fanoVar(SparkF))).as("var_m9"),
+        expr(e6(SparkF, fanoVar(SparkF), s"${SparkF.bigCast("n")} * sc")).as("fano_e6"))
       .orderBy("event_type")
   }
 
@@ -2122,177 +2133,17 @@ object Stats {
     * (n0−tx)(n0−ty) is exact integer arithmetic; tau-b ships as tau2_e6 + tau_sign —
     * ExactRatio's exact integer rational over those integers, so no
     * double is hashed on either engine. */
-  /** Brown–Forsythe / Levene variance-homogeneity test across event
-    * types — the companion [[statsAnova]] needs before its F is taken at
-    * face value (ANOVA assumes equal group variances; BF tests exactly
-    * that by running the SAME one-way F on absolute deviations from each
-    * group's MEDIAN — robust to the heavy tails a mean-centered Levene
-    * isn't). Exactness: values snap to cents; the per-group doubled
-    * median med2 = lower-middle + upper-middle is an exact BIGINT from
-    * the agg_weighted_median cross-multiplied idiom (2·cw ≥ tw / ≥ tw+1
-    * — no interpolation, no doubles); deviations z = |2·vc − med2| are
-    * exact integers, and the F machinery is [[statsAnova]]'s verbatim:
-    * exact DECIMAL(38,0) moments, floor(x+0.5)-snapped per-group SSB
-    * terms (ONE identical IEEE division each), integer degenerate
-    * guards, f_e6/eta2_e6 via the exact pre-divided rationals. Scale:
-    * ONE combinable aggregate onto the (type, cent) domain is the only
-    * O(data) stage; the median windows, the deviation projection and
-    * both moment aggregates all run on that bounded domain over one
-    * exchange on type (plus the |types|-row total window, allowlisted).
-    */
-  private val statsLevene = Q("stats_levene",
-    s"""WITH b AS (SELECT event_type AS g,
-       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc FROM events),
-       |dom AS (SELECT g, vc, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY g, vc),
-       |cum AS (SELECT g, vc, c,
-       |    CAST(sum(c) OVER (PARTITION BY g ORDER BY vc) AS BIGINT) AS cw,
-       |    CAST(sum(c) OVER (PARTITION BY g) AS BIGINT) AS tw FROM dom),
-       |zc AS (SELECT g, c,
-       |    abs(2 * vc - (min(CASE WHEN 2 * cw >= tw THEN vc END) OVER (PARTITION BY g)
-       |      + min(CASE WHEN 2 * cw >= tw + 1 THEN vc END) OVER (PARTITION BY g))) AS z
-       |  FROM cum),
-       |gm AS (SELECT g, CAST(sum(c) AS BIGINT) AS ng,
-       |    sum(CAST(c AS HUGEINT) * z) AS sg,
-       |    sum(CAST(c AS HUGEINT) * z * z) AS ssg FROM zc GROUP BY g),
-       |t AS (SELECT CAST(count(*) AS BIGINT) AS k,
-       |    CAST(sum(ng) AS HUGEINT) AS n, sum(sg) AS s, sum(ssg) AS ss,
-       |    max(CAST(ng AS HUGEINT) * ssg - sg * sg) AS maxa FROM gm),
-       |e AS (SELECT t.k, t.n, t.maxa,
-       |    CAST(t.n * t.ss - t.s * t.s AS DECIMAL(38,0)) AS sst_n,
-       |    CAST(sum(CAST(floor(
-       |      CAST((gm.sg * t.n - t.s * gm.ng) * (gm.sg * t.n - t.s * gm.ng) AS DOUBLE)
-       |        / (CAST(gm.ng AS DOUBLE) * CAST(t.n AS DOUBLE) * CAST(t.n AS DOUBLE))
-       |      + 0.5) AS BIGINT)) AS BIGINT) AS ssb_c2
-       |  FROM gm CROSS JOIN t GROUP BY t.k, t.n, t.maxa, t.s, t.ss)
-       |SELECT k, n,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF, "sst_n")} AS sst_m9,
-       |  ssb_c2, f_e6, eta2_e6
-       |FROM ${graft.functions.ExactRatio.applyDuck(
-        """SELECT CAST(e.k AS BIGINT) AS k, CAST(e.n AS BIGINT) AS n, sst_n, ssb_c2,
-          |  CAST(ssb_c2 AS HUGEINT) * (e.n - e.k) * e.n AS fa,
-          |  greatest(CAST(sst_n AS HUGEINT) - e.n * ssb_c2, 1) * (e.k - 1) AS fb,
-          |  CAST(ssb_c2 AS HUGEINT) * e.n AS ea,
-          |  CAST(sst_n AS HUGEINT) AS eb
-          |FROM e
-          |WHERE e.k >= 2 AND CAST(e.n AS BIGINT) > e.k AND sst_n > 0 AND maxa > 0""".stripMargin,
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "fa", "fb", "f_e6") ++
-        graft.functions.ExactRatio.ratE6Stages(
-          graft.functions.ExactRatio.DuckF, "ea", "eb", "eta2_e6"))} q""".stripMargin) { (s, d) =>
-    val dom = Tables.events(s, d)
-      .select(col("event_type").as("g"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("vc"))
-      .groupBy("g", "vc").agg(count(lit(1)).as("c"))
-    val perG = Window.partitionBy("g")
-    val cum = dom
-      .withColumn("cw", sum("c").over(perG.orderBy("vc")))
-      .withColumn("tw", sum("c").over(perG))
-    val zc = cum
-      .withColumn("m2",
-        min(when(expr("2 * cw >= tw"), col("vc"))).over(perG) +
-          min(when(expr("2 * cw >= tw + 1"), col("vc"))).over(perG))
-      .select(col("g"), col("c"), expr("abs(2 * vc - m2)").as("z"))
-    val gm = zc.groupBy("g").agg(sum("c").as("ng"),
-      sum(expr("cast(c as decimal(38,0)) * z")).as("sg"),
-      sum(expr("cast(c as decimal(38,0)) * z * z")).as("ssg"))
-    val w = Window.partitionBy(lit(1))
-    val e = gm
-      .withColumn("k", count(lit(1)).over(w))
-      .withColumn("n", sum(expr("cast(ng as decimal(38,0))")).over(w))
-      .withColumn("s", sum("sg").over(w))
-      .withColumn("ss", sum("ssg").over(w))
-      .withColumn("maxa", max(expr("cast(ng as decimal(38,0)) * ssg - sg * sg")).over(w))
-    e.groupBy("k", "n", "s", "ss", "maxa")
-      .agg(sum(expr("cast(floor(" +
-        "cast((sg * n - s * ng) * (sg * n - s * ng) as double)" +
-        " / (cast(ng as double) * cast(n as double) * cast(n as double))" +
-        " + 0.5) as bigint)")).as("ssb_c2"))
-      .select(expr("cast(k as bigint)").as("k"), expr("cast(n as bigint)").as("n"),
-        expr("cast(n * ss - s * s as decimal(38,0))").as("sst_n"),
-        col("ssb_c2"), col("maxa"))
-      .filter(col("k") >= 2 && expr("n > k") && col("sst_n") > 0 && col("maxa") > 0)
-      .select(col("k"), col("n"), col("sst_n"), col("ssb_c2"),
-        // division-free ratio operands (see statsAnova — same rationale
-        // and the same ~n ≈ 1e8 loud-overflow scale ceiling, ADVICE r16)
-        expr("cast(ssb_c2 as decimal(38,0)) * (n - k) * n").as("fa"),
-        expr("greatest(cast(sst_n as decimal(38,0))" +
-          " - cast(n as decimal(38,0)) * ssb_c2," +
-          " cast(1 as decimal(38,0))) * (k - 1)").as("fb"),
-        expr("cast(ssb_c2 as decimal(38,0)) * n").as("ea"),
-        expr("cast(sst_n as decimal(38,0))").as("eb"))
-      .transform { base =>
-        import graft.functions.ExactRatio
-        ExactRatio.applySparkDomain(base,
-          ExactRatio.ratE6Stages(ExactRatio.SparkF, "fa", "fb", "f_e6") ++
-          ExactRatio.ratE6Stages(ExactRatio.SparkF, "ea", "eb", "eta2_e6"))
-      }
-      .withColumn("sst_m9", expr(
-        graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.SparkF, "sst_n")))
-      .select("k", "n", "sst_m9", "ssb_c2", "f_e6", "eta2_e6")
-  }
-
-  /** Fano factor (variance-to-mean ratio) of the daily event count per
-    * type — the burstiness screen completing the drift suite: Poisson
-    * traffic sits at 1, clumped/bursty ingest far above, metronomic
-    * load far below; alongside [[eventsAutocorr]] it tells a watermark
-    * tuner whether spikes are momentum or noise. Exact-integer
-    * discipline end to end: daily counts are BIGINTs, var_n2 =
-    * n·Σc² − (Σc)² is an exact 128-bit integer witnessed as var_m9
-    * (mod 1e9+7 — no decimal128 on the hash surface), and the
-    * ratio ships as fano_e6 = floor(1e6·var_n2/(n·Σc)) — the r15
-    * integer-rational rule; var/mean = (n·Σc²−S²)/(n·S) needs no
-    * pre-shift (≤ ~1e29 at 100 TB daily volumes). Scale: ONE
-    * map-combinable count onto the (type, day) domain is the only
-    * O(data) stage; the moments are a second combinable aggregate on
-    * the |types|×|days| table. Degenerate guard exact: n ≥ 2 days and
-    * a positive total.
-    */
-  private val eventsBurstiness = Q("events_burstiness",
-    s"""WITH daily AS (SELECT event_type,
-       |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
-       |    CAST(count(*) AS BIGINT) AS c
-       |  FROM events GROUP BY event_type, day),
-       |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       |    sum(CAST(c AS HUGEINT)) AS sc,
-       |    sum(CAST(c * c AS HUGEINT)) AS scc
-       |  FROM daily GROUP BY event_type)
-       |SELECT event_type, n, CAST(sc AS BIGINT) AS total,
-       |  ${graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.DuckF,
-          "CAST(n AS HUGEINT) * scc - sc * sc")} AS var_m9,
-       |  CAST((CAST('1000000' AS HUGEINT) * (CAST(n AS HUGEINT) * scc - sc * sc))
-       |    // (CAST(n AS HUGEINT) * sc) AS BIGINT) AS fano_e6
-       |FROM m WHERE n >= 2 AND sc > 0
-       |ORDER BY event_type""".stripMargin) { (s, d) =>
-    val daily = Tables.events(s, d)
-      .groupBy(col("event_type"), expr("cast(ts_us div 86400000000 as bigint)").as("day"))
-      .agg(count(lit(1)).as("c"))
-    daily.groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(expr("cast(c as decimal(38,0))")).as("sc"),
-        sum(expr("cast(c * c as decimal(38,0))")).as("scc"))
-      .filter(col("n") >= 2 && col("sc") > 0)
-      .select(col("event_type"), col("n"),
-        expr("cast(sc as bigint)").as("total"),
-        expr(graft.functions.ExactRatio.modDigest(graft.functions.ExactRatio.SparkF,
-          "cast(n as decimal(38,0)) * scc - sc * sc")).as("var_m9"),
-        expr("cast((cast('1000000' as decimal(38,0))" +
-          " * (cast(n as decimal(38,0)) * scc - sc * sc))" +
-          " div (cast(n as decimal(38,0)) * sc) as bigint)").as("fano_e6"))
-      .orderBy("event_type")
-  }
-
   private val statsKendallTau = Q("stats_kendall_tau",
     s"""WITH g AS (SELECT c_nationkey AS nk,
        |    CAST(count(*) AS BIGINT) AS x,
-       |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS HUGEINT))
-       |      AS BIGINT) AS y
+       |    CAST(${ExactRatio.bigSum(DuckF, "floor(o_totalprice * 100 + 0.5)")} AS BIGINT) AS y
        |  FROM orders JOIN customer ON o_custkey = c_custkey
        |  GROUP BY c_nationkey),
        |p AS (SELECT a.x AS ax, a.y AS ay, b.x AS bx, b.y AS yb
        |  FROM g a JOIN g b ON a.nk < b.nk)
        |SELECT n_groups, n_pairs, nc, nd, tie_x, tie_y, tau2_e6,
-       |  ${graft.functions.ExactRatio.signInt("nc - nd")} AS tau_sign
-       |FROM ${graft.functions.ExactRatio.applyDuck(
+       |  ${ExactRatio.signInt("nc - nd")} AS tau_sign
+       |FROM ${ExactRatio.applyDuck(
         """SELECT a0.*, nc - nd AS tnum,
           |  greatest(n_pairs - tie_x, 1) AS dxp,
           |  greatest(n_pairs - tie_y, 1) AS dyp
@@ -2306,8 +2157,8 @@ object Stats {
           |  CAST(sum(CASE WHEN ax = bx THEN 1 ELSE 0 END) AS BIGINT) AS tie_x,
           |  CAST(sum(CASE WHEN ay = yb THEN 1 ELSE 0 END) AS BIGINT) AS tie_y
           |  FROM p) a0""".stripMargin,
-        graft.functions.ExactRatio.r2e6Stages(
-          graft.functions.ExactRatio.DuckF, "tnum", "dxp", "dyp", "tau2_e6"))} q""".stripMargin) { (s, d) =>
+        ExactRatio.r2e6Stages(
+          ExactRatio.DuckF, "tnum", "dxp", "dyp", "tau2_e6"))} q""".stripMargin) { (s, d) =>
     // pin the 25-row domain ONCE: the pair join reads both sides (and
     // the n_groups count a third) from the cache, so the fact join+agg
     // runs a single time — without the pin each consumer re-plans the
@@ -2317,7 +2168,7 @@ object Stats {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nk"))
       .agg(count(lit(1)).as("x"),
-        sum(expr("cast(floor(o_totalprice * 100 + 0.5) as decimal(38,0))"))
+        expr(ExactRatio.bigSum(SparkF, "floor(o_totalprice * 100 + 0.5)"))
           .cast("bigint").as("y")))
     val p = g.as("a").join(
       g.select(col("nk").as("bnk"), col("x").as("bx"), col("y").as("yb")),
@@ -2339,13 +2190,12 @@ object Stats {
       .withColumn("dxp", expr("greatest(n_pairs - tie_x, 1)"))
       .withColumn("dyp", expr("greatest(n_pairs - tie_y, 1)"))
       .transform { base =>
-        import graft.functions.ExactRatio
         ExactRatio.applySparkDomain(base,
           ExactRatio.r2e6Stages(ExactRatio.SparkF, "tnum", "dxp", "dyp", "tau2_e6"))
       }
       .select(col("n_groups"), col("n_pairs"), col("nc"), col("nd"),
         col("tie_x"), col("tie_y"), col("tau2_e6"),
-        expr(graft.functions.ExactRatio.signInt("nc - nd")).as("tau_sign"))
+        expr(ExactRatio.signInt("nc - nd")).as("tau_sign"))
   }
 
   val all: Seq[Q] = Seq(histogramEquidepth, outlierMad, colEntropy,

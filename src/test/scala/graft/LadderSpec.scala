@@ -154,18 +154,44 @@ class LadderSpec extends AnyFunSuite {
 
   private val decimalCast = "as\\s+decimal".r
 
+  /** Every SparkF SQL text the ExactRatio emitters (and the shared ANOVA
+    * tail) return, lowercased like [[joinedSource]]: idioms that moved
+    * behind `f.bigCast` are invisible to the source scan, so the lints
+    * below also run over what the emitters actually emit. */
+  private lazy val emittedSpark: Seq[(String, String)] = {
+    import ExactRatio._
+    val f = SparkF
+    val cols = Pearson(f).columns ++ Pearson.sums(f, "x", "y") ++
+      Pearson.stages(f, "r2").flatten ++ Slope(f).columns ++
+      Slope.stages(f).flatten ++ Slope.presentation(f, "sl") ++
+      ratE6Stages(f, "a", "b", "r").flatten ++
+      r2e6Stages(f, "c", "b", "d", "r2").flatten ++
+      graft.queries.Stats.anovaRatios(f) ++ Seq(
+        "bigSum" -> bigSum(f, "x"), "e6" -> e6(f, "a", "b"),
+        "coMoment" -> coMoment(f, "n", "sxy", "sx", "sy"),
+        "Pearson.nonDegenerate" -> Pearson(f).nonDegenerate,
+        "Pearson.sign" -> Pearson.sign, "Pearson.digest" -> Pearson.digest(f),
+        "Slope.nonDegenerate" -> Slope(f).nonDegenerate,
+        "modDigest" -> modDigest(f, "x"), "safeAbs" -> safeAbs(f, "x"))
+    cols.map { case (name, sql) => s"emitted $name" -> sql.toLowerCase }
+  }
+
+  /** Lint targets: each query/operator/function source file, then each
+    * emitted SparkF text. */
+  private lazy val lintTexts: Seq[(String, String)] =
+    lintFiles.map(f => f.getName -> joinedSource(f)) ++ emittedSpark
+
   test("no abs() over a decimal cast in any Spark-side query source") {
     val callRe = "abs\\s*\\(".r
     val offenders = for {
-      f <- lintFiles
-      t = joinedSource(f)
+      (name, t) <- lintTexts
       m <- callRe.findAllMatchIn(t)
       // exclude identifiers ending in abs (safeabs) and method calls (.abs)
       if m.start == 0 || !(t.charAt(m.start - 1).isLetterOrDigit ||
         t.charAt(m.start - 1) == '_' || t.charAt(m.start - 1) == '.')
       span = parenSpan(t, m.end - 1)
       if decimalCast.findFirstIn(span).isDefined
-    } yield s"${f.getName}@${m.start}: abs(${span.take(70)}…)"
+    } yield s"$name@${m.start}: abs(${span.take(70)}…)"
     assert(offenders.isEmpty,
       s"abs() over a Spark decimal cast (use ExactRatio.safeAbs):\n${offenders.mkString("\n")}")
   }
@@ -177,14 +203,13 @@ class LadderSpec extends AnyFunSuite {
     // binary and allowed; after '(', ',', '"', or an operator it is unary.
     val minusCast = "-\\s*cast\\s*\\(".r
     val offenders = for {
-      f <- lintFiles
-      t = joinedSource(f)
+      (name, t) <- lintTexts
       m <- minusCast.findAllMatchIn(t)
       p = prevNonSpace(t, m.start)
       if !(p.isLetterOrDigit || p == '_' || p == ')' || p == ']' || p == '\'')
       span = parenSpan(t, t.indexOf('(', m.start))
       if decimalCast.findFirstIn(span).isDefined
-    } yield s"${f.getName}@${m.start}: ${p}-cast(${span.take(60)}…)"
+    } yield s"$name@${m.start}: ${p}-cast(${span.take(60)}…)"
     assert(offenders.isEmpty,
       s"unary minus on a Spark decimal cast (spell it `0 - x`):\n${offenders.mkString("\n")}")
   }
@@ -202,10 +227,11 @@ class LadderSpec extends AnyFunSuite {
       "CorrMatrix.scala" -> 1,
       // text_zipf — bounded rank-bucket domain
       "Curation.scala" -> 1,
-      // stats_spearman, events_autocorr, stats_anova, stats_theil_u,
-      // stats_runs_test, stats_benford_chisq, stats_levene,
-      // stats_kendall_tau — per-flag / per-lag / per-group moment tables
-      "Stats.scala" -> 8,
+      // stats_spearman, events_autocorr, the shared one-way ANOVA tail
+      // (stats_anova + stats_levene), stats_theil_u, stats_runs_test,
+      // stats_benford_chisq, stats_kendall_tau — per-flag / per-lag /
+      // per-group moment tables
+      "Stats.scala" -> 7,
       // corpus_heaps — per-decile-prefix vocab curve (bounded bucket count)
       "Corpus.scala" -> 1)
     // ADVICE r19: walk ALL of src/main/scala (not just lintFiles) so a new
@@ -288,5 +314,55 @@ class LadderSpec extends AnyFunSuite {
     samples.foreach { case (i, v) =>
       assert(out(i) == (v.abs mod BigInt(1000000007)).toLong, s"modDigest($v)")
     }
+  }
+
+  test("e6 and the Pearson co-moments == BigInt replica across 1..18-digit operands") {
+    // e6's stated precondition: a >= 0, b >= 1, a/b < 9.2e12 — b keeps at
+    // least digits(a) - 11 digits (a/b < 1e12); zero and unit edges included
+    val ratios = (1 to 200).map { i =>
+      val a = randDigits(1 + rnd.nextInt(18))
+      val minB = math.max(1, a.toString.length - 11)
+      (i.toLong, a, randDigits(minB + rnd.nextInt(19 - minB)))
+    } :+ ((201L, BigInt(0), BigInt(1))) :+ ((202L, BigInt("999999999999"), BigInt(1)))
+    // signed Pearson sums; sxy is negative on every 3rd sample, so samples
+    // with sx·sy > 0 > n·sxy (negative covariance) are certain to appear
+    val moments = (1 to 200).map { i =>
+      def d18() = randDigits(1 + rnd.nextInt(18))
+      val n = d18()
+      val sx = if (i % 2 == 0) -d18() else d18()
+      val sy = if (i % 4 < 2) -d18() else d18()
+      val sxy = if (i % 3 == 0) -d18() else d18()
+      (i.toLong, n, sx, sy, sxy, d18(), d18())
+    }
+    import s.implicits._
+    val e6Out = ratios.map { case (i, a, b) => (i, a.toLong, b.toLong) }.toDF("id", "a", "b")
+      .select(col("id"), expr(ExactRatio.e6(ExactRatio.SparkF, "a", "b")).as("r"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ratios.foreach { case (i, a, b) =>
+      assert(e6Out(i) == (BigInt(1000000) * a / b).toLong, s"e6($a, $b)")
+    }
+    val p = ExactRatio.Pearson(ExactRatio.SparkF)
+    val sums = Seq("sx", "sy", "sxy", "sxx", "syy")
+    val pOut = moments.map { case (i, n, sx, sy, sxy, sxx, syy) =>
+        (i, n.toLong, sx.toString, sy.toString, sxy.toString, sxx.toString, syy.toString) }
+      .toDF("id" +: "n" +: sums: _*)
+      .select(col("id") +: col("n") +: sums.map(c => expr(s"cast($c as decimal(38,0))").as(c)): _*)
+      .select(col("id") +: (ExactRatio.sparkCols(p.columns) ++ Seq(
+        expr(p.nonDegenerate).as("ok"),
+        expr(ExactRatio.Pearson.sign).as("sign"))): _*)
+      .withColumn("m9", expr(ExactRatio.Pearson.digest(ExactRatio.SparkF)))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    moments.foreach { case (i, n, sx, sy, sxy, sxx, syy) =>
+      val r = pOut(i)
+      val (cov, vxx, vyy) = (n * sxy - sx * sy, n * sxx - sx * sx, n * syy - sy * sy)
+      def big(k: String) = BigInt(r.getDecimal(r.fieldIndex(k)).toBigIntegerExact)
+      assert(big("cov_n2") == cov && big("vxx") == vxx && big("vyy") == vyy,
+        s"Pearson co-moments at n=$n sx=$sx sy=$sy sxy=$sxy")
+      assert(r.getAs[Boolean]("ok") == (vxx > 0 && vyy > 0), s"nonDegenerate at $i")
+      assert(r.getAs[Int]("sign") == cov.signum, s"sign at $i")
+      assert(r.getAs[Long]("m9") == (cov.abs mod BigInt(1000000007)).toLong, s"digest at $i")
+    }
+    assert(moments.exists { case (_, n, sx, sy, sxy, _, _) => n * sxy - sx * sy < 0 },
+      "the sample must include negative covariances")
   }
 }

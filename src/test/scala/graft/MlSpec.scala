@@ -220,6 +220,18 @@ class MlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert(rows.size >= 2, "clustering must keep at least two clusters")
   }
 
+  test("kmeans_iter on an empty embeddings table fails with a named require") {
+    TestSpark.withTempDir("kmeans_empty") { dir =>
+      Tables.embeddings(s, d).limit(0).write.parquet(s"$dir/embeddings.parquet")
+      try {
+        val e = intercept[IllegalArgumentException] {
+          SparkEntry.queries("kmeans_iter")(s, dir)
+        }
+        assert(e.getMessage.contains("kmeans_iter: no centroids"), e.getMessage)
+      } finally s.catalog.clearCache()
+    }
+  }
+
   test("RF pipeline learns a separable target from embeddings") {
     import org.apache.spark.ml.Pipeline
     import org.apache.spark.ml.classification.RandomForestClassifier
