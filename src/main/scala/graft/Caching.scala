@@ -38,26 +38,22 @@ object Caching {
     * if `result` is not already plan-cached (warm re-entry), pin
     * `intermediate` in ONE job (so the downstream self-join's map stages
     * never race to populate it), materialize `result`, then retire the
-    * intermediate. A warm call touches NOTHING — re-pinning the
-    * intermediate would re-run its whole pipeline and leak the persist
-    * (the dedup_containment regression ScaleSpec pins).
+    * intermediate. Returns `result` with its materialized row count, or
+    * -1 on the warm path, where nothing runs: a warm call touches NOTHING
+    * — re-pinning the intermediate would re-run its whole pipeline and
+    * leak the persist (the dedup_containment regression ScaleSpec pins).
+    *
+    * Callers that need the cardinality anyway (`clusterLabels`' edge-count
+    * bound) reuse the materialization job instead of re-counting the
+    * cached frame, and the intermediate pin is [[pinOnce]] (cold-only): a
+    * kernel already pinned AND counted by a warm entry (Bench's untimed
+    * kernel warm, a composed consumer) skips the redundant cache-read
+    * count job. That relies on every in-repo intermediate being pinned
+    * via pinOnce/materializeRetiring (always counted), so a
+    * warm-but-unmaterialized intermediate cannot occur here — see
+    * [[ensureCached]].
     */
-  def materializeRetiring(result: DataFrame, intermediate: DataFrame): DataFrame =
-    materializeRetiringCounted(result, intermediate)._1
-
-  /** [[materializeRetiring]] returning the materialized row count of
-    * `result` as well (-1 on the warm path, where nothing runs). Two r22
-    * job-count cuts (VERDICT r21 item 4 — every job boundary is
-    * contention exposure): callers that need the cardinality anyway
-    * (`clusterLabels`' edge-count bound) reuse the materialization job
-    * instead of re-counting the cached frame, and the intermediate pin is
-    * [[pinOnce]] (cold-only) — a kernel already pinned AND counted by a
-    * warm entry (Bench's untimed kernel warm, a composed consumer) skips
-    * the redundant cache-read count job. Every in-repo intermediate is
-    * pinned via pinOnce/materializeRetiring (always counted), so a
-    * warm-but-unmaterialized intermediate cannot occur here.
-    */
-  def materializeRetiringCounted(result: DataFrame,
+  def materializeRetiring(result: DataFrame,
       intermediate: DataFrame): (DataFrame, Long) = {
     if (result.storageLevel == StorageLevel.NONE) {
       pinOnce(intermediate)
@@ -69,7 +65,12 @@ object Caching {
   }
 
   /** Persist `df` unless its plan is already in the session's SQL cache
-    * (plan-keyed lookup via `Dataset.storageLevel`), then return it.
+    * (plan-keyed lookup via `Dataset.storageLevel`), then return it. The
+    * persist is lazy, so callers must never share a plan with a
+    * [[materializeRetiring]] intermediate: that pin is cold-only and
+    * would take such a lazily cached, still unpopulated plan as already
+    * materialized, and the self-join's map stages would race to populate
+    * it.
     */
   def ensureCached(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.persist() else df

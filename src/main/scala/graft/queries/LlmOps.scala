@@ -680,7 +680,7 @@ object LlmOps {
       // vector. The assignment carries qv forward, so the update
       // aggregates straight off it instead of re-joining v. Per round:
       // 3 exchanges + broadcast build -> 1 exchange ((c, pos) mean).
-      // Jobs (JobsSpec's audited baseline): build 17 -> 8, run unchanged
+      // Jobs (KeyCountsSpec's audited baseline): build 17 -> 8, run unchanged
       // at 5 (MlSpec re-derives the fit bit-exactly).
       def assignAgainst(c: Seq[(Long, Seq[Long])]) = {
         // an empty centroid list would render as array_min(array()) —
@@ -1530,10 +1530,12 @@ object LlmOps {
 
   /** Shared pair statistics over the gram table: (da, db, c = shared
     * shingle count, na, nb = per-doc distinct-shingle sizes), a < b,
-    * lang-blocked. NOT cached — each consumer (jaccardPairs here,
-    * Pipeline.dedup_containment) filters to its own small pair set and
-    * materializes THAT via [[graft.Caching.materializeRetiring]], which
-    * also owns the gram cache lifecycle. Returns (stats, grams).
+    * lang-blocked. NOT cached — each consumer filters to its own small
+    * pair set: jaccardPairs here materializes THAT via
+    * [[graft.Caching.materializeRetiring]], which also owns the gram
+    * cache lifecycle; Pipeline.dedup_containment pins the gram table with
+    * [[graft.Caching.pinOnce]] and returns its pair plan unexecuted.
+    * Returns (stats, grams).
     */
   private[queries] def pairStats(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -1575,6 +1577,6 @@ object LlmOps {
     // warm re-entry (graph_degree then dedup_ngram_jaccard in one session
     // builds the IDENTICAL plan) touches nothing; the RETURNED jp is the
     // caller's to retire (graft.Caching ownership contract)
-    graft.Caching.materializeRetiringCounted(jp, grams)
+    graft.Caching.materializeRetiring(jp, grams)
   }
 }

@@ -18,25 +18,15 @@ import graft.{Q, Tables}
   */
 object TextSim {
 
-  /** Shared double-precision cosine between two float-array columns.
-    * `dot / sqrt(na * nb)` — left-fold dot, single sqrt of the norm
-    * product. NOT DuckDB's `list_cosine_similarity` shape: that builtin
-    * was measured to diverge 1 ulp from this expression on 40 032 of the
-    * 124 750 sf0.01 pairs, enough to flip a `>= threshold` edge — oracles
-    * must use [[cosineSql]] (bit-identical on every pair) instead.
-    */
-  def cosineExpr(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"aggregate(zip_with($x, $y, (p, q) -> cast(p as double) * cast(q as double)), cast(0 as double), (acc, v) -> acc + v)"
-    s"${dot(a, b)} / sqrt(${dot(a, a)} * ${dot(b, b)})"
-  }
-
-  /** DuckDB twin of [[cosineExpr]]/the `dot_d / sqrt(a_n2 * b_n2)` form,
-    * with the EXACT evaluation shape of the Spark side: sequential
-    * left-to-right product sum, one sqrt over the norm product. Verified
-    * bit-identical to the Spark sims on all 124 750 sf0.01 pairs (where
-    * `list_cosine_similarity` differed on 40 032 — two sqrts round
-    * differently at 1 ulp). `$a`/`$b` are embeddings-table aliases.
+  /** DuckDB twin of the Spark sims' `dot_d / sqrt(a_n2 * b_n2)` form
+    * ([[dotExpr]] over [[withVecNorm]]'s pre-cast vectors), with the EXACT
+    * evaluation shape of the Spark side: sequential left-to-right product
+    * sum, one sqrt over the norm product. Verified bit-identical to the
+    * Spark sims on all 124 750 sf0.01 pairs. DuckDB's
+    * `list_cosine_similarity` is NOT that shape: it differed by 1 ulp on
+    * 40 032 of them (two sqrts round differently), enough to flip a
+    * `>= threshold` edge, so oracles use this instead. `$a`/`$b` are
+    * embeddings-table aliases.
     */
   def cosineSql(a: String, b: String): String = {
     def dot(x: String, y: String) =

@@ -1,12 +1,12 @@
 // Custom-operator forensic: TopKPerGroup (the engine's custom
 // LogicalPlan + SparkStrategy + SparkPlan path) vs the stock window
 // formulation, measured at 50M rows / 100k groups / k=3 — 300× the
-// fixture. The claim under test (TopKPerGroup scaladoc, SCALE.md):
-// the window form must shuffle EVERY row and sort each group; the
-// custom operator keeps map-side bounded heaps so the exchange
-// carries <= k rows per (input partition, group), then merges. Both
-// walls AND actual shuffle-write record counts are reported — the
-// volume claim is checked directly, not inferred.
+// fixture. The claim under test (TopKPerGroup scaladoc): the custom
+// operator keeps map-side bounded heaps so the exchange carries <= k
+// rows per (input partition, group), then merges; on Spark 4 the stock
+// WindowGroupLimit pushdown gives the window form the same bound. Both
+// walls AND actual shuffle-write record counts (via graft.Profile) are
+// reported — the volume claim is checked directly, not inferred.
 //   /opt/spark/bin/spark-shell --master 'local[32]' --driver-memory 24g \
 //     --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \
 //     --conf spark.sql.session.timeZone=UTC \
@@ -27,28 +27,16 @@ def rows = spark.range(N).select(
   pmod(col("id") * 40503L, lit(1000000007L)).as("v"),
   col("id"))
 
-val wr = new java.util.concurrent.atomic.AtomicLong(0)
-spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-  override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-    if (t.taskMetrics != null)
-      wr.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-})
-def settled(): Long = {
-  var prev = -1L; var cur = wr.get()
-  while (cur != prev) { Thread.sleep(50); prev = cur; cur = wr.get() }
-  cur
-}
-
 def timed(name: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
   f.write.format("noop").mode("overwrite").save() // warm
-  val walls = (1 to 3).map { i =>
-    val w0 = settled()
+  val tag = s"topkbench/$name"
+  val walls = (1 to 3).map { _ =>
     val t0 = System.nanoTime()
-    f.write.format("noop").mode("overwrite").save()
-    val e = (System.nanoTime() - t0) / 1e9
-    if (i == 3) println(f"TOPKBENCH $name%-16s shuffle_write_records=${settled() - w0}%,d")
-    e
+    graft.Profile.tagged(spark, tag)(f.write.format("noop").mode("overwrite").save())
+    (System.nanoTime() - t0) / 1e9
   }
+  val Seq(c) = graft.Profile.take(spark, tag)
+  println(f"TOPKBENCH $name%-16s shuffle_write_records=${c.shuffleWritten / 3}%,d per run")
   println(f"TOPKBENCH $name%-16s med=${walls.sorted.apply(1)}%.2f s runs=${walls.map(t => f"$t%.2f").mkString(",")}")
 }
 
