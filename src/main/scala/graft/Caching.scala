@@ -8,69 +8,47 @@ import org.apache.spark.storage.StorageLevel
   * Several operators (`LlmOps.jaccardPairs`, `TextSim.minhashNearDupPairs`,
   * `ConnectedComponents.minLabel` / `alternatingStars`) persist DataFrames:
   *
-  *   - INTERMEDIATES the returned frame no longer needs (jaccardPairs'
-  *     gram table, CC's per-round label frames) are owned by the operator —
-  *     it materializes them in one job (so concurrent consumer stages never
+  *   - INTERMEDIATES the returned frame no longer needs (CC's per-round
+  *     label frames and edge caches) are owned by the operator — it
+  *     materializes them in one job (so concurrent consumer stages never
   *     race to populate the cache) and unpersists them before returning.
   *     Callers never see these.
   *   - Everything the RETURNED result still depends on is the CALLER's to
-  *     retire. That is the returned frame itself where the operator
-  *     materialized it (jaccardPairs' pair graph, minLabel's labels), and
-  *     ALSO any cache the returned frame still reads lazily:
-  *     `minhashNearDupPairs` returns an UNEXECUTED plan over its cached
-  *     gram table, so that cache must outlive the caller's consumption of
-  *     the result. Unpersist per-frame when done, or call
-  *     `spark.catalog.clearCache()` between queries the way `Verify`/
-  *     `Bench` do — nothing uses RDD-level persistence or checkpoints, so
-  *     one `clearCache()` always cleans the whole session (asserted in
-  *     ScaleSpec "dedup family leaves nothing behind").
+  *     retire: the returned frame itself where the operator persisted it
+  *     (jaccardPairs' pair graph, minLabel's labels), and ALSO any cache
+  *     the returned frame still reads lazily: `minhashNearDupPairs`
+  *     returns an UNEXECUTED plan over its pinned gram table, so that pin
+  *     must outlive the caller's consumption of the result. Unpersist
+  *     per-frame when done, or call `spark.catalog.clearCache()` between
+  *     queries the way `Verify`/`Bench` do — nothing uses RDD-level
+  *     persistence or checkpoints, so one `clearCache()` always cleans
+  *     the whole session (asserted in ScaleSpec "dedup family leaves
+  *     nothing behind").
+  *
+  * Two ways to persist, by who reads the frame:
+  *
+  *   - [[ensureCached]] persists LAZILY: the first action over the frame
+  *     fills the cache and no job runs at construction. jaccardPairs'
+  *     pair graph is persisted this way: its consumers are separate
+  *     queries that run one after another, and the first one's sink or
+  *     collect fills it for the rest.
+  *   - [[pinOnce]] persists and counts at once, for a frame that several
+  *     independent subtrees of one plan read and that must be populated
+  *     before they run.
   *
   * Composed queries re-enter these operators with identical plans (e.g.
-  * `dedup_cluster` after `graph_degree` both build the same pair graph in
-  * one session). `ensureCached` makes the operator-side persists idempotent
-  * against Spark's plan-keyed SQL cache: re-persisting an already-cached
-  * plan is a CacheManager warning and, worse, masks genuine double-cache
-  * bugs — looking the plan up first keeps the reuse AND the silence.
+  * `dedup_cluster` after `graph_degree` both read the same pair graph in
+  * one session). Both calls look the plan up first, so re-entry reuses
+  * the cache without a CacheManager "already cached" warning, which would
+  * also mask genuine double-cache bugs.
   */
 object Caching {
 
-  /** The shared cold-branch materialization the pair-graph kernels use:
-    * if `result` is not already plan-cached (warm re-entry), pin
-    * `intermediate` in ONE job (so the downstream self-join's map stages
-    * never race to populate it), materialize `result`, then retire the
-    * intermediate. Returns `result` with its materialized row count, or
-    * -1 on the warm path, where nothing runs: a warm call touches NOTHING
-    * — re-pinning the intermediate would re-run its whole pipeline and
-    * leak the persist (the dedup_containment regression ScaleSpec pins).
-    *
-    * Callers that need the cardinality anyway (`clusterLabels`' edge-count
-    * bound) reuse the materialization job instead of re-counting the
-    * cached frame, and the intermediate pin is [[pinOnce]] (cold-only): a
-    * kernel already pinned AND counted by a warm entry (Bench's untimed
-    * kernel warm, a composed consumer) skips the redundant cache-read
-    * count job. That relies on every in-repo intermediate being pinned
-    * via pinOnce/materializeRetiring (always counted), so a
-    * warm-but-unmaterialized intermediate cannot occur here — see
-    * [[ensureCached]].
-    */
-  def materializeRetiring(result: DataFrame,
-      intermediate: DataFrame): (DataFrame, Long) = {
-    if (result.storageLevel == StorageLevel.NONE) {
-      pinOnce(intermediate)
-      result.persist()
-      val n = result.count()
-      intermediate.unpersist(blocking = false)
-      (result, n)
-    } else (result, -1L)
-  }
-
   /** Persist `df` unless its plan is already in the session's SQL cache
     * (plan-keyed lookup via `Dataset.storageLevel`), then return it. The
-    * persist is lazy, so callers must never share a plan with a
-    * [[materializeRetiring]] intermediate: that pin is cold-only and
-    * would take such a lazily cached, still unpopulated plan as already
-    * materialized, and the self-join's map stages would race to populate
-    * it.
+    * persist is lazy: the first action over `df` populates it. Until then
+    * the planner has no size for it, so a join planned against it is a
+    * shuffle join even when it is small (see `LlmOps.pairEdges`).
     */
   def ensureCached(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.persist() else df
@@ -79,10 +57,9 @@ object Caching {
     * touches nothing — not even a count. For operators that return an
     * UNEXECUTED plan over the pinned frame (the minhashNearDupPairs
     * shape): one action here plus the consumer's own sink = 2 actions
-    * total, vs [[materializeRetiring]]'s 3 — and the r13 forensic showed
-    * driver-bench inflation tracks the ACTION count under host
-    * contention. The pin is the caller's to retire (clearCache /
-    * unpersist, per the ownership contract above).
+    * total — and the r13 forensic showed driver-bench inflation tracks
+    * the ACTION count under host contention. The pin is the caller's to
+    * retire (clearCache / unpersist, per the ownership contract above).
     */
   def pinOnce(df: DataFrame): DataFrame = {
     if (df.storageLevel == StorageLevel.NONE) { df.persist(); df.count() }
@@ -91,7 +68,8 @@ object Caching {
 }
 
 /** Session-keyed memo for deterministic driver-side model state (trained
-  * codebooks, quantizer centroids, the frames that carry them): one
+  * codebooks, quantizer centroids, the pair-graph kernel, the frames that
+  * carry them): one
   * computation per (session, key), so composed queries in one session
   * never re-train identical models — and, for plans bearing UDF
   * closures, actually SHARE the plan (ScalaUDF plan equality is closure

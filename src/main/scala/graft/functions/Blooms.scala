@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL registration for Spark's internal bloom-filter expressions
@@ -54,14 +53,9 @@ object Blooms {
 
   /** Idempotent per-session SQL registration of both functions. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_agg"),
-      aggBuilder)
-    reg.registerFunction(
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_might_contain"),
-      mightContainBuilder)
+    FunctionRegistration.ensure(spark, "bloom_agg",
+      classOf[BloomFilterAggregate].getName, aggBuilder)
+    FunctionRegistration.ensure(spark, "bloom_might_contain",
+      classOf[BloomFilterMightContain].getName, mightContainBuilder)
   }
 }

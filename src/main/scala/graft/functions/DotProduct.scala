@@ -95,10 +95,22 @@ object DotProduct {
     * `SparkSessionExtensions`.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_d"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_d"),
-      builder)
+    FunctionRegistration.ensure(spark, "dot_d", classOf[DotProduct].getName, builder)
+}
+
+/** One check-then-add registration for every graft-registered function:
+  * a name already in the session's function registry is left as it is,
+  * so the per-query `register` calls neither replace the function nor
+  * make Spark log "replaced a previously registered function".
+  */
+private[functions] object FunctionRegistration {
+  def ensure(spark: SparkSession, name: String, className: String,
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier(name)
+    if (!registry.functionExists(id))
+      registry.registerFunction(id, new ExpressionInfo(className, name), builder)
+  }
 }
 
 /** One arity-error implementation for every graft-registered function. */

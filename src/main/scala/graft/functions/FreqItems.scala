@@ -5,10 +5,9 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -217,8 +216,5 @@ object MisraGries {
   /** Idempotent SQL registration, the dot_d pattern: `freq_items(s, k)`
     * becomes usable in `expr`/`spark.sql`. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("freq_items"),
-      new ExpressionInfo(classOf[MisraGries].getName, "freq_items"),
-      builder)
+    FunctionRegistration.ensure(spark, "freq_items", classOf[MisraGries].getName, builder)
 }

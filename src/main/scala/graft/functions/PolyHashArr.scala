@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -121,8 +120,5 @@ object PolyHashArr {
   /** Idempotent SQL registration (the DotProduct.register idiom):
     * `poly_hash_arr(w)` becomes usable in `expr`. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("poly_hash_arr"),
-      new ExpressionInfo(classOf[PolyHashArr].getName, "poly_hash_arr"),
-      builder)
+    FunctionRegistration.ensure(spark, "poly_hash_arr", classOf[PolyHashArr].getName, builder)
 }

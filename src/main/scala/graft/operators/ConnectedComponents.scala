@@ -44,9 +44,6 @@ object ConnectedComponents {
     * must cover every vertex (isolated ones included). Returns
     * (node, lbl) where lbl = min node id of the component.
     *
-    * `graphSizeHint` = edge count if the caller already knows it (e.g.
-    * from a materialized cache); -1 = count here.
-    *
     * Hybrid execution, decided by edge count — the same reasoning that
     * makes Catalyst pick a broadcast join for a small build side:
     *
@@ -54,10 +51,13 @@ object ConnectedComponents {
     *    rows — comparable to a generous broadcast build side): collect
     *    the EDGE LIST ONLY (never `nodes`, which may be corpus-sized) to
     *    the driver, run union-find there, and broadcast-join the label
-    *    map back onto `nodes`. An iterative distributed loop pays fixed
-    *    per-round scheduling + planning overhead — ~20 jobs and seconds
-    *    of wall clock for a graph that fits in a few KB (measured at
-    *    sf0.1: 79 edges, ~6 s of loop overhead) — while the local solve
+    *    map back onto `nodes`. The size test and the collect are ONE
+    *    action, `limit(localSolveMaxEdges + 1)`: getting more rows than
+    *    the bound is the test, and it stops the collect there. An
+    *    iterative distributed loop pays fixed per-round scheduling +
+    *    planning overhead — ~20 jobs and seconds of wall clock for a
+    *    graph that fits in a few KB (measured at sf0.1: 79 edges, ~6 s
+    *    of loop overhead) — while the local solve
     *    is one collect + one broadcast join. Near-dup pair graphs are
     *    almost always in this regime: even at 100 TB corpus scale the
     *    >=0.5-Jaccard pair graph is sparse.
@@ -83,11 +83,36 @@ object ConnectedComponents {
     * the label frame's broadcast.
     */
   def minLabel(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50,
-      graphSizeHint: Long = -1L,
-      localSolveMaxEdges: Long = 1L << 20): DataFrame = {
+      localSolveMaxEdges: Long = LocalSolveMaxEdges): DataFrame =
+    collectBounded(edges, localSolveMaxEdges) match {
+      case Some(collected) => localSolve(nodes, collected)
+      case None => loopAtWidth(nodes, edges, maxIter)
+    }
+
+  /** The default local-solve bound, in edges. */
+  final val LocalSolveMaxEdges: Long = 1L << 20
+
+  /** The edge list (a, b) as driver rows if it holds at most `bound`
+    * edges, from one `limit(bound + 1)` collect; None if it holds more or
+    * `bound` is negative (the distributed loop forced).
+    */
+  def collectBounded(edges: DataFrame, bound: Long = LocalSolveMaxEdges)
+      : Option[Array[org.apache.spark.sql.Row]] =
+    if (bound < 0L) None
+    else {
+      require(bound < Int.MaxValue,
+        s"localSolveMaxEdges must be below ${Int.MaxValue} (a row bound for one collect), got $bound")
+      val collected = edges.select(col("a"), col("b")).limit(bound.toInt + 1).collect()
+      if (collected.length <= bound) Some(collected) else None
+    }
+
+  /** The distributed loop at the width rule's shuffle width, the one place
+    * that counts the edges: one partition per ~200k edges, capped at the
+    * default parallelism.
+    */
+  private def loopAtWidth(nodes: DataFrame, edges: DataFrame, maxIter: Int): DataFrame = {
     val spark = nodes.sparkSession
-    val m = if (graphSizeHint >= 0L) graphSizeHint else edges.count()
-    if (m <= localSolveMaxEdges) return localSolve(spark, nodes, edges)
+    val m = edges.count()
     val p = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (m / 200000L).toInt + 1))
     val origParts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -106,7 +131,7 @@ object ConnectedComponents {
     * cache-materialization count. The driver-bench forensic that motivated
     * it: dedup_cluster's in-suite cost tracks its ACTION count under host
     * contention (every job boundary is scheduling exposure), so the local
-    * path drops from count+collect+join+count to count+collect. Label
+    * path drops from count+collect+join+count to one bounded collect. Label
     * data is a driver-local literal, so there is no lineage for a
     * consumer to recompute through (the persist contract is moot).
     * Larger graphs fall through to the distributed loop with
@@ -115,21 +140,21 @@ object ConnectedComponents {
     * the bound is an edge COUNT, not bytes; size it down for wide ids.
     */
   def minLabelFromEdges(edges: DataFrame, maxIter: Int = 50,
-      graphSizeHint: Long = -1L,
-      localSolveMaxEdges: Long = 1L << 20): DataFrame = {
-    val spark = edges.sparkSession
-    val m = if (graphSizeHint >= 0L) graphSizeHint else edges.count()
-    if (m <= localSolveMaxEdges) {
-      val collected = edges.select(col("a"), col("b")).collect()
-      return labelFrame(spark, edges.schema.fields.head, unionFind(collected))
+      localSolveMaxEdges: Long = LocalSolveMaxEdges): DataFrame =
+    collectBounded(edges, localSolveMaxEdges) match {
+      case Some(collected) => endpointLabels(edges, collected)
+      case None =>
+        val participants = edges.select(col("a").as("node"))
+          .union(edges.select(col("b").as("node"))).distinct()
+        loopAtWidth(participants, edges, maxIter)
     }
-    val participants = edges.select(col("a").as("node"))
-      .union(edges.select(col("b").as("node"))).distinct()
-    // the loop tail (width rule + partition set/restore) is minLabel's —
-    // forcing its local bound off keeps ONE copy of that logic
-    minLabel(participants, edges, maxIter, graphSizeHint = m,
-      localSolveMaxEdges = -1L)
-  }
+
+  /** The local path of [[minLabelFromEdges]]: (node, lbl) over the
+    * endpoints of `collected`, the rows [[collectBounded]] returned for
+    * `edges`, as a driver-local literal.
+    */
+  def endpointLabels(edges: DataFrame, collected: Array[org.apache.spark.sql.Row]): DataFrame =
+    labelFrame(edges.sparkSession, edges.schema.fields.head, unionFind(collected))
 
   /** Build the (node, lbl) frame from a finished union-find — the one
     * label-materialization shared by `localSolve` and the
@@ -197,16 +222,15 @@ object ConnectedComponents {
     (parent, minOfRoot, find)
   }
 
-  /** Driver-side union-find over a BOUNDED edge list (caller guarantees
-    * the bound); `nodes` never leaves the cluster. Matches the loop's
+  /** Driver-side union-find over the edge list [[collectBounded]]
+    * returned; `nodes` never leaves the cluster. Matches the loop's
     * output contract exactly: (node, lbl = component-min node id),
-    * result persisted + materialized so consumers don't recompute
-    * through the caller's (possibly since-unpersisted) edge lineage.
+    * result persisted; the labels are driver literals, so nothing reads
+    * the caller's edge lineage again.
     */
-  private def localSolve(spark: org.apache.spark.sql.SparkSession,
-      nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val collected = edges.select(col("a"), col("b")).collect()
-    val labelDf = labelFrame(spark, nodes.schema.fields.head, unionFind(collected))
+  private def localSolve(nodes: DataFrame,
+      collected: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val labelDf = labelFrame(nodes.sparkSession, nodes.schema.fields.head, unionFind(collected))
     // materialize = false (r22): labelDf is a driver-local LocalRelation,
     // so the attach join's lineage (nodes scan + broadcast of literal
     // rows) never reads a retirable cache — the consumer's own sink can

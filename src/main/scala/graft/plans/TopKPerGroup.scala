@@ -29,16 +29,24 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * group per task, so memory is O(k·groups-per-task), independent of
   * input size.
   *
-  * Honest status on THIS Spark (4.x): the stock optimizer's
-  * `WindowGroupLimit` rank-limit pushdown now produces the same
-  * map-side bound for the row_number form — measured head-to-head at
-  * 50M rows / 100k groups / k=3 (tools/topkbench.scala, BASELINE r18):
-  * both plans shuffle exactly 9.6M records (= partitions × groups × k)
-  * and the codegen'd stock plan is ~1.4× faster than this RDD-based
-  * exec (2.75 vs 3.75 s), with exceptAll-verified identical output.
+  * Status on THIS Spark (4.x): the stock optimizer's `WindowGroupLimit`
+  * rank-limit pushdown now produces the same map-side bound for the
+  * row_number form; in both measurements below the two plans shuffle the
+  * same record count (= input partitions × groups × k) and give
+  * exceptAll-verified identical output. Which one is faster depends on
+  * the configuration (tools/topkbench.scala, 50M rows / 100k groups /
+  * k=3, median of three runs each):
+  *
+  *   - local[32], 32 shuffle partitions, 24 GB driver (BASELINE r18):
+  *     9.6M records each; the codegen'd stock plan 2.75 s, this
+  *     RDD-based exec 3.75 s (window ~1.4× faster).
+  *   - local[4], 16 shuffle partitions, 4 GB driver (commit `cd9c3dc`):
+  *     1.2M records each; window 30.1 s, this exec 16.5 s (this exec
+  *     ~1.8× faster).
+  *
   * The operator (and the TopKRewrite rule) stays as the extension-path
   * exemplar and the fallback for engines/shapes without the pushdown;
-  * production keys should — and do — use the window form.
+  * production keys use the window form.
   */
 case class TopKPerGroup(
     groupExprs: Seq[Expression],

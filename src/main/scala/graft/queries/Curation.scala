@@ -517,11 +517,13 @@ object Curation {
     * in the capped-Jaccard pair graph (isolated docs report 0) — the
     * diagnostic a dedup pipeline reads before choosing cluster retention
     * policy (a fat-tailed degree histogram means boilerplate families).
-    * Reuses LlmOps.jaccardPairs — same df-capped shingle equi-join, no
-    * all-pairs anywhere — then one symmetric union + count and a hash
-    * left join back onto documents. The degree table is O(|docs with a
-    * neighbor|), so it is NOT broadcast — the join shuffles on doc_id
-    * like any fact-fact equi-join.
+    * Reuses the LlmOps pair kernel (`pairEdges`) — same df-capped
+    * shingle equi-join, no all-pairs anywhere — then one symmetric union
+    * + count and a left join back onto documents. The degree table is
+    * O(|docs with a neighbor|): within the CC local-solve bound the edges
+    * are a driver literal and the join broadcasts it; over the bound they
+    * are the cached pair frame and the join shuffles on doc_id like any
+    * fact-fact equi-join.
     */
   private val graphDegree = Q("graph_degree",
     s"""WITH ${LlmOps.jaccardCte},
@@ -531,7 +533,7 @@ object Curation {
        |SELECT d.doc_id, CAST(coalesce(deg.degree, 0) AS BIGINT) AS degree
        |FROM documents d LEFT JOIN deg ON d.doc_id = deg.doc_id
        |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    val jp = LlmOps.jaccardPairs(s, d)
+    val jp = LlmOps.pairEdges(s, d)
     val sym = jp.select(col("da").as("a"))
       .unionByName(jp.select(col("db").as("a")))
     val deg = sym.groupBy(col("a").as("doc_id")).agg(count(lit(1)).as("degree"))

@@ -1292,51 +1292,16 @@ object LlmOps {
       |  FROM common JOIN sizes na ON da = na.doc_id JOIN sizes nb ON db = nb.doc_id
       |  WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= 0.5)""".stripMargin
 
-  /** Spark twin of `jaccardCte`: (da, db, jac) with jac >= 0.5. Skew
-    * guard: shingles appearing in > 50 docs of a language are dropped
-    * BEFORE sizing and joining — at 100 TB one stop-word shingle would
-    * otherwise make its join key quadratic and serialise a shuffle
-    * partition; Jaccard is then over each doc's rare-shingle set.
-    *
-    * Shuffle shape (r7): the doc-frequency cap and the per-doc set size
-    * are WINDOW counts over the gram table, not a groupBy + join-back and
-    * a sizes aggregation + two joins — two fewer shuffles and two fewer
-    * joins of the (large) gram table; `n` rides through the pair join so
-    * the Jaccard needs no re-join. Cache contract: the returned pair
-    * frame is persisted and already materialized (so the single grams
-    * intermediate could be retired here, eagerly, in one place — no
-    * concurrent stages racing to populate its cache); callers unpersist
-    * the result when done (Verify/Bench do it via `clearCache`).
-    */
   /** Shared clustering preamble for `dedup_cluster` / `dedup_retention`:
     * capped-Jaccard pair graph -> connected components over the
     * pair-connected subgraph ONLY (every other doc is trivially its own
     * singleton cluster, handled by the callers' left join + coalesce).
-    * Returns (p_id, lbl), persisted + materialized by the CC solver's
-    * contract. The pair frame is deliberately NOT retired here: on warm
-    * re-entry the cache entry belongs to an earlier caller (graph_degree
-    * before dedup_cluster is the composition graft.Caching documents),
-    * and the pair set is small by construction (jac >= 0.5 pairs), so it
-    * stays cached for the next composed query — dedup_retention after
-    * dedup_cluster reuses it — until the session owner's clearCache().
+    * Returns (p_id, lbl). The labels are memoized per cache entry of the
+    * session's pair frame ([[EntryGraph]]), so the second consumer in a
+    * session (dedup_retention after dedup_cluster) fires no job for them.
     */
-  private def clusterLabels(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    // persisted + materialized by contract; the materialization count IS
-    // the edge count (edges below is a 1:1 projection of jp), so it rides
-    // into ConnectedComponents' size bound instead of a second count job
-    // over the cached pair frame (r22; -1 on warm re-entry = count there)
-    val (jp, m) = jaccardPairsCounted(s, d)
-    val edges = jp.select(col("da").as("a"), col("db").as("b"))
-    // endpoints-only CC: the callers' left join + coalesce already makes
-    // every non-participant doc its own singleton cluster, so the label
-    // set only needs to cover edge endpoints — on the (typical) local
-    // path the labels come back as a driver-local literal with no
-    // attachment join and no cache to materialize (r13: two fewer
-    // shuffles + one fewer action per consumer under the driver bench's
-    // per-action contention exposure)
-    graft.operators.ConnectedComponents.minLabelFromEdges(edges, graphSizeHint = m)
-      .withColumnRenamed("node", "p_id")
-  }
+  private def clusterLabels(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    pairKernel(s, d).entry.labels
 
   /** Shared LSH candidate generator for `ann_lsh_bucket` / `knn_label_ann`:
     * 32 deterministic ±1 hash-sign hyperplanes over ×10⁶-quantized integer
@@ -1531,9 +1496,10 @@ object LlmOps {
   /** Shared pair statistics over the gram table: (da, db, c = shared
     * shingle count, na, nb = per-doc distinct-shingle sizes), a < b,
     * lang-blocked. NOT cached — each consumer filters to its own small
-    * pair set: jaccardPairs here materializes THAT via
-    * [[graft.Caching.materializeRetiring]], which also owns the gram
-    * cache lifecycle; Pipeline.dedup_containment pins the gram table with
+    * pair set. [[jaccardPairs]] caches THAT lazily and pins nothing else:
+    * the self-join reads the gram shuffle once (the second side is a
+    * `ReusedExchange`), so a gram pin would only add a job.
+    * Pipeline.dedup_containment pins the gram table with
     * [[graft.Caching.pinOnce]] and returns its pair plan unexecuted.
     * Returns (stats, grams).
     */
@@ -1560,23 +1526,96 @@ object LlmOps {
     ()
   }
 
+  /** Spark twin of `jaccardCte`: (da, db, jac) with jac >= 0.5. Skew
+    * guard: shingles appearing in > 50 docs of a language are dropped
+    * BEFORE sizing and joining — at 100 TB one stop-word shingle would
+    * otherwise make its join key quadratic and serialise a shuffle
+    * partition; Jaccard is then over each doc's rare-shingle set.
+    *
+    * Shuffle shape (r7): the doc-frequency cap and the per-doc set size
+    * are WINDOW counts over the gram table, not a groupBy + join-back and
+    * a sizes aggregation + two joins — two fewer shuffles and two fewer
+    * joins of the (large) gram table; `n` rides through the pair join so
+    * the Jaccard needs no re-join.
+    *
+    * Cache contract: every call in one session returns the SAME frame
+    * ([[PairKernel]]), persisted lazily, so no job runs here: the first
+    * sink over it fills the cache and later consumers read it. Callers
+    * retire it with `clearCache` (Verify/Bench) or `unpersist`.
+    */
   private[queries] def jaccardPairs(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    jaccardPairsCounted(s, d)._1
+    pairKernel(s, d).pairs
 
-  /** [[jaccardPairs]] plus its materialized pair count (-1 on warm
-    * re-entry): `clusterLabels` feeds the count straight into
-    * ConnectedComponents' edge-count bound, saving the re-count job over
-    * the cached pair frame (r22). */
-  private[queries] def jaccardPairsCounted(s: SparkSession, d: String)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    val (stats, grams) = pairStats(s, d)
-    val jp = stats
-      .filter(expr("cast(c as double) / (na + nb - c) >= 0.5"))
-      .select(col("da"), col("db"),
-        expr("cast(c as double) / (na + nb - c)").as("jac"))
-    // warm re-entry (graph_degree then dedup_ngram_jaccard in one session
-    // builds the IDENTICAL plan) touches nothing; the RETURNED jp is the
-    // caller's to retire (graft.Caching ownership contract)
-    graft.Caching.materializeRetiring(jp, grams)
+  /** The pair graph's edges (da, db), for the consumers that left-join a
+    * per-doc aggregate of them onto `documents` (graph_degree,
+    * dedup_rate_by_source). Within the CC local-solve bound they are a
+    * driver-local literal, so the planner sizes that join from real rows
+    * and broadcasts the small side; the lazily cached pair frame has no
+    * size until it is filled, and the join would shuffle `documents`.
+    * Over the bound they are the cached pair frame itself.
+    */
+  private[queries] def pairEdges(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    pairKernel(s, d).entry.edges
+
+  /** The pair-graph kernel of one (session, fixture dir): the pair frame,
+    * built and analysed once, and what its consumers derived from the
+    * cache entry it holds ([[EntryGraph]]). When that entry is gone
+    * (`clearCache`, `unpersist`, memo eviction) the next call re-persists
+    * the frame and drops what was derived, so it is recomputed from the
+    * new entry. Like the model memos, it assumes the fixture dir does not
+    * change under a live session. A case class, so that memo eviction
+    * finds and unpersists `frame`.
+    */
+  private final case class PairKernel(frame: org.apache.spark.sql.DataFrame) {
+    private var derived: Option[EntryGraph] = None
+
+    def pairs: org.apache.spark.sql.DataFrame = synchronized {
+      if (frame.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        derived = None
+      graft.Caching.ensureCached(frame)
+    }
+
+    def entry: EntryGraph = synchronized {
+      val jp = pairs
+      derived.getOrElse { val g = new EntryGraph(jp); derived = Some(g); g }
+    }
   }
+
+  /** The edges and CC labels of one cache entry of the pair frame, from
+    * ONE bounded collect of its edge list
+    * ([[graft.operators.ConnectedComponents.collectBounded]]), which also
+    * fills the entry if no sink has yet. Labels are endpoints-only: the
+    * callers' left join + coalesce already makes every non-participant
+    * doc its own singleton cluster, so on the (typical) local path they
+    * come back as a driver-local literal with no attachment join and no
+    * cache to fill (r13: two fewer shuffles and one fewer action per
+    * consumer).
+    */
+  private final class EntryGraph(jp: org.apache.spark.sql.DataFrame) {
+    private val ab = jp.select(col("da").as("a"), col("db").as("b"))
+    private val collected = graft.operators.ConnectedComponents.collectBounded(ab)
+
+    lazy val edges: org.apache.spark.sql.DataFrame = {
+      val onFrame = jp.select("da", "db")
+      collected.fold(onFrame)(rows => jp.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), onFrame.schema))
+    }
+
+    /** (p_id, lbl) over the pair endpoints. */
+    lazy val labels: org.apache.spark.sql.DataFrame = collected
+      .fold(graft.operators.ConnectedComponents.minLabelFromEdges(ab, localSolveMaxEdges = -1L))(
+        graft.operators.ConnectedComponents.endpointLabels(ab, _))
+      .withColumnRenamed("node", "p_id")
+  }
+
+  private val pairKernels = new graft.SessionMemo[String, PairKernel]
+
+  private def pairKernel(s: SparkSession, d: String): PairKernel =
+    pairKernels.getOrElseUpdate(s, d) { (s, d) =>
+      val (stats, _) = pairStats(s, d)
+      PairKernel(stats
+        .filter(expr("cast(c as double) / (na + nb - c) >= 0.5"))
+        .select(col("da"), col("db"),
+          expr("cast(c as double) / (na + nb - c)").as("jac")))
+    }
 }

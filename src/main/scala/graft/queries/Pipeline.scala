@@ -108,12 +108,12 @@ object Pipeline {
     // shared pair-statistics kernel with jaccardPairs — only the filter
     // predicate and reported metric differ. Single-consumption query, so
     // (r14) it returns the pair plan UNEXECUTED over the pinned gram
-    // table (Caching.pinOnce — 2 actions total) instead of
-    // materializeRetiring's pin+materialize+retire (3): the r13 forensic
-    // showed driver-bench inflation tracks action count under host
-    // contention, and the pairs set was materialized only to be read
-    // once by the sink anyway. The gram pin is the caller's to retire
-    // (clearCache, as Bench/Verify do).
+    // table (Caching.pinOnce — 2 actions total) instead of a pin, a
+    // materialization and a retire (3): the r13 forensic showed
+    // driver-bench inflation tracks action count under host contention,
+    // and the pairs set was materialized only to be read once by the
+    // sink anyway. The gram pin is the caller's to retire (clearCache,
+    // as Bench/Verify do).
     val (stats, grams) = LlmOps.pairStats(s, d)
     graft.Caching.pinOnce(grams)
     stats
@@ -146,7 +146,7 @@ object Pipeline {
        |  ${e6(DuckF, "sum(CASE WHEN dup.doc_id IS NULL THEN 0 ELSE 1 END)", "count(*)")} AS rate_e6
        |FROM documents d LEFT JOIN dup ON dup.doc_id = d.doc_id
        |GROUP BY d.source ORDER BY d.source""".stripMargin) { (s, d) =>
-    val pairs = LlmOps.jaccardPairs(s, d)
+    val pairs = LlmOps.pairEdges(s, d)
     val dup = pairs.select(col("da").as("doc_id"))
       .unionAll(pairs.select(col("db").as("doc_id")))
       .distinct()

@@ -53,4 +53,26 @@ class GraftSpec extends AnyFunSuite {
         cs.experimental.extraOptimizations.filterNot(_ == plans.TopKRewrite)
     }
   }
+
+  test("each function's register is check-then-add: a second call keeps the first registration") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = s.newSession() // a new session's registry has builtins only
+    val registry = fresh.sessionState.functionRegistry
+    val registrations: Seq[(org.apache.spark.sql.SparkSession => Unit, Seq[String])] = Seq(
+      (functions.DotProduct.register, Seq("dot_d")),
+      (functions.PolyHashArr.register, Seq("poly_hash_arr")),
+      (functions.Blooms.register, Seq("bloom_agg", "bloom_might_contain")),
+      (functions.MisraGries.register, Seq("freq_items")))
+    for ((register, names) <- registrations) {
+      val ids = names.map(FunctionIdentifier(_))
+      assert(!ids.exists(registry.functionExists), s"$names registered before the first call")
+      register(fresh)
+      val first = ids.map(registry.lookupFunction(_).get)
+      register(fresh)
+      // a re-registration would store a new ExpressionInfo
+      ids.zip(first).foreach { case (id, info) =>
+        assert(registry.lookupFunction(id).get eq info, s"${id.funcName} was registered again")
+      }
+    }
+  }
 }

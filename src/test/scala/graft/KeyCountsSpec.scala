@@ -86,18 +86,19 @@ class KeyCountsSpec extends AnyFunSuite {
     // r22: localSolve's label-attach cache is no longer counted eagerly
     // (labels are a driver-local LocalRelation — no retirable lineage), so
     // its materialization moved from a build-phase count job into the
-    // consumer's own run phase: build 9 -> 5, run 4 -> 6, total 13 -> 11
-    "embedding_cluster" -> (5, 6),
+    // consumer's own run phase: build 9 -> 5, run 4 -> 6, total 13 -> 11.
+    // CC's size test and edge collect are one bounded collect
+    // (limit(bound + 1)), not a count and a collect: build 5 -> 3
+    "embedding_cluster" -> (3, 6),
     "knn_label_ann" -> (0, 6),
     "token_pmi" -> (0, 12),
     "dedup_embedding" -> (0, 4),
     "normalize_expr" -> (0, 3),
     "text_bigram_logprob" -> (0, 7),
-    // r22: the pair-frame materialization count now doubles as the CC
-    // edge-count bound (jaccardPairsCounted -> graphSizeHint) and the
-    // warm gram kernel skips its redundant cache-read count
-    // (materializeRetiring pins cold-only) — build 14 -> 12
-    "dedup_cluster" -> (12, 5),
+    // the pair kernel pins no gram table and persists the pair frame
+    // lazily; the labels' one bounded collect fills it (no gram pin count,
+    // no pair count, no CC edge count) — build 12 -> 7
+    "dedup_cluster" -> (7, 5),
     "agg_approx_percentile" -> (5, 3),
     "text_keyword_extract" -> (0, 8))
 
@@ -117,19 +118,22 @@ class KeyCountsSpec extends AnyFunSuite {
     "corpus_novelty" -> (0L, 10920L),
     "dedup_calibration" -> (29403L, 108L),
     "dedup_chunk" -> (0L, 9426L),
-    // r22: the CC edge count rides the pair-frame materialization
-    // (jaccardPairsCounted -> graphSizeHint), so its 4 partial-count
-    // shuffle records are gone from the build phase: 81221 -> 81217
-    "dedup_cluster" -> (81217L, 1000L),
+    // the pair family's kernel runs no count: the gram pin's and the pair
+    // frame's 4 partial-count records each are gone, 81217 -> 81209. The
+    // bounded collect of the CC labels (dedup_cluster, dedup_retention)
+    // or of the local edges (graph_degree, dedup_rate_by_source) fills
+    // the lazily cached pair frame at build; dedup_ngram_jaccard's sink
+    // fills it, so its kernel records move to the run phase
+    "dedup_cluster" -> (81209L, 1000L),
     "dedup_containment" -> (81213L, 8L),
     "dedup_fuzzy" -> (27407L, 9568L),
     "dedup_incremental" -> (27407L, 4523L),
-    "dedup_ngram_jaccard" -> (81217L, 8L),
-    "dedup_rate_by_source" -> (81217L, 56L),
-    "dedup_retention" -> (81217L, 1000L), // r22: same cut as dedup_cluster
+    "dedup_ngram_jaccard" -> (0L, 81217L),
+    "dedup_rate_by_source" -> (81209L, 56L),
+    "dedup_retention" -> (81209L, 1000L),
     "dedup_strip" -> (1L, 10915L),
     "fn_explode" -> (0L, 32000L),
-    "graph_degree" -> (81217L, 516L),
+    "graph_degree" -> (81209L, 516L),
     "inverted_index" -> (0L, 11743L),
     "join_sortmerge" -> (0L, 13500L),
     "knn_label_ann" -> (0L, 18397L),
@@ -192,6 +196,19 @@ class KeyCountsSpec extends AnyFunSuite {
     // reads the pinned blocks in one job and shuffles nothing
     assert(pinned.build.jobs > 0 && pinned.build.shuffleWritten == 4)
     assert(pinned.run == Profile.Counts(1, 0, 0))
+  }
+
+  test("the pair kernel is built once per cache entry: dedup_retention after dedup_cluster fires no build job") {
+    def build(k: String) = Profile.measure(s, s"kernel/$k")(SparkEntry.queries(k)(s, d)).build
+    s.catalog.clearCache()
+    val cold = build("dedup_cluster")
+    assert(cold.jobs > 0)
+    assert(build("dedup_retention") == Profile.Counts.zero)
+    // clearCache drops the entry and the labels derived from it, so the
+    // next consumer runs the kernel's one bounded collect again
+    s.catalog.clearCache()
+    assert(build("dedup_retention") == cold)
+    s.catalog.clearCache()
   }
 
   test("Profile counts read right after the drain are final") {

@@ -567,8 +567,15 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     "dedup_fuzzy" -> 1,
     "dedup_incremental" -> 1,
     "dedup_name_variants" -> 2,
-    "dedup_ngram_jaccard" -> 1,
-    "dedup_rate_by_source" -> 2,
+    // the pair kernel pins no gram table, so the walk of its cached
+    // frame's INITIAL plan meets both sides of the gram self-join; at run
+    // time the second side is a ReusedExchange of the first, one
+    // documents scan in all (asserted in ScaleSpec "the pair kernel
+    // shuffles the gram table once")
+    "dedup_ngram_jaccard" -> 2,
+    // the pair edges are a driver literal (LlmOps.pairEdges): only the
+    // documents scan of the join remains, 2 -> 1 (same for graph_degree)
+    "dedup_rate_by_source" -> 1,
     "dedup_retention" -> 1,
     "dedup_simhash" -> 1,
     "dedup_strip" -> 1,
@@ -616,7 +623,7 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     "forecast_seasonal_naive" -> 1,
     "gen_grid" -> 0,
     "gen_sequence" -> 0,
-    "graph_degree" -> 2,
+    "graph_degree" -> 1,
     "graph_pagerank" -> 0,
     "histogram_equidepth" -> 1,
     "histogram_fixed" -> 1,

@@ -64,6 +64,16 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     }
   }
 
+  /** Component-min label of every node 0 until n, by textbook union-find. */
+  private def referenceLabels(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+    edges.foreach { case (a, b) => parent(find(a.toInt)) = find(b.toInt) }
+    (0 until n).map { v =>
+      v.toLong -> (0 until n).filter(u => find(u) == find(v)).min.toLong
+    }.toMap
+  }
+
   test("ConnectedComponents.minLabel matches reference union-find on random graphs") {
     import graft.operators.ConnectedComponents
     import s.implicits._
@@ -71,13 +81,7 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     for (trial <- 1 to 4) {
       val n = 20 + rnd.nextInt(30)
       val edges = Seq.fill(n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      // reference: textbook union-find over the same edges
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) => parent(find(a.toInt)) = find(b.toInt) }
-      val expected = (0 until n).map { v =>
-        v.toLong -> (0 until n).filter(u => find(u) == find(v)).min.toLong
-      }.toMap
+      val expected = referenceLabels(n, edges)
       // both execution paths must agree with the reference: the forced
       // distributed loop AND the default (here: driver-local union-find)
       val loop = ConnectedComponents.minLabel(
@@ -109,6 +113,34 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fromEdgesLoop == expParticipants,
         s"minLabelFromEdges loop path, trial $trial (n=$n, edges=$edges)")
+    }
+  }
+
+  test("ConnectedComponents' local-solve bound is inclusive: m edges solve locally, m - 1 run the loop") {
+    import graft.operators.ConnectedComponents
+    import s.implicits._
+    val rnd = new scala.util.Random(7L)
+    val n = 40
+    val edgeList = Seq.fill(24)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val m = edgeList.size.toLong
+    val expected = referenceLabels(n, edgeList)
+    val participants = edgeList.flatMap(e => Seq(e._1, e._2)).toSet
+    val nodes = (0L until n.toLong).toDF("node")
+    val edges = edgeList.toDF("a", "b")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the loop's labels are re-wrapped RDDs; the local path's are literals
+    def looped(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r }.isDefined
+    for ((bound, loop) <- Seq(m -> false, (m - 1) -> true)) {
+      val all = ConnectedComponents.minLabel(nodes, edges, localSolveMaxEdges = bound)
+      assert(labels(all) == expected, s"minLabel at bound $bound of $m edges")
+      assert(looped(all) == loop, s"minLabel took the wrong path at bound $bound of $m edges")
+      val ends = ConnectedComponents.minLabelFromEdges(edges, localSolveMaxEdges = bound)
+      assert(labels(ends) == expected.view.filterKeys(participants).toMap,
+        s"minLabelFromEdges at bound $bound of $m edges")
+      assert(looped(ends) == loop,
+        s"minLabelFromEdges took the wrong path at bound $bound of $m edges")
     }
   }
 
@@ -189,6 +221,28 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert("df#\\d+L? <= 50".r.findFirstIn(plan).isDefined,
       "doc-frequency cap must survive optimization")
     assert(!plan.contains("CartesianProduct"))
+  }
+
+  test("the pair kernel shuffles the gram table once: its self-join reuses the gram exchange") {
+    // jaccardPairs caches the pair frame and pins no gram table; that is
+    // free only because both sides of the gram self-join read ONE shuffle
+    // of the gram pipeline (a ReusedExchange), not one each
+    s.catalog.clearCache()
+    val q = SparkEntry.queries("dedup_ngram_jaccard")(s, d)
+    q.write.format("noop").mode("overwrite").save()
+    val kernel = q.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
+    }.getOrElse(fail("the pair frame is not cached"))
+    val plan = kernel match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        assert(a.isFinalPlan, s"the sink did not fill the pair frame:\n$a")
+        a.executedPlan.toString
+      case other => other.toString
+    }
+    assert(plan.contains("ReusedExchange"), plan)
+    // the gram pipeline starts with one repartition of the documents scan
+    assert("RoundRobinPartitioning".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("InMemoryTableScan"), s"a gram table is pinned:\n$plan")
   }
 
   test("join_theta_range joins equi on (user, time bucket), band as residual") {
