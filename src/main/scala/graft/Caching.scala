@@ -3,44 +3,36 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Cache-ownership contract for the dedup/graph operator family.
+/** One way to share a frame between several consumers: persist it
+  * lazily with [[Caching.ensureCached]]. No job runs at construction; the
+  * first action that reads the frame fills the cache and every later read
+  * is an `InMemoryTableScan`. Where every consumer reads the shared frame
+  * through one exchange, Spark's exchange reuse already computes it once
+  * (a `ReusedExchange`), and no cache is needed at all.
   *
-  * Several operators (`LlmOps.jaccardPairs`, `TextSim.minhashNearDupPairs`,
-  * `ConnectedComponents.minLabel` / `alternatingStars`) persist DataFrames:
+  * Ownership, for the operators that persist (`LlmOps.jaccardPairs`,
+  * `TextSim.minhashNearDupPairs`, `ConnectedComponents.minLabel`,
+  * `RangePrefixSum.withRunningSum`):
   *
-  *   - INTERMEDIATES the returned frame no longer needs (CC's per-round
-  *     label frames and edge caches) are owned by the operator — it
-  *     materializes them in one job (so concurrent consumer stages never
-  *     race to populate the cache) and unpersists them before returning.
-  *     Callers never see these.
+  *   - INTERMEDIATES the returned frame no longer needs (the CC loop's
+  *     per-round label frames and edge caches) belong to the operator,
+  *     which unpersists them before returning. Callers never see these.
   *   - Everything the RETURNED result still depends on is the CALLER's to
   *     retire: the returned frame itself where the operator persisted it
   *     (jaccardPairs' pair graph, minLabel's labels), and ALSO any cache
-  *     the returned frame still reads lazily: `minhashNearDupPairs`
-  *     returns an UNEXECUTED plan over its pinned gram table, so that pin
-  *     must outlive the caller's consumption of the result. Unpersist
+  *     the returned frame still reads lazily (`minhashNearDupPairs`
+  *     returns an unexecuted plan over its cached gram table). Unpersist
   *     per-frame when done, or call `spark.catalog.clearCache()` between
-  *     queries the way `Verify`/`Bench` do — nothing uses RDD-level
+  *     queries the way `Verify`/`Bench` do. Nothing uses RDD-level
   *     persistence or checkpoints, so one `clearCache()` always cleans
   *     the whole session (asserted in ScaleSpec "dedup family leaves
   *     nothing behind").
   *
-  * Two ways to persist, by who reads the frame:
-  *
-  *   - [[ensureCached]] persists LAZILY: the first action over the frame
-  *     fills the cache and no job runs at construction. jaccardPairs'
-  *     pair graph is persisted this way: its consumers are separate
-  *     queries that run one after another, and the first one's sink or
-  *     collect fills it for the rest.
-  *   - [[pinOnce]] persists and counts at once, for a frame that several
-  *     independent subtrees of one plan read and that must be populated
-  *     before they run.
-  *
   * Composed queries re-enter these operators with identical plans (e.g.
   * `dedup_cluster` after `graph_degree` both read the same pair graph in
-  * one session). Both calls look the plan up first, so re-entry reuses
-  * the cache without a CacheManager "already cached" warning, which would
-  * also mask genuine double-cache bugs.
+  * one session). `ensureCached` looks the plan up first, so re-entry
+  * reuses the cache without a CacheManager "already cached" warning,
+  * which would also mask genuine double-cache bugs.
   */
 object Caching {
 
@@ -52,19 +44,6 @@ object Caching {
     */
   def ensureCached(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.persist() else df
-
-  /** Pin `df` COLD-ONLY and materialize the pin in one job; a warm call
-    * touches nothing — not even a count. For operators that return an
-    * UNEXECUTED plan over the pinned frame (the minhashNearDupPairs
-    * shape): one action here plus the consumer's own sink = 2 actions
-    * total — and the r13 forensic showed driver-bench inflation tracks
-    * the ACTION count under host contention. The pin is the caller's to
-    * retire (clearCache / unpersist, per the ownership contract above).
-    */
-  def pinOnce(df: DataFrame): DataFrame = {
-    if (df.storageLevel == StorageLevel.NONE) { df.persist(); df.count() }
-    df
-  }
 }
 
 /** Session-keyed memo for deterministic driver-side model state (trained

@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * the distance to the minimum each round, giving O(log diameter) rounds
   * instead of O(diameter) — a 200-node path converges in ~9 rounds (see
   * ScaleSpec). This is the standard label-propagation + path-compression
-  * scheme; for hub-heavy graphs the edge-rewiring large-star/small-star
-  * variant (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond") is implemented as `alternatingStars` below.
+  * scheme.
   *
   * Cost shape per round: ONE shuffle join of the (cached) edge list with
   * the label table + one aggregation, plus a label-table self-join (tiny:
@@ -224,42 +222,23 @@ object ConnectedComponents {
 
   /** Driver-side union-find over the edge list [[collectBounded]]
     * returned; `nodes` never leaves the cluster. Matches the loop's
-    * output contract exactly: (node, lbl = component-min node id),
-    * result persisted; the labels are driver literals, so nothing reads
-    * the caller's edge lineage again.
+    * output contract exactly: (node, lbl = component-min node id), nodes
+    * the labels don't cover (isolated vertices) labelling themselves —
+    * the loop's self-loop semantics. The label map is broadcast-joined
+    * onto `nodes` and the result persisted lazily: the labels are driver
+    * literals, so nothing reads the caller's edge lineage again and the
+    * consumer's own first action fills the cache.
     */
   private def localSolve(nodes: DataFrame,
       collected: Array[org.apache.spark.sql.Row]): DataFrame = {
-    val labelDf = labelFrame(nodes.sparkSession, nodes.schema.fields.head, unionFind(collected))
-    // materialize = false (r22): labelDf is a driver-local LocalRelation,
-    // so the attach join's lineage (nodes scan + broadcast of literal
-    // rows) never reads a retirable cache — the consumer's own sink can
-    // populate the persisted frame without an extra count job here
-    attachLabels(nodes, labelDf, broadcastLabels = true, materialize = false)
-  }
-
-  /** Attach a (node, lbl) label frame to `nodes`; nodes the labels don't
-    * cover (isolated vertices) label themselves — same semantics as the
-    * loop's self-loop rows. Result persisted; `materialize` additionally
-    * counts it so consumers never recompute through the caller's
-    * possibly-retired lineage — REQUIRED when `labels` still reads a
-    * cache the caller is about to unpersist (alternatingStars' edge
-    * cache); skippable when `labels` is a driver-local literal
-    * (localSolve), where the lazy cache populates on the consumer's own
-    * first action instead of an extra count job (r22).
-    */
-  private def attachLabels(nodes: DataFrame, labels: DataFrame,
-      broadcastLabels: Boolean, materialize: Boolean = true): DataFrame = {
-    val l = labels.toDF("e_node", "e_lbl")
+    val l = labelFrame(nodes.sparkSession, nodes.schema.fields.head, unionFind(collected))
+      .toDF("e_node", "e_lbl")
     // ensureCached: composed queries (dedup_retention then dedup_cluster)
     // re-derive the same label plan in one session — re-persisting an
     // already-cached plan is a CacheManager warning (graft.Caching)
-    val out = graft.Caching.ensureCached(nodes.select(col("node"))
-      .join(if (broadcastLabels) broadcast(l) else l,
-        col("node") === col("e_node"), "left_outer")
+    graft.Caching.ensureCached(nodes.select(col("node"))
+      .join(broadcast(l), col("node") === col("e_node"), "left_outer")
       .select(col("node"), coalesce(col("e_lbl"), col("node")).as("lbl")))
-    if (materialize) out.count()
-    out
   }
 
   /** Re-wrap a DataFrame as a LogicalRDD so iterative loops keep O(1)
@@ -326,77 +305,5 @@ object ConnectedComponents {
     require(converged,
       s"connected components did not converge within $maxIter rounds — component diameter exceeds 2^$maxIter")
     labels
-  }
-
-  /** Alternating large-star / small-star rounds (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond") — the extreme-scale
-    * variant for graphs where min-label propagation's per-round join
-    * would concentrate a hub node's whole neighbourhood in one task:
-    * both star operations REWIRE edges toward per-neighbourhood minima,
-    * so hub degrees shrink as the graph contracts, and the edge set
-    * converges to stars rooted at each component's minimum in
-    * O(log n) rounds.
-    *
-    * Per round: two groupBy(min)+join passes (each shuffle-parallel on
-    * node id, map-side combinable) plus a symmetric-difference
-    * convergence check. Same output contract as `minLabel`; validated
-    * against reference union-find in ScaleSpec. `minLabel` remains the
-    * default path — this one trades a costlier round for hub-proof
-    * degree contraction.
-    */
-  def alternatingStars(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = nodes.sparkSession
-    def canon(df: DataFrame): DataFrame = df
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    var e = canon(edges).persist()
-    val m = e.count()
-    // same width rule as minLabel: the loop's shuffles sized to the edge
-    // count (restored before the corpus-sized label attachment below)
-    val p = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (m / 200000L).toInt + 1))
-    val origParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    var iter = 0
-    var converged = m == 0L // an edgeless graph is already all singletons
-    try {
-      while (!converged && iter < maxIter) {
-        // large-star: every node connects its strictly LARGER neighbours
-        // to the minimum of its neighbourhood (incl. itself)
-        val sym = e.select(col("a"), col("b"))
-          .union(e.select(col("b").as("a"), col("a").as("b")))
-        val lsMin = sym.groupBy("a")
-          .agg(least(min(col("b")), first(col("a"))).as("m"))
-        val ls = canon(sym.join(lsMin, "a").filter(col("b") > col("a"))
-          .select(col("b").as("a"), col("m").as("b")))
-        // small-star: orient edges high -> low; every node connects its
-        // smaller neighbours (and itself) to their minimum
-        val o = ls.select(greatest(col("a"), col("b")).as("u"),
-          least(col("a"), col("b")).as("v"))
-        val ssMin = o.groupBy("u").agg(min(col("v")).as("m"))
-        val ss = canon(
-          o.join(ssMin, "u").select(col("v").as("a"), col("m").as("b"))
-            .union(ssMin.select(col("u").as("a"), col("m").as("b"))))
-        val next = rewrap(ss).persist()
-        // converged when the round was a no-op: both sets are distinct by
-        // canon, so equal cardinality + empty one-way difference suffices
-        // (ONE anti-join, not two)
-        converged = next.count() == e.count() && next.except(e).isEmpty
-        e.unpersist(blocking = false)
-        e = next
-        iter += 1
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origParts)
-    require(converged,
-      s"alternating stars did not converge within $maxIter rounds")
-    // fixpoint edges are stars (member, component-min); add roots; the
-    // attachment join runs at the restored session width (nodes may be
-    // corpus-sized even when the pair graph is tiny)
-    val member = e.select(col("b").as("node"), col("a").as("lbl"))
-      .union(e.select(col("a").as("node"), col("a").as("lbl")))
-      .distinct()
-    val out = attachLabels(nodes, member, broadcastLabels = false)
-    e.unpersist(blocking = false)
-    out
   }
 }

@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
   * boundaries (equal-value rows are interchangeable only if `order` is a
   * TOTAL order — the caller must include a tie-breaking key).
   *
-  * The range-partitioned frame is pinned (Caching.pinOnce) because two
-  * passes read it; per the [[graft.Caching]] ownership contract the pin
-  * is the caller's to retire (clearCache between queries, as
-  * Verify/Bench do).
+  * Both passes read the range-partitioned frame, so it is cached lazily
+  * (`Caching.ensureCached`): pass 1 fills the cache and pass 2 reads the
+  * same rows. Per the [[graft.Caching]] ownership contract the cache is
+  * the caller's to retire (clearCache between queries, as Verify/Bench
+  * do).
   */
 object RangePrefixSum {
 
@@ -44,7 +45,7 @@ object RangePrefixSum {
     require(df.schema(vIdx).dataType.isInstanceOf[DecimalType],
       s"$valueCol must be DECIMAL for exact accumulation, got ${df.schema(vIdx).dataType}")
     val spark = df.sparkSession
-    val parts = graft.Caching.pinOnce(
+    val parts = graft.Caching.ensureCached(
       df.repartitionByRange(order: _*).sortWithinPartitions(order: _*))
     // pass 1: one exact BigDecimal per partition — tiny driver result
     val partTotals: Array[(Int, java.math.BigDecimal)] = parts.rdd

@@ -97,20 +97,20 @@ object Corpus {
     * order per doc without any global sort. Nothing touches the driver.
     *
     * The chunk explode feeds three consumers (dup aggregation, anti-join
-    * probe, per-doc totals). Since r17 it is PINNED, not recomputed: the
+    * probe, per-doc totals). Since r17 it is CACHED, not recomputed: the
     * scan-count audit showed the three recomputations each re-read
-    * documents (3 parquet scans), and under driver-host contention the
-    * extra jobs dominate the cache's materialization cost. The pin is
-    * O(corpus tokens) — unlike the other pin sites, which are bounded
-    * (vocabulary/user/1-row domains) — so the trade is explicit:
-    * MEMORY_AND_DISK (pinOnce's default) spills chunk batches to local
-    * disk instead of failing, the pinned projection is already the
+    * documents (3 parquet scans), and the consumers read it through
+    * different exchanges, so Spark's exchange reuse cannot share it. The
+    * cache is O(corpus tokens) — unlike the other cache sites, which are
+    * bounded (vocabulary/user/1-row domains) — so the trade is explicit:
+    * MEMORY_AND_DISK (the persist default) spills chunk batches to local
+    * disk instead of failing, the cached projection is already the
     * minimal 3 columns every consumer needs (doc_id, ci, chunk — chunk
-    * itself IS the payload, so no narrower pin exists), and a 100 TB
+    * itself IS the payload, so no narrower cache exists), and a 100 TB
     * deployment that would rather pay 3 map-only scans than a
-    * corpus-sized spill simply drops the pinOnce wrapper — the plan is
-    * correct either way; only the scan count changes (PlansSpec pins the
-    * cached shape at 1).
+    * corpus-sized spill simply drops the ensureCached wrapper — the plan
+    * is correct either way; only the scan count changes (PlansSpec pins
+    * the cached shape at 1).
     */
   private val dedupStrip = Q("dedup_strip",
     s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -126,10 +126,10 @@ object Corpus {
        |  t.n_chunks - coalesce(a.n_kept, CAST(0 AS BIGINT)) AS n_removed
        |FROM tot t LEFT JOIN agg a ON t.doc_id = a.doc_id
        |ORDER BY t.doc_id""".stripMargin) { (s, d) =>
-    // pinned: dup, the anti-join probe side and the per-doc totals are
-    // three consumers — unpinned each re-tokenized documents (r17 scan
-    // audit: 3 scans -> 1, the source_overlap discipline)
-    val ch = graft.Caching.pinOnce(Tables.documents(s, d)
+    // cached: dup, the anti-join probe side and the per-doc totals are
+    // three consumers — uncached each re-tokenized documents (r17 scan
+    // audit: 3 scans -> 1)
+    val ch = graft.Caching.ensureCached(Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(1, (size(w) + 5) div 6), i -> concat_ws(' ', slice(w, (i-1)*6+1, 6)))")))
@@ -182,14 +182,14 @@ object Corpus {
        |FROM ov JOIN sz sa ON src_a = sa.source JOIN sz sb ON src_b = sb.source
        |ORDER BY src_a, src_b""".stripMargin) { (s, d) =>
     // the distinct chunk table has THREE consumers (sizes + both self-join
-    // sides) — pin it, the dedup sig-table discipline (r17 scan audit:
-    // unpinned, documents was re-tokenized 4× in one plan)
-    val ch = graft.Caching.pinOnce(Tables.documents(s, d)
+    // sides); all three read it through its distinct's one exchange,
+    // which Spark reuses, so documents is tokenized once without a cache
+    val ch = Tables.documents(s, d)
       .select(col("source"), split(col("text"), " ").as("w"))
       .select(col("source"), explode(expr(
         "transform(sequence(1, (size(w) + 5) div 6), i -> concat_ws(' ', slice(w, (i-1)*6+1, 6)))"))
         .as("chunk"))
-      .distinct())
+      .distinct()
     val sz = ch.groupBy("source").agg(count(lit(1)).as("n"))
     val ov = ch.as("a").join(ch.as("b"),
         expr("a.chunk = b.chunk AND a.source < b.source"))
@@ -391,12 +391,13 @@ object Corpus {
           s" FROM m WHERE ${Slope(DuckF).nonDegenerate}",
           Slope.stages(DuckF))} q""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    // the 1-row bounds frame feeds BOTH bucketings — pinned so the doc-id
-    // min/max scan runs once, not once per broadcast consumer (r17 scan
-    // audit: 4 scans -> 3; the remaining three are the honest passes of
-    // this algorithm — bounds, per-bucket doc counts, trigram first-seen)
-    val b = graft.Caching.pinOnce(docs.agg(min("doc_id").as("lo"),
-      expr("greatest(max(doc_id) - min(doc_id), 1)").as("dl")))
+    // the 1-row bounds frame feeds BOTH bucketings through one broadcast
+    // exchange that Spark reuses, so the doc-id min/max scan runs once,
+    // not once per consumer (r17 scan audit: 4 scans -> 3; the remaining
+    // three are the honest passes of this algorithm — bounds, per-bucket
+    // doc counts, trigram first-seen)
+    val b = docs.agg(min("doc_id").as("lo"),
+      expr("greatest(max(doc_id) - min(doc_id), 1)").as("dl"))
     def bucket(idCol: String) =
       s"least(cast(16 as bigint), greatest(cast(1 as bigint)," +
         s" (16 * ($idCol - lo) + dl - 1) div dl))"
@@ -471,9 +472,10 @@ object Corpus {
         "transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3)))"))
         .as("tri"))
       .groupBy("tri").agg(count(lit(1)).as("tf"))
-    val pinned = graft.Caching.pinOnce(tf)
-    val tot = pinned.agg(count(lit(1)).as("n_types"), sum("tf").as("total_occ"))
-    val top = pinned.orderBy(col("tf").desc, col("tri")).limit(100)
+    // both consumers read tf through its aggregate's one exchange, which
+    // Spark reuses: the trigram explode runs once without a cache
+    val tot = tf.agg(count(lit(1)).as("n_types"), sum("tf").as("total_occ"))
+    val top = tf.orderBy(col("tf").desc, col("tri")).limit(100)
       .agg(count(lit(1)).as("n_top"), sum("tf").as("top_occ"))
     tot.crossJoin(top)
       .select(col("n_types"), col("total_occ"), col("n_top"), col("top_occ"),

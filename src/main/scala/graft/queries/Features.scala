@@ -244,13 +244,12 @@ object Features {
        |  SELECT b FROM tri UNION ALL
        |  SELECT c FROM tri) t
        |GROUP BY node ORDER BY node""".stripMargin) { (s, d) =>
-    // pin the edge list: the triangle join consumes e THREE times, and
-    // unpinned each copy re-ran the banded levenshtein self-join (r17
-    // scan audit: 18 part scans / 9 DP joins in one plan — the edge
-    // table is vocabulary-bounded, so one cached materialization is the
-    // honest shape); explode(array(…)) replaces the 3× unionAll of tri
-    // so the triangle join itself also runs once, not three times
-    val e = graft.Caching.pinOnce(variantEdges(s, d, maxDist = 3)._2)
+    // the triangle join consumes e THREE times; all three read the edge
+    // list through one exchange that Spark reuses, so the banded
+    // levenshtein self-join runs once without a cache;
+    // explode(array(…)) replaces the 3× unionAll of tri so the triangle
+    // join itself also runs once, not three times
+    val e = variantEdges(s, d, maxDist = 3)._2
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"), col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
@@ -398,13 +397,12 @@ object Features {
 
   /** Shared basket builder for [[basketPairs]] / [[basketLift]]: per-order
     * sorted distinct part-type arrays (head noun of p_name; part dim
-    * broadcast). Pinned via pinOnce (r18, VERDICT r17 item 4): basket_lift
-    * consumes it from three subtrees, and the lazy ensureCached form let
-    * those consumers race to populate the cache at sink time — measured 16
-    * run jobs, the contention-amplification exposure the r17 action-count
-    * forensic identified. Materializing the pin up front is one job and
-    * every consumer stage then reads the built cache. The caller contract
-    * is the usual graft.Caching one (harness clearCache retires it).
+    * broadcast). Cached lazily: basket_lift consumes it from three
+    * subtrees, and the first one's stage fills the cache for the other
+    * two; without a cache each subtree re-runs the lineitem aggregate
+    * (basket_lift's written shuffle records 1685 -> 3011 at sf0.001). The
+    * caller contract is the usual graft.Caching one (harness clearCache
+    * retires it).
     */
   private def baskets(s: SparkSession, d: String): DataFrame = {
     val b = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
@@ -413,7 +411,7 @@ object Features {
         col("l_partkey") === col("p_partkey"))
       .groupBy("l_orderkey")
       .agg(expr("array_sort(array_distinct(collect_list(typ)))").as("ts"))
-    graft.Caching.pinOnce(b)
+    graft.Caching.ensureCached(b)
   }
 
   /** The pair-explosion expression both basket ops share. The outer
@@ -852,7 +850,7 @@ object Features {
     // 1.86 s — the persist+count+cache-write of the corpus-scale frame
     // cost more than nc's duplicated 2-column scan. At 100 TB the trade
     // is even more lopsided: the pin would materialize a customer×part
-    // cache (the pinOnce-spill class VERDICT r18 item 3 flags), while
+    // cache (the corpus-sized spill class VERDICT r18 item 3 flags), while
     // the nc subtree is a combinable partial countDistinct that never
     // holds state beyond its aggregation buffers.
     def cp = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))

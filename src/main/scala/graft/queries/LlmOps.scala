@@ -294,10 +294,8 @@ object LlmOps {
       val sig = graft.Caching.ensureCached(
         shingles.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
           .select(col("doc_id"), sigBits.reduce(_ bitwiseOR _).as("sig"))
-      ) // persisted: two band-join branches below; tiny (one long per doc)
-      sig.count() // pin in one job — the two branches' map stages would
-                  // otherwise race to populate the cache, each re-running
-                  // the shingle pipeline
+      ) // cached: two band-join branches below read it; tiny (one long
+        // per doc), and the first branch's stage fills it
       val bands = sig.select(col("doc_id"), col("sig"),
         explode(expr("array(0, 1, 2, 3, 4, 5, 6, 7)")).as("bi"))
         .withColumn("bv", expr("(shiftright(sig, bi * 8)) & 255"))
@@ -1468,7 +1466,7 @@ object LlmOps {
     * `pairStatsCte` prefix; consumed by `jaccardPairs` (jac >= 0.5) and
     * `Pipeline.dedup_containment` (containment >= 0.8).
     */
-  private[queries] def gramTable(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def gramTable(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), split(lower(col("text")), " ").as("w"))
@@ -1499,8 +1497,8 @@ object LlmOps {
     * pair set. [[jaccardPairs]] caches THAT lazily and pins nothing else:
     * the self-join reads the gram shuffle once (the second side is a
     * `ReusedExchange`), so a gram pin would only add a job.
-    * Pipeline.dedup_containment pins the gram table with
-    * [[graft.Caching.pinOnce]] and returns its pair plan unexecuted.
+    * Pipeline.dedup_containment caches the gram table lazily with
+    * [[graft.Caching.ensureCached]] and returns its pair plan unexecuted.
     * Returns (stats, grams).
     */
   private[queries] def pairStats(s: SparkSession, d: String)
@@ -1512,18 +1510,6 @@ object LlmOps {
       .groupBy("da", "db").agg(count(lit(1)).as("c"),
         min("na").as("na"), min("nb").as("nb"))
     (stats, grams)
-  }
-
-  /** Bench-side warm entry for the rare-shingle pair kernel — the twin of
-    * [[graft.queries.TextSim.warmMinhashKernel]]: pin the df-capped gram
-    * table so a timed jaccard/containment-family key finds it warm (the
-    * kernel is the family's shared persisted artifact; see the r15
-    * verdict's untimed-kernel instruction). Caller retires the pin.
-    */
-  def warmPairKernel(s: SparkSession, d: String): Unit = {
-    val (_, grams) = pairStats(s, d)
-    graft.Caching.pinOnce(grams)
-    ()
   }
 
   /** Spark twin of `jaccardCte`: (da, db, jac) with jac >= 0.5. Skew

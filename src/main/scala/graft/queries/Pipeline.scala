@@ -106,16 +106,14 @@ object Pipeline {
        |  WHERE 5 * c >= 4 * least(na.n, nb.n))
        |SELECT da, db, containment FROM cpairs ORDER BY da, db""".stripMargin) { (s, d) =>
     // shared pair-statistics kernel with jaccardPairs — only the filter
-    // predicate and reported metric differ. Single-consumption query, so
-    // (r14) it returns the pair plan UNEXECUTED over the pinned gram
-    // table (Caching.pinOnce — 2 actions total) instead of a pin, a
-    // materialization and a retire (3): the r13 forensic showed
-    // driver-bench inflation tracks action count under host contention,
-    // and the pairs set was materialized only to be read once by the
-    // sink anyway. The gram pin is the caller's to retire (clearCache,
-    // as Bench/Verify do).
+    // predicate and reported metric differ. Returns the pair plan
+    // UNEXECUTED over the lazily cached gram table: the sink fills the
+    // cache and both sides of the self-join read it. Without the cache
+    // the second side is a ReusedExchange of the gram shuffle, which
+    // reads that shuffle twice. The cache is the caller's to retire
+    // (clearCache, as Bench/Verify do).
     val (stats, grams) = LlmOps.pairStats(s, d)
-    graft.Caching.pinOnce(grams)
+    graft.Caching.ensureCached(grams)
     stats
       .filter(expr("5 * c >= 4 * least(na, nb)"))
       .select(col("da"), col("db"),
@@ -180,11 +178,11 @@ object Pipeline {
        |SELECT r.doc_id, r.lang, r.source FROM r, m
        |WHERE r.rn <= m.mn ORDER BY r.doc_id""".stripMargin) { (s, d) =>
     // ONE window pass computes rank and class size together (the
-    // class_rebalance shape, r17): pinned as a narrow projection so the
+    // class_rebalance shape, r17): cached as a narrow projection so the
     // min-class scalar and the final filter are cache reads instead of
     // a second document scan (2 scans -> 1)
     val lbl = Window.partitionBy("lang")
-    val w = graft.Caching.pinOnce(Tables.documents(s, d)
+    val w = graft.Caching.ensureCached(Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"))
       .withColumn("rn", row_number().over(lbl.orderBy("doc_id")))
       .withColumn("n", count(lit(1)).over(lbl)))

@@ -238,7 +238,8 @@ object Relational {
     // that a plain equi-join silently DROPS. Spark keeps EqualNullSafe a
     // hash-joinable equi key (coalesce-struct rewrite), so the plan is
     // still a hash join, not an NLJ. One scan: the (bucket, type) counts
-    // pin once (Caching.pinOnce) and both type slices read the cache.
+    // are cached (Caching.ensureCached) and both type slices read the
+    // cache.
     // Null ORDERING is engine-divergent (Spark ASC = NULLS FIRST,
     // DuckDB = NULLS LAST) — pinned explicitly on both engines.
     Q("join_null_safe",
@@ -254,7 +255,7 @@ object Relational {
          |JOIN (SELECT bucket, n FROM g WHERE event_type = 'view') b
          |  ON a.bucket IS NOT DISTINCT FROM b.bucket
          |ORDER BY a.bucket NULLS FIRST""".stripMargin) { (s, d) =>
-      val g = graft.Caching.pinOnce(Tables.events(s, d)
+      val g = graft.Caching.ensureCached(Tables.events(s, d)
         .filter(col("event_type").isin("click", "view"))
         .select(expr("nullif(cast(get_json_object(props, '$.k') as bigint)" +
           " div 10, 0)").as("bucket"), col("event_type"))
@@ -455,14 +456,14 @@ object Relational {
           .join(prev, "user_id")
           .filter(col("ts_us") > col(prevT) && col("ts_us") <= col(prevT) + winUs)
           .groupBy("user_id").agg(min("ts_us").as(outT))
-      // pin each funnel step: v is consumed by c AND its own step count,
-      // c by p AND its count — unpinned, the final union re-derived v
+      // cache each funnel step: v is consumed by c AND its own step count,
+      // c by p AND its count — uncached, the final union re-derived v
       // three times and c twice (r17 scan audit: 6 event scans where 3
       // suffice; the step tables are user-bounded, so caching them is
       // the honest at-scale shape — one fact pass per funnel step)
-      val v = graft.Caching.pinOnce(e.filter(col("event_type") === "view")
+      val v = graft.Caching.ensureCached(e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts_us").as("t1")))
-      val c = graft.Caching.pinOnce(nextStep(v, "t1", "click", "t2"))
+      val c = graft.Caching.ensureCached(nextStep(v, "t1", "click", "t2"))
       val p = nextStep(c, "t2", "purchase", "t3")
       def stepCount(df: DataFrame, step: Int, name: String): DataFrame =
         df.agg(count(lit(1)).as("users"))

@@ -261,15 +261,16 @@ object Stats {
        |    WHERE r.label = n.label AND r.rn <= m.m) AS BIGINT) AS kept_id_sum
        |FROM n, m ORDER BY n.label""".stripMargin) { (s, d) =>
     // ONE window pass computes rank and class size together (same label
-    // exchange), pinned as a 3-int-column frame so the min-class scalar
-    // and the final aggregate are cache reads — the old n/m/kept/join
-    // shape re-scanned embeddings 4× (r17 scan audit); the embedding
-    // vectors themselves never enter the pinned projection
+    // exchange) over a 2-int-column projection; the min-class scalar and
+    // the final aggregate both read that one label exchange, which Spark
+    // reuses, so no cache is needed — the old n/m/kept/join shape
+    // re-scanned embeddings 4× (r17 scan audit); the embedding vectors
+    // themselves never enter the projection
     val lbl = Window.partitionBy("label")
-    val w = graft.Caching.pinOnce(Tables.embeddings(s, d)
+    val w = Tables.embeddings(s, d)
       .select(col("label"), col("vec_id"))
       .withColumn("rn", row_number().over(lbl.orderBy("vec_id")))
-      .withColumn("n_orig", count(lit(1)).over(lbl)))
+      .withColumn("n_orig", count(lit(1)).over(lbl))
     val m = w.filter(col("rn") === 1).agg(min("n_orig").as("m"))
     w.crossJoin(broadcast(m))
       .groupBy("label")
@@ -511,11 +512,10 @@ object Stats {
        |FROM cp JOIN singles sa ON cp.a = sa.t JOIN singles sb ON cp.b = sb.t
        |CROSS JOIN n
        |ORDER BY cab DESC, a, b LIMIT 50""".stripMargin) { (s, d) =>
-    // lazily cached deliberately (re-tested r21): pinning dt and singles
-    // up front (pinOnce) to stop the broadcast subtrees racing the pair
-    // pipeline for the cache measured SLOWER isolated (2.12 s vs 1.82 s
-    // median) — the racers' duplicate work burns idle cores while the
-    // pin's two count jobs serialize; keep the lazy form
+    // lazily cached deliberately (re-tested r21): persisting and counting
+    // dt and singles up front measured SLOWER isolated (2.12 s vs 1.82 s
+    // median) — the two count jobs serialize ahead of the sink, while the
+    // lazy cache is filled by the first consumer's stage
     val dt = graft.Caching.ensureCached(Tables.documents(s, d)
       .select(col("doc_id"),
         expr("array_sort(array_distinct(split(lower(text), ' ')))").as("ts")))
@@ -821,14 +821,12 @@ object Stats {
        |FROM scored GROUP BY r_score, f_score, m_score
        |ORDER BY r_score, f_score, m_score""".stripMargin
   }) { (s, d) =>
-    // cached LAZILY (not pinOnce): the consumers — ExactQuantiles' range
-    // pass and the final scoring aggregate — are strictly SEQUENTIAL
-    // actions, so the first EQ job materializes the cache and nothing
-    // races to populate it (the pinOnce count exists for plans whose
-    // concurrent subtrees would otherwise each rebuild the pipeline);
-    // dropping the explicit count saves its AQE job chain (r21 audit:
-    // build jobs 9 -> 6). Unpinned entirely each consumer re-ran the
-    // orders scan + per-customer aggregate (r17 scan audit: 4 scans -> 1).
+    // cached LAZILY: the consumers — ExactQuantiles' range pass and the
+    // final scoring aggregate — are strictly SEQUENTIAL actions, so the
+    // first EQ job materializes the cache; an explicit count would only
+    // add its AQE job chain (r21 audit: build jobs 9 -> 6). Uncached,
+    // each consumer re-ran the orders scan + per-customer aggregate (r17
+    // scan audit: 4 scans -> 1).
     val c = graft.Caching.ensureCached(Tables.orders(s, d)
       .select(col("o_custkey"),
         // o_orderdate reads as TIMESTAMP_NTZ; the UTC session makes the
@@ -1678,15 +1676,15 @@ object Stats {
       "cast(floor(ln((cast(o as double) * cast(nv as double))" +
         " / (cast(rtv as double) * cast(ctv as double)))" +
         " * 1000000.0d + 0.5d) as bigint)"))
-    val pinned = graft.Caching.pinOnce(lp)
-    val hn = pinned.groupBy("nat").agg(max("ctv").as("ct"), max("nv").as("nv"))
+    val cached = graft.Caching.ensureCached(lp)
+    val hn = cached.groupBy("nat").agg(max("ctv").as("ct"), max("nv").as("nv"))
       // 0 − sum, not unary minus: Spark's decimal negate rounds to 34
       // significant digits (the safeAbs class, ExactRatio r17) while
       // subtraction is exact at all 38
       .agg((lit(0).cast("decimal(38,0)") - sum(expr("cast(ct as decimal(38,0))" +
         " * cast(floor(ln(cast(ct as double) / cast(nv as double))" +
         " * 1000000.0d + 0.5d) as bigint)"))).cast("decimal(38,0)").as("hnv"))
-    val mi = pinned.agg(max("nv").as("n"),
+    val mi = cached.agg(max("nv").as("n"),
       countDistinct("seg").as("n_seg"), countDistinct("nat").as("n_nat"),
       sum(expr("cast(o as decimal(38,0)) * mi_e6")).cast("decimal(38,0)").as("smi"))
     val base = mi.crossJoin(hn)
@@ -2124,8 +2122,8 @@ object Stats {
     * DECIMAL(38,0)), and the O(|domain|²) pair enumeration is a
     * self-join of that 25-row frame on nationkey < nationkey — 300
     * pairs whatever the fact-row count, the same bounded-domain argument
-    * as stats_cramers_v's contingency table. The domain is pinned once
-    * (Caching.pinOnce), so the pair join's two sides and the n_groups
+    * as stats_cramers_v's contingency table. The domain is cached
+    * (Caching.ensureCached), so the pair join's two sides and the n_groups
     * count all read the 25-row cache and the fact join+agg executes a
     * single time; the bounded CartesianProduct runs on the CACHED frame
     * (the dedup_embedding bounded-BNLJ precedent). Pairwise tie counts equal
@@ -2159,11 +2157,11 @@ object Stats {
           |  FROM p) a0""".stripMargin,
         ExactRatio.r2e6Stages(
           ExactRatio.DuckF, "tnum", "dxp", "dyp", "tau2_e6"))} q""".stripMargin) { (s, d) =>
-    // pin the 25-row domain ONCE: the pair join reads both sides (and
-    // the n_groups count a third) from the cache, so the fact join+agg
-    // runs a single time — without the pin each consumer re-plans the
-    // whole orders⋈customer scan (three scans in the executed plan)
-    val g = graft.Caching.pinOnce(Tables.orders(s, d)
+    // cache the 25-row domain: the pair join reads both sides (and the
+    // n_groups count a third) from the cache, so the fact join+agg runs a
+    // single time — without the cache the consumers re-run the
+    // orders⋈customer aggregate (more written shuffle records)
+    val g = graft.Caching.ensureCached(Tables.orders(s, d)
       .join(Tables.customer(s, d),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nk"))

@@ -445,13 +445,13 @@ object TextSim {
     // hash-exact oracled; est/exact/err ship as e3 integers (exact
     // floor division on both engines — no hashed double).
     // The wide sig table is consumed THREE times (band explode + both
-    // sides of the sketch comparison), so it is pinned — computed once
+    // sides of the sketch comparison), so it is cached — computed once
     // off the cached gram table instead of re-aggregated per consumer;
     // this is the same ~100 B/doc signature index `dedup_incremental`
     // persists, materialized rather than recomputed.
     Q("dedup_calibration", calibrationOracleSql) { (s, d) =>
       val grams = gramTable(s, Tables.documents(s, d).select("doc_id", "text"))
-      val sig = graft.Caching.pinOnce(sigTable(grams))
+      val sig = graft.Caching.ensureCached(sigTable(grams))
       val bands = bandsFromSig(sig)
       val cand = bands.toDF("da", "na", "bi", "bv1", "bv2")
         .join(bands.toDF("db", "nb", "bi2", "bv1b", "bv2b"),
@@ -520,7 +520,7 @@ object TextSim {
   final val SpanAttribDfCap = 20
 
   /** Positioned double-hashed span gram table (doc_id, i, gh, gh2),
-    * pinned cold-only — the shared kernel of `text_verbatim_spans` and
+    * cached lazily — the shared kernel of `text_verbatim_spans` and
     * `span_attribution` (identical plan text, so a same-session second
     * consumer warm-hits the SQL cache). See the span Q scaladoc for the
     * double-hash collision argument.
@@ -530,7 +530,7 @@ object TextSim {
     def fold(mult: Long) =
       s"""aggregate(sequence(0, ${SpanGramLen - 1}), cast(0 as bigint),
          |     (acc, j) -> (acc * $mult + element_at(hw, i + j)) % 1000000007)""".stripMargin
-    graft.Caching.pinOnce(Tables.documents(s, d)
+    graft.Caching.ensureCached(Tables.documents(s, d)
       .select(col("doc_id"), split(lower(col("text")), " ").as("w"))
       .filter(size(col("w")) >= SpanGramLen)
       .repartition(s.sparkContext.defaultParallelism)
@@ -666,8 +666,8 @@ object TextSim {
        |ORDER BY nd.doc_id""".stripMargin
   }
 
-  /** int64-hashed DISTINCT 3-word-shingle table (doc_id, gh), cached and
-    * cache-pinned. Shingles are hashed to int64 INSIDE the transform
+  /** int64-hashed DISTINCT 3-word-shingle table (doc_id, gh), cached
+    * lazily. Shingles are hashed to int64 INSIDE the transform
     * lambda (see LlmOps.jaccardPairs for the collision argument): the
     * distinct, the persisted table, the signature aggregation and both
     * exact-Jaccard re-rank sides carry 8-byte keys instead of ~20-char
@@ -678,35 +678,15 @@ object TextSim {
     * of it (minhashMix) instead of seeded xxhash64 — same uniformity in
     * practice (MlSpec planted-pair recall unchanged), but DuckDB can
     * rebuild the identical sketch, so dedup_fuzzy is hash-exact oracled
-    * (minhashOracleSql). Cached via ensureCached so a same-session
-    * re-entry never double-persists (graft.Caching ownership contract —
-    * the harness clearCache or the caller retires it); the count() pins
-    * the cache in ONE job so consumers' map stages don't race to populate
-    * it (the 2x run-to-run spread of rounds 5-6).
+    * (minhashOracleSql). Cached via ensureCached, so a same-session
+    * re-entry never double-persists and the first consumer's stage fills
+    * the cache for the signature aggregation and the re-rank joins
+    * (graft.Caching ownership contract — the harness clearCache or the
+    * caller retires it).
     */
-  /** Bench-side warm entry: materialize the shared minhash kernel (the
-    * pinned gram table and the wide signature table) for `docs0` so a
-    * TIMED dedup-family key finds it plan-cache-warm. In a production
-    * warehouse these ARE persisted shared artifacts — dedup_incremental's
-    * whole premise is a signature index written once per ingest run — so
-    * billing their construction to whichever family key happens to run
-    * first mis-states every key's cost (r13-r14 driver forensics: the
-    * family's bench inflation tracked exactly this absorbed kernel).
-    * The pins follow the [[graft.Caching]] contract: caller retires via
-    * clearCache, as Bench does after each timed key.
-    */
-  def warmMinhashKernel(s: SparkSession, docs0: org.apache.spark.sql.DataFrame): Unit = {
-    val g = gramTable(s, docs0)
-    graft.Caching.pinOnce(sigTable(g))
-    ()
-  }
-
   def gramTable(s: SparkSession, docs0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     graft.functions.PolyHashArr.register(s)
-    // pinOnce (r14, was ensureCached + unconditional count): a warm
-    // same-session re-entry skips even the count action — fewer job
-    // boundaries is the r13 host-contention lesson
-    graft.Caching.pinOnce(docs0
+    graft.Caching.ensureCached(docs0
       .withColumn("w", split(lower(col("text")), " "))
       .filter(size(col("w")) >= 3) // sequence(1,0) DESCENDS on Spark — drop short docs
       // the sf fixture is ONE parquet file = one partition; spread the

@@ -33,8 +33,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (codegen, broadcast classes, SessionMemo model fits — the memo is
   * (session, dir)-keyed, so warming here makes the measured pass
   * deterministic regardless of suite order), then per key: clearCache,
-  * count what fires while the DataFrame is CONSTRUCTED (pinOnce
-  * materializations, model fits, boundary collects; tag `key/build`) and
+  * count what fires while the DataFrame is CONSTRUCTED (model fits,
+  * boundary collects, iterative operators' rounds; tag `key/build`) and
   * while it runs once through a noop sink (including AQE per-stage jobs;
   * tag `key/run`).
   *
@@ -56,28 +56,32 @@ class KeyCountsSpec extends AnyFunSuite {
     "stats_spearman" -> (0, 4),
     "outlier_mad" -> (0, 5),
     // r19 re-audit: pin dropped + df/n2 windows folded into the pair
-    // aggregate's diagonal — build jobs 5 -> 0 (no pinOnce count), run
+    // aggregate's diagonal — build jobs 5 -> 0 (no pin count), run
     // 10 -> 12, total 15 -> 12
     "sim_sparse_cosine" -> (0, 12),
-    "basket_lift" -> (5, 10),
+    // no construction-time pin count anywhere (Caching keeps only the
+    // lazy ensureCached): the cache fill moves into the run, build -> 0.
+    // basket_lift (5, 10) -> (0, 16), span_attribution (4, 11) -> (0, 16),
+    // text_verbatim_spans (4, 7) -> (0, 10), dedup_simhash (5, 4) -> (0, 8)
+    "basket_lift" -> (0, 16),
     // r22 re-audit (VERDICT r21 item 4): literal-centroid map-side argmin
     // replaced the per-round crossJoin(broadcast)+groupBy(vec_id) argmin
     // and the centroid update aggregates off the assignment (no join back
     // to v) — build 17 -> 8, run unchanged; isolated timekey 1.88 -> 1.08
     // in the interleaved A/B (logs/ab_r22_kmeans_cc.log)
     "kmeans_iter" -> (8, 5),
-    "span_attribution" -> (4, 11),
-    "dedup_simhash" -> (5, 4),
+    "span_attribution" -> (0, 16),
+    "dedup_simhash" -> (0, 8),
     // r21 re-audit (VERDICT r20 item 3): the three quantile consumers
     // folded into ONE grouped ExactQuantiles pass over the stacked
     // (dim, value) table and the boundary literals replaced the two
     // crossJoin-broadcast quartile subframes — build 9 -> 7 (lazy
-    // ensureCached instead of pinOnce's counted pin; consumers are
+    // ensureCached instead of a counted pin; consumers are
     // sequential, nothing races), run 10 -> 4, total 19 -> 11 at
     // local[32]/sf0.1 (tools/actioncount)
     "orders_rfm" -> (7, 4),
     "agg_hash_sum" -> (0, 4),
-    "text_verbatim_spans" -> (4, 7),
+    "text_verbatim_spans" -> (0, 10),
     "ann_ivfpq" -> (1, 8),
     // r20 new-key audit (tools/actioncount at the suite config): the
     // exact re-rank adds 3 run jobs over ann_ivfpq (shortlist window +
@@ -114,9 +118,13 @@ class KeyCountsSpec extends AnyFunSuite {
     "ann_ivfpq_rerank" -> (0L, 1200L),
     "ann_lsh_bucket" -> (0L, 10496L),
     "chunk_overlap" -> (0L, 6672L),
-    "corpus_heaps" -> (1L, 16555L),
+    // no pin counts: every cache fills in the run, so build records -> 0
+    // (a count's partial-count records are gone, the kernel's records
+    // move to run). corpus_heaps (1, 16555) -> (0, 16556): its bounds
+    // frame is no longer cached, its broadcast exchange is reused
+    "corpus_heaps" -> (0L, 16556L),
     "corpus_novelty" -> (0L, 10920L),
-    "dedup_calibration" -> (29403L, 108L),
+    "dedup_calibration" -> (0L, 29503L),
     "dedup_chunk" -> (0L, 9426L),
     // the pair family's kernel runs no count: the gram pin's and the pair
     // frame's 4 partial-count records each are gone, 81217 -> 81209. The
@@ -125,13 +133,13 @@ class KeyCountsSpec extends AnyFunSuite {
     // the lazily cached pair frame at build; dedup_ngram_jaccard's sink
     // fills it, so its kernel records move to the run phase
     "dedup_cluster" -> (81209L, 1000L),
-    "dedup_containment" -> (81213L, 8L),
-    "dedup_fuzzy" -> (27407L, 9568L),
-    "dedup_incremental" -> (27407L, 4523L),
+    "dedup_containment" -> (0L, 81217L),
+    "dedup_fuzzy" -> (0L, 36971L),
+    "dedup_incremental" -> (0L, 31926L),
     "dedup_ngram_jaccard" -> (0L, 81217L),
     "dedup_rate_by_source" -> (81209L, 56L),
     "dedup_retention" -> (81209L, 1000L),
-    "dedup_strip" -> (1L, 10915L),
+    "dedup_strip" -> (0L, 10915L),
     "fn_explode" -> (0L, 32000L),
     "graph_degree" -> (81209L, 516L),
     "inverted_index" -> (0L, 11743L),
@@ -143,13 +151,13 @@ class KeyCountsSpec extends AnyFunSuite {
     // run phase; total 14884 -> 15043 (the nc subtree re-shuffles cp, the
     // two deleted full-frame window shuffles pay for it)
     "sim_sparse_cosine" -> (0L, 15043L),
-    "span_attribution" -> (504L, 95278L),
+    "span_attribution" -> (0L, 95778L),
     "stats_spearman" -> (0L, 12003L),
     "text_bigram_logprob" -> (0L, 9964L),
     "text_keyword_extract" -> (0L, 26491L),
-    "text_ngram_coverage" -> (16510L, 404L),
+    "text_ngram_coverage" -> (0L, 16507L),
     "text_tfidf" -> (0L, 11903L),
-    "text_verbatim_spans" -> (504L, 50038L),
+    "text_verbatim_spans" -> (0L, 50538L),
     "token_vocab" -> (0L, 11898L))
 
   private lazy val counted: Map[String, Profile.Measured] = {
@@ -186,10 +194,14 @@ class KeyCountsSpec extends AnyFunSuite {
       s"untagged jobs: ${untagged.map { case (k, m) => k -> m.untagged.jobs }}")
   }
 
-  test("Profile bills a pinOnce frame's count job to build and its sink jobs to run") {
+  test("Profile bills a count job at construction to build and its sink jobs to run") {
     def frame = s.range(0, 1000, 1, 4).select((col("id") % 7).as("v"))
     val unpinned = Profile.measure(s, "profile/lazy")(frame)
-    val pinned = Profile.measure(s, "profile/pin")(Caching.pinOnce(frame))
+    val pinned = Profile.measure(s, "profile/pin") {
+      val f = frame.persist()
+      f.count()
+      f
+    }
     s.catalog.clearCache()
     assert(unpinned.build == Profile.Counts.zero)
     // the pin's count aggregates one partial row per partition; the sink

@@ -93,10 +93,6 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
         (0L until n.toLong).toDF("node"), edges.toDF("a", "b")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(local == expected, s"local path, trial $trial (n=$n, edges=$edges)")
-      val stars = ConnectedComponents.alternatingStars(
-        (0L until n.toLong).toDF("node"), edges.toDF("a", "b")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(stars == expected, s"alternating-stars path, trial $trial (n=$n, edges=$edges)")
       // the endpoints-only variant must agree with the reference ON THE
       // PARTICIPANTS (it promises no coverage of isolated nodes), on
       // both of ITS paths: the LocalRelation fast path and the forced
@@ -273,15 +269,6 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       localSolveMaxEdges = -1L).collect()
     assert(got.length == 200)
     assert(got.forall(_.getLong(1) == 0L), "all labels must collapse to 0")
-    // the hub-proof large-star/small-star variant must close the same
-    // path within its O(log n) round budget, and a star graph (maximal
-    // hub) must converge immediately
-    val stars = ConnectedComponents.alternatingStars(nodes, edges).collect()
-    assert(stars.length == 200 && stars.forall(_.getLong(1) == 0L))
-    val hubEdges = (1L until 100L).map(i => (0L, i)).toDF("a", "b")
-    val hubNodes = (0L until 100L).toDF("node")
-    val hub = ConnectedComponents.alternatingStars(hubNodes, hubEdges).collect()
-    assert(hub.length == 100 && hub.forall(_.getLong(1) == 0L))
   }
 
   test("dedup family leaves nothing behind that clearCache cannot clean") {
@@ -349,10 +336,10 @@ class ScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     assert((s.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
-  test("re-entering dedup_containment neither re-pins the gram table nor leaks") {
-    // regression for the review finding: the gram pin + retire must live
-    // inside the cold branch — a warm second run (pairs already
-    // plan-cached) must not re-persist/re-materialize the gram pipeline
+  test("re-entering dedup_containment neither re-persists the gram table nor leaks") {
+    // the gram table is cached lazily: a warm second run (its plan
+    // already in the SQL cache) must find that cache, not persist the
+    // gram pipeline again, and one clearCache must clean the session
     s.catalog.clearCache()
     val before = s.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("dedup_containment")(s, d)

@@ -4,8 +4,7 @@
 // i.e. the branch a 100 TB graph actually takes. Two shapes:
 // short chains (diameter 9 → few pointer-jump rounds) and long chains
 // (diameter 999 → the round count log2-bounds, the scale claim in the
-// operator's scaladoc). Also runs alternatingStars (the Kiveris et al.
-// extreme-scale variant) on the short-chain graph for comparison.
+// operator's scaladoc).
 // Deterministic edges from id arithmetic; result verified (component
 // count + every label = its chain's minimum) before the wall is
 // reported — a fast wrong answer would be worthless.
@@ -50,11 +49,6 @@ timed("minlabel_chain10", 10) {
 timed("minlabel_chain1000", 1000) {
   graft.operators.ConnectedComponents.minLabelFromEdges(
     chainEdges(1000), maxIter = 50, localSolveMaxEdges = -1L)
-}
-// the alternating-stars variant on the short-chain graph
-timed("altstars_chain10", 10) {
-  graft.operators.ConnectedComponents.alternatingStars(
-    spark.range(N).select(col("id").as("node")), chainEdges(10), maxIter = 50)
 }
 }
 sys.exit(0)

@@ -1,12 +1,14 @@
-// pinOnce spill forensic (VERDICT r18 item 3): the two corpus-sized pin
+// Cache spill forensic (VERDICT r18 item 3): the two corpus-sized cache
 // sites — dedup_strip's chunk table (queries/Corpus.scala) and the shared
-// basket kernel behind basket_pairs/basket_lift (queries/Features.scala) —
-// carry an in-code MEMORY_AND_DISK trade ("spills chunk batches to local
-// disk instead of failing") that had never been exercised under a
-// constrained store. This tool runs the PRODUCTION keys against an
-// amplified copy of the sf0.1 fixture (documents ×32, lineitem ×8, ids
-// remapped so grain is preserved) in the CURRENT session, reporting per
-// key: wall (2 runs), the pinned RDDs' memory/disk bytes at sink time
+// basket kernel behind basket_pairs/basket_lift (queries/Features.scala),
+// both cached lazily with Caching.ensureCached, so the sink's first stage
+// fills them — carry an in-code MEMORY_AND_DISK trade ("spills chunk
+// batches to local disk instead of failing") that had never been
+// exercised under a constrained store. This tool runs the PRODUCTION keys
+// against an amplified copy of the sf0.1 fixture (documents ×32, lineitem
+// ×8, ids remapped so grain is preserved) in the CURRENT session,
+// reporting per key: wall (2 runs), the cached RDDs' memory/disk bytes
+// at sink time
 // (diskSize > 0 under a starved store proves the spill path actually ran),
 // and a result digest (rows + sum(xxhash64(struct(*)))) that must be
 // IDENTICAL between the ample and starved sessions.
@@ -18,7 +20,7 @@
 //     --conf spark.ui.enabled=false --conf spark.sql.session.timeZone=UTC \
 //     --jars target/scala-2.13/sd2_drp_experimentgenspark_2.13-0.1.0.jar \
 //     -I tools/spillbench.scala < /dev/null
-//   # starved run: tiny unified pool -> the pins MUST evict to disk
+//   # starved run: tiny unified pool -> the caches MUST evict to disk
 //   SPILL_MODE=starved /opt/spark/bin/spark-shell --master 'local[8]' \
 //     --driver-memory 1g --conf spark.memory.fraction=0.05 \
 //     --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \
@@ -54,7 +56,7 @@ if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists) {
     .write.mode("overwrite").parquet(s"$dir/part.parquet")
 }
 
-// ---- run the pin-owning keys ----
+// ---- run the cache-owning keys ----
 Seq("dedup_strip", "basket_pairs", "basket_lift").foreach { k =>
   // warm: codegen + broadcast classes on the small fixture
   graft.SparkEntry.queries(k)(spark, src).write.format("noop").mode("overwrite").save()
@@ -63,7 +65,7 @@ Seq("dedup_strip", "basket_pairs", "basket_lift").foreach { k =>
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(k)(spark, dir).write.format("noop").mode("overwrite").save()
     val w = (System.nanoTime() - t0) / 1e9
-    // read cache storage BEFORE retiring the pin: disk > 0 under the
+    // read cache storage BEFORE retiring the cache: disk > 0 under the
     // starved config proves MEMORY_AND_DISK eviction actually happened
     val st = spark.sparkContext.getRDDStorageInfo
       .map(i => s"mem=${i.memSize / 1024}k disk=${i.diskSize / 1024}k parts=${i.numCachedPartitions}")
