@@ -55,10 +55,13 @@ object Bench {
     // CPU is exactly what a contended driver host multiplies (BENCH_r15:
     // 911 s there vs 172.76 s for the identical jar/protocol on an idle
     // host — token_pmi 97.2 s vs 1.54 s). A real sf0.001 pass of a key
-    // compiles the SAME generated classes its sf0.1 plan needs (janino
-    // caches by source text), so the timed run measures steady-state
-    // execution — what a production pipeline, which compiles a plan once
-    // and runs it repeatedly, actually pays. Model-state keys still pay
+    // compiles the SAME generated classes its sf0.1 plan needs, so the
+    // timed run measures steady-state execution — what a production
+    // pipeline, which compiles a plan once and runs it repeatedly,
+    // actually pays. Spark's codegen cache is keyed by (context class
+    // loader, source text) and holds spark.sql.codegen.cache.maxEntries
+    // (100) entries: a class evicted since its warm compile is compiled
+    // again inside the timed region. Model-state keys still pay
     // their honest sf0.1 fit (SessionMemo is (session, dir)-keyed) and
     // caches are cleared before the timed loop.
     val warmQueries = SparkEntry.queries.keys.toSeq.sorted

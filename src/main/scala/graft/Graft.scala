@@ -27,7 +27,12 @@ import org.apache.spark.sql.SparkSession
   *
   * `install` deliberately does NOT touch session confs — shuffle
   * partitioning, AQE, timezone and ANSI settings belong to the session
-  * owner (README documents the recommended ones).
+  * owner (README documents the recommended ones). The fixture readers
+  * (`Tables`) do set two: `spark.sql.legacy.parquet.nanosAsLong` for the
+  * events reader, and `spark.sql.artifact.isolation.enabled=false` on a
+  * session that holds no value for it, so a fresh session reuses the
+  * generated classes earlier sessions compiled (`Tables.table`'s guard).
+  * An owner who sets the isolation flag keeps their value.
   *
   * Model-style operators need no registration: train an ANN index with
   * [[graft.operators.IvfPqIndex.fit]] and encode batch or streaming

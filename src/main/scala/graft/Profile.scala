@@ -4,12 +4,14 @@ import java.util.Properties
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-tag Spark job and shuffle-record counts: the one instrumentation
-  * path behind the count gates (`KeyCountsSpec`) and the audit tools
-  * (`tools/keycounts.scala`, `tools/topkbench.scala`).
+/** Per-tag Spark job and shuffle-record counts, plus a measured window's
+  * codegen compile count: the one instrumentation path behind the count
+  * gates (`KeyCountsSpec`, GraftSpec's fresh-session compile test) and
+  * the audit tools (`tools/keycounts.scala`, `tools/topkbench.scala`).
   *
   * A tag is a string held in the [[TagProp]] local property, set around a
   * block with [[tagged]] (`key/build` around a key's construction,
@@ -43,9 +45,11 @@ object Profile {
   object Counts { val zero: Counts = Counts(0, 0, 0) }
 
   /** What constructing a frame (`build`) and sinking it once (`run`)
-    * fired, plus the jobs that started untagged in between.
+    * fired, plus the jobs that started untagged in between, and the
+    * generated classes compiled over the whole window (`compiles`: the
+    * JVM-wide codegen cache misses, driver and executor side alike).
     */
-  final case class Measured(build: Counts, run: Counts, untagged: Counts)
+  final case class Measured(build: Counts, run: Counts, untagged: Counts, compiles: Long)
 
   private final class Listener extends SparkListener {
     val counts = new ConcurrentHashMap[String, Counts]()
@@ -121,16 +125,23 @@ object Profile {
     tags.map(t => Option(l.counts.remove(t)).getOrElse(Counts.zero))
   }
 
+  /** Generated classes compiled so far in this JVM: one histogram sample
+    * per codegen cache miss.
+    */
+  private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Count constructing `df` under tag `name/build` and sinking it once
-    * through `noop` under `name/run`.
+    * through `noop` under `name/run`, and the generated classes compiled
+    * meanwhile.
     */
   def measure(spark: SparkSession, name: String)(df: => DataFrame): Measured = {
     val (b, r) = (s"$name/build", s"$name/run")
     take(spark, b, r, Untagged) // only this window's events count
+    val compiles0 = compileCount
     val built = tagged(spark, b)(df)
     tagged(spark, r)(built.write.format("noop").mode("overwrite").save())
     val Seq(cb, cr, cu) = take(spark, b, r, Untagged)
-    Measured(cb, cr, cu)
+    Measured(cb, cr, cu, compileCount - compiles0)
   }
 
   /** The per-key count protocol: one pass over `keys` to warm codegen and

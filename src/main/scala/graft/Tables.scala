@@ -94,7 +94,32 @@ object Tables {
           s"${schema("text").dataType.simpleString}, expected string — see FIXTURES.md.")
     }
 
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** Run this session's queries under the context's shared class loader
+    * instead of a per-session one, so a generated class compiled in one
+    * session is reused by every later session of the JVM.
+    *
+    * Spark's codegen cache is keyed by (thread context class loader,
+    * source text). With artifact isolation on (Spark's default), a
+    * session's first execution builds its `ArtifactManager`, which gives
+    * the session's jobs their own artifact state; executor tasks then run
+    * under a class loader made for that session, so every generated class
+    * misses the cache, and is compiled and JIT-warmed again, in each
+    * fresh `newSession()`. Setting the flag to `false` before that first
+    * execution keeps the tasks on the shared loader.
+    *
+    * Only a session that holds no value for the flag is touched: an owner
+    * who set it (builder, `spark-defaults`, session conf) keeps their
+    * choice. A session that already ran a query or added an artifact
+    * read the flag when its manager was built, so setting it then changes
+    * nothing. graft adds no artifacts of its own.
+    */
+  private def shareGeneratedClasses(s: SparkSession): Unit =
+    if (!s.conf.getAll.contains(ArtifactIsolation)) s.conf.set(ArtifactIsolation, "false")
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    shareGeneratedClasses(spark)
     val path = s"$dir/$name.parquet"
     val cached = schemaCache.get(path)
     if (cached != null) spark.read.schema(cached).parquet(path)

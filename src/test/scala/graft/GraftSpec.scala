@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The library front door (graft.Graft.install): one call on an existing
   * session registers the native expressions, the heap strategy and the
-  * top-k rewrite — idempotently.
+  * top-k rewrite — idempotently. Also the artifact-isolation conf the
+  * fixture readers set: fresh sessions share generated classes unless
+  * their owner chose isolation.
   */
 class GraftSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -74,5 +76,26 @@ class GraftSpec extends AnyFunSuite {
         assert(registry.lookupFunction(id).get eq info, s"${id.funcName} was registered again")
       }
     }
+  }
+
+  test("a graft key run in a second fresh session compiles no generated class") {
+    // each window builds the key in its own newSession() and sinks it;
+    // without shared generated classes every fresh session compiles the
+    // key's whole-stage classes again under its own class loader
+    def inFreshSession() = {
+      val fresh = s.newSession()
+      Profile.measure(fresh, "codegen/window_rank")(SparkEntry.queries("window_rank")(fresh, d))
+    }
+    inFreshSession()
+    val second = inFreshSession()
+    assert(second.compiles == 0, s"second fresh session compiled ${second.compiles} classes")
+  }
+
+  test("an owner's artifact isolation setting survives a graft key") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val fresh = s.newSession()
+    fresh.conf.set(key, "true")
+    SparkEntry.queries("window_rank")(fresh, d).write.format("noop").mode("overwrite").save()
+    assert(fresh.conf.get(key) == "true")
   }
 }

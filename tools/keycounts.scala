@@ -3,7 +3,10 @@
 // (graft.Profile.countKeys: one warm pass, then one counted pass, each key
 // from an empty cache). At the suite config below it prints the spec's
 // baselines as ready-to-paste lines; counts at other configs (master,
-// shuffle.partitions, SPARK_GRAFT_SF_DIR) are expected to differ.
+// shuffle.partitions, SPARK_GRAFT_SF_DIR) are expected to differ. Each
+// RECORDS line's comment also gives the shuffle records read, the untagged
+// jobs and the generated classes compiled in the key's counted window
+// (after the warm pass, so a nonzero count is a class compiled again).
 //   SPARK_GRAFT_KEYS=a,b,c SPARK_GRAFT_SF_DIR=<fixtures>/sf0.001 \
 //   $SPARK_HOME/bin/spark-shell --master 'local[4]' \
 //     --conf spark.sql.shuffle.partitions=4 --conf spark.ui.enabled=false \
@@ -20,7 +23,8 @@ val keys = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(",").toSeq)
 graft.Profile.countKeys(spark, keys, sfDir).foreach { case (k, m) =>
   println(s"""JOBS    "$k" -> (${m.build.jobs}, ${m.run.jobs}),""")
   println(s"""RECORDS "$k" -> (${m.build.shuffleWritten}L, ${m.run.shuffleWritten}L),""" +
-    s" // read ${m.build.shuffleRead + m.run.shuffleRead}, untagged jobs ${m.untagged.jobs}")
+    s" // read ${m.build.shuffleRead + m.run.shuffleRead}, untagged jobs ${m.untagged.jobs}," +
+    s" compiles ${m.compiles}")
 }
 }
 sys.exit(0)
