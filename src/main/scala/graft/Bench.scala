@@ -15,12 +15,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM (codegen pipeline, parquet reader, join/window/agg
-    // operator classes, noop sink) so the first timed query doesn't absorb
-    // one-time JIT/classloading cost — rounds 4-5 showed 1-9 s phantom
-    // outliers on whichever query first touched WindowExec / SortMergeJoin
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
     // construct every fixture reader once so Tables' schema memo is
     // populated OUTSIDE the timed region (inference ~100 ms/call, memo
     // ~15 ms), and decode one row group per table so the first timed query
@@ -46,25 +40,6 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] stage warm-up failed: ${e.getMessage}")
     }
-    // Warm EVERY key once, untimed, against the tiny sf0.001 sibling
-    // (r16, superseding a curated per-family warm list). Rationale: the
-    // r16 8-vs-32-CPU comparison showed per-key times identical at both
-    // widths (stats_spearman 4.09 vs 3.93, kmeans_iter 2.09 vs 2.08 …) —
-    // at sf0.1 the timed region is dominated by SERIAL driver-side work
-    // (whole-stage codegen compile + planning), not data. That serial
-    // CPU is exactly what a contended driver host multiplies (BENCH_r15:
-    // 911 s there vs 172.76 s for the identical jar/protocol on an idle
-    // host — token_pmi 97.2 s vs 1.54 s). A real sf0.001 pass of a key
-    // compiles the SAME generated classes its sf0.1 plan needs, so the
-    // timed run measures steady-state execution — what a production
-    // pipeline, which compiles a plan once and runs it repeatedly,
-    // actually pays. Spark's codegen cache is keyed by (context class
-    // loader, source text) and holds spark.sql.codegen.cache.maxEntries
-    // (100) entries: a class evicted since its warm compile is compiled
-    // again inside the timed region. Model-state keys still pay
-    // their honest sf0.1 fit (SessionMemo is (session, dir)-keyed) and
-    // caches are cleared before the timed loop.
-    val warmQueries = SparkEntry.queries.keys.toSeq.sorted
     // Prefer the sibling sf0.001 fixture; if the layout doesn't have one,
     // warm on sfDir itself — a one-time cost outside the timed region
     // beats skewing the first queries of each family, but it ALSO
@@ -81,60 +56,19 @@ object Bench {
         sfDir
       }
     }
-    warmQueries.foreach { q =>
-      try SparkEntry.queries(q)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => // an env failure must not kill the bench,
-        // but a silent skip would quietly re-skew that family's first query
-        System.err.println(s"[bench] WARM-UP SKIPPED $q ($warmDir): ${e.getMessage}")
-      }
-    }
-    spark.catalog.clearCache()
-    // Shared-kernel warm (r15 verdict item 4): the gram/signature kernels
-    // are the dedup family's shared persisted artifacts (a production
-    // warehouse writes the signature index once per ingest run —
-    // dedup_incremental's premise), so their construction is materialized
-    // UNTIMED before each family key rather than billed to whichever key
-    // runs first. Re-warmed per key because the loop clearCaches between
-    // keys to keep every other timing isolated. Each warm persists the
-    // kernel frame and counts it here, so the timed key reads it through
-    // cache substitution (an InMemoryTableScan): the minhash signature
-    // table (whose count also fills the gram table it reads) and the
-    // df-capped pair gram table.
-    def warm(kernel: => org.apache.spark.sql.DataFrame): Unit => Unit =
-      _ => { val k = kernel; k.persist(); k.count(); () }
-    val minhashWarm = warm(queries.TextSim.sigTable(queries.TextSim.gramTable(
-      spark, Tables.documents(spark, sfDir).select("doc_id", "text"))))
-    val pairWarm = warm(queries.LlmOps.gramTable(spark, sfDir))
-    val kernelWarm: Map[String, Unit => Unit] = Map(
-      "dedup_fuzzy" -> minhashWarm, "dedup_incremental" -> minhashWarm,
-      "dedup_calibration" -> minhashWarm,
-      "dedup_containment" -> pairWarm, "dedup_ngram_jaccard" -> pairWarm,
-      "dedup_cluster" -> pairWarm, "dedup_retention" -> pairWarm,
-      "graph_degree" -> pairWarm, "dedup_rate_by_source" -> pairWarm)
-    kernelWarm.keys.foreach(q => require(SparkEntry.queries.contains(q),
+    kernelWarm(spark, sfDir).keys.foreach(q => require(SparkEntry.queries.contains(q),
       s"kernel-warm list names unknown query '$q'"))
-    // drive each query through a noop SINK, not .count(): count() lets
-    // Catalyst drop the final sort and prune every computed column, so it
-    // would time a bare row-count scan instead of the query's actual work
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      kernelWarm.get(name).foreach { w =>
-        try w(()) catch { case e: Throwable =>
-          System.err.println(s"[bench] KERNEL WARM SKIPPED $name: ${e.getMessage}")
-        }
-      }
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // some dedup queries persist() intermediates; drop them OUTSIDE the
-      // timed region so cached tables never skew a later query's timing
-      spark.catalog.clearCache()
-      name -> (if (ok) elapsed else -1.0)
-    }
+    // Each key is warmed right before its timed run (`timeKey`): one real
+    // sf0.001 pass compiles the generated classes its sf0.1 plan needs, so
+    // the timed run measures steady-state execution, what a pipeline that
+    // compiles a plan once and runs it repeatedly pays. Right before, not
+    // in one pass over all keys first: Spark's codegen cache holds only
+    // spark.sql.codegen.cache.maxEntries (100) classes, far fewer than 220
+    // keys compile, so an earlier warm's classes are evicted by the time
+    // their key is timed. Model-state keys still pay their sf0.1 fit
+    // (SessionMemo is (session, dir)-keyed).
+    val results = SparkEntry.queries.keys.toSeq.sorted.map(name =>
+      name -> timeKey(spark, name, sfDir, warmDir, 1).head)
     val failed = results.filter(_._2 < 0).map(_._1)
     if (failed.nonEmpty) System.err.println(s"[bench] failed: ${failed.mkString(",")}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -201,5 +135,61 @@ object Bench {
         s"""{"metric":"queries_full","queries":$qsFull,"sf":"$sfDir"}""" + "\n")
     catch { case _: Throwable => () } // best-effort; stdout stays the contract
     spark.stop()
+  }
+
+  // Shared-kernel warm (r15 verdict item 4): the gram/signature kernels
+  // are the dedup family's shared persisted artifacts (a production
+  // warehouse writes the signature index once per ingest run —
+  // dedup_incremental's premise), so their construction is materialized
+  // UNTIMED before each family key rather than billed to whichever key
+  // runs first. Re-warmed per key because the loop clearCaches between
+  // keys to keep every other timing isolated. Each warm persists the
+  // kernel frame and counts it here, so the timed key reads it through
+  // cache substitution (an InMemoryTableScan): the minhash signature
+  // table (whose count also fills the gram table it reads) and the
+  // df-capped pair gram table.
+  private def kernelWarm(spark: SparkSession, sfDir: String): Map[String, Unit => Unit] = {
+    def warm(kernel: => org.apache.spark.sql.DataFrame): Unit => Unit =
+      _ => { val k = kernel; k.persist(); k.count(); () }
+    val minhashWarm = warm(queries.TextSim.sigTable(queries.TextSim.gramTable(
+      spark, Tables.documents(spark, sfDir).select("doc_id", "text"))))
+    val pairWarm = warm(queries.LlmOps.gramTable(spark, sfDir))
+    Map(
+      "dedup_fuzzy" -> minhashWarm, "dedup_incremental" -> minhashWarm,
+      "dedup_calibration" -> minhashWarm,
+      "dedup_containment" -> pairWarm, "dedup_ngram_jaccard" -> pairWarm,
+      "dedup_cluster" -> pairWarm, "dedup_retention" -> pairWarm,
+      "graph_degree" -> pairWarm, "dedup_rate_by_source" -> pairWarm)
+  }
+
+  /** Bench's per-key step: [[Profile.warmThen]] on `warmDir`, then `runs`
+    * timed runs of key `name` on `sfDir`, each after the key's kernel
+    * warm and followed by a `clearCache`. A failed run reads -1.0.
+    * `tools/timekeys.scala` calls it with three runs.
+    */
+  def timeKey(spark: SparkSession, name: String, sfDir: String, warmDir: String,
+      runs: Int): Seq[Double] = {
+    val (fn, kernel) = (SparkEntry.queries(name), kernelWarm(spark, sfDir).get(name))
+    Profile.warmThen(spark, name, warmDir)(Seq.fill(runs) {
+      kernel.foreach { w =>
+        try w(()) catch { case e: Throwable =>
+          System.err.println(s"[bench] KERNEL WARM SKIPPED $name: ${e.getMessage}")
+        }
+      }
+      // drive each query through a noop SINK, not .count(): count() lets
+      // Catalyst drop the final sort and prune every computed column, so it
+      // would time a bare row-count scan instead of the query's actual work
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+        }
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      // some dedup queries persist() intermediates; drop them OUTSIDE the
+      // timed region so cached tables never skew a later query's timing
+      spark.catalog.clearCache()
+      if (ok) elapsed else -1.0
+    })
   }
 }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Per-tag Spark job and shuffle-record counts, plus a measured window's
   * codegen compile count: the one instrumentation path behind the count
   * gates (`KeyCountsSpec`, GraftSpec's fresh-session compile test) and
-  * the audit tools (`tools/keycounts.scala`, `tools/topkbench.scala`).
+  * the audit tools (`tools/keycounts.scala`, `tools/topkbench.scala`),
+  * and the per-key warm step ([[warmThen]]) every per-key runner uses.
   *
   * A tag is a string held in the [[TagProp]] local property, set around a
   * block with [[tagged]] (`key/build` around a key's construction,
@@ -144,17 +145,29 @@ object Profile {
     Measured(cb, cr, cu, compileCount - compiles0)
   }
 
-  /** The per-key count protocol: one pass over `keys` to warm codegen and
-    * the `SessionMemo` model fits (so counts do not depend on key order),
-    * then one counted pass. Each key starts from an empty cache, so a
-    * pinned kernel is billed to the key that builds it.
+  /** The one per-key warm step, shared by `Bench.timeKey` (and through it
+    * `tools/timekeys.scala`) and [[countKeys]]: run key `k` once through
+    * `noop` on `warmDir`, clear the cache, then run `measure`. The warm
+    * run compiles the generated classes the measured run needs right
+    * before it, so the codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * 100 entries) still holds them when `measure` runs, and it fills the
+    * key's `SessionMemo` model fits for `warmDir`. A failed warm run is
+    * reported on stderr and `measure` still runs.
     */
-  def countKeys(spark: SparkSession, keys: Seq[String], dir: String): Seq[(String, Measured)] = {
-    def pass() = keys.map { k =>
-      spark.catalog.clearCache()
-      k -> measure(spark, k)(SparkEntry.queries(k)(spark, dir))
+  def warmThen[T](spark: SparkSession, k: String, warmDir: String)(measure: => T): T = {
+    try SparkEntry.queries(k)(spark, warmDir).write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable =>
+      System.err.println(s"[warm] WARM-UP SKIPPED $k ($warmDir): ${e.getMessage}")
     }
-    pass()
-    pass()
+    spark.catalog.clearCache()
+    measure
   }
+
+  /** The per-key count protocol: each key warmed on `dir` itself by
+    * [[warmThen]] (codegen and the `SessionMemo` model fits, so counts do
+    * not depend on key order), then counted from an empty cache, so a
+    * lazily cached kernel is billed to the key that fills it.
+    */
+  def countKeys(spark: SparkSession, keys: Seq[String], dir: String): Seq[(String, Measured)] =
+    keys.map(k => k -> warmThen(spark, k, dir)(measure(spark, k)(SparkEntry.queries(k)(spark, dir))))
 }

@@ -29,8 +29,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the dedup queries persist() intermediates — drop them so 83
-      // sequential queries don't accumulate cached tables
+      // the dedup queries persist() intermediates — drop them so the
+      // 220 sequential queries don't accumulate cached tables
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -10,9 +10,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   def readCsv(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = true, delimiter: String = ","): DataFrame =
     spark.read
@@ -24,7 +21,9 @@ object Sources {
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Result sink used by Verify; partitioned write is the cluster path. */
+  /** Multi-part parquet sink, Hive-partitioned by `partitionBy` when
+    * given (the cluster layout): writes `stageDocumentsByLang`'s
+    * `lang=<v>/` tree. */
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)

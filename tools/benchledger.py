@@ -31,7 +31,11 @@ tools/timekeys.scala (isolated fresh-JVM, warm, 3-run medians for the
 top-cost keys) OVERRIDES those keys' suite medians in the ledger line
 and records them under "isolated", so cmd_diff compares
 isolation-protocol numbers wherever they exist. The suite run still
-supplies total_med and every non-isolated key.
+supplies total_med and every non-isolated key. timekeys runs Bench's own
+per-key step (graft.Bench.timeKey: warm on the sf0.001 sibling, then the
+dedup kernel warm before each timed run), so an isolated median differs
+from a suite median only in run count and neighbours, not in what is
+warmed.
 
 The ledger line also records the raw per-run suite totals ("totals",
 VERDICT r20 item 5) so BASELINE round sections can be generated from the

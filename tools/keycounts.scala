@@ -1,12 +1,13 @@
 // Per-key Spark job and shuffle-record counts, (build, run) per key: the
 // audit side of KeyCountsSpec, running the gate's own protocol
-// (graft.Profile.countKeys: one warm pass, then one counted pass, each key
-// from an empty cache). At the suite config below it prints the spec's
-// baselines as ready-to-paste lines; counts at other configs (master,
-// shuffle.partitions, SPARK_GRAFT_SF_DIR) are expected to differ. Each
-// RECORDS line's comment also gives the shuffle records read, the untagged
-// jobs and the generated classes compiled in the key's counted window
-// (after the warm pass, so a nonzero count is a class compiled again).
+// (graft.Profile.countKeys: each key warmed once on the counted dir right
+// before it is counted from an empty cache). At the suite config below it
+// prints the spec's baselines as ready-to-paste lines; counts at other
+// configs (master, shuffle.partitions, SPARK_GRAFT_SF_DIR) are expected to
+// differ. Each RECORDS line's comment also gives the shuffle records read,
+// the untagged jobs and the generated classes compiled in the key's
+// counted window (right after the key's warm run, so a nonzero count is a
+// class compiled again).
 //   SPARK_GRAFT_KEYS=a,b,c SPARK_GRAFT_SF_DIR=<fixtures>/sf0.001 \
 //   $SPARK_HOME/bin/spark-shell --master 'local[4]' \
 //     --conf spark.sql.shuffle.partitions=4 --conf spark.ui.enabled=false \

@@ -21,8 +21,9 @@ val out = sys.env.getOrElse("SPARK_GRAFT_SPLIT_OUT", "/tmp/graft_split32")
 val splits = sys.env.getOrElse("SPARK_GRAFT_SPLITS", "32").toInt
 val tables = Seq("region", "nation", "customer", "supplier", "part",
   "orders", "lineitem", "events", "documents", "embeddings")
-// sf0.001 is restaged too (tiny) so timekeys' warm-on-sibling convention
-// works unchanged against the restaged tree
+// sf0.001 is restaged too (tiny) so the per-key warm on the sf0.001
+// sibling (graft.Bench.timeKey, which Bench and timekeys share) works
+// unchanged against the restaged tree
 for (sf <- Seq("sf0.001", "sf0.1"); t <- tables) {
   val src = s"/root/testdata/$sf/$t.parquet"
   val dst = s"$out/$sf/$t.parquet"
