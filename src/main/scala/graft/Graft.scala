@@ -23,7 +23,13 @@ import org.apache.spark.sql.SparkSession
   *   - the `TopKPerGroup` planner strategy (bounded-heap per-group top-k);
   *   - the `TopKRewrite` optimizer rule (the `row_number() <= k` window
   *     idiom auto-plans as the heap operator; opt out per session with
-  *     `spark.graft.topkRewrite.enabled=false`).
+  *     `spark.graft.topkRewrite.enabled=false`);
+  *   - the `SmallSortRewrite` optimizer rule: a global ORDER BY over an
+  *     input Catalyst sizes at or under `spark.sql.autoBroadcastJoinThreshold`
+  *     (deterministic, no `Generate`) sorts in one task behind a
+  *     `coalesce(1)`, with no range-sample job and no range shuffle; a
+  *     negative threshold turns it off. The fixture readers (`Tables`)
+  *     install it too.
   *
   * `install` deliberately does NOT touch session confs — shuffle
   * partitioning, AQE, timezone and ANSI settings belong to the session
@@ -49,5 +55,6 @@ object Graft {
     functions.MisraGries.register(spark)
     operators.TopK.ensureStrategy(spark)
     operators.TopK.ensureRewrite(spark)
+    plans.SmallSortRewrite.ensure(spark)
   }
 }

@@ -18,7 +18,9 @@ import graft.functions.DotProduct
   * `poly_hash_arr`, and the `freq_items` Misra–Gries heavy-hitters
   * aggregate, plus the bloom-filter pair (`bloom_agg` /
   * `bloom_might_contain`) that [[graft.functions.Blooms]] exposes from
-  * Spark's internals.
+  * Spark's internals. Also injects the heap strategy and the two
+  * optimizer rules `graft.Graft.install` adds at runtime: `TopKRewrite`
+  * and `SmallSortRewrite`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,6 +32,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // operator (strictly gated — see TopKRewrite scaladoc; opt out with
     // spark.graft.topkRewrite.enabled=false)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
+    // a global sort over a small input sorts in one task (coalesce(1)):
+    // no range-sample job, no range shuffle — see SmallSortRewrite
+    ext.injectOptimizerRule(_ => graft.plans.SmallSortRewrite)
     // builders shared with DotProduct.register / PolyHashArr.register —
     // one arity-validation implementation for both registration paths
     ext.injectFunction((

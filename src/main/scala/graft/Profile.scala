@@ -146,8 +146,11 @@ object Profile {
   }
 
   /** The one per-key warm step, shared by `Bench.timeKey` (and through it
-    * `tools/timekeys.scala`) and [[countKeys]]: run key `k` once through
-    * `noop` on `warmDir`, clear the cache, then run `measure`. The warm
+    * `tools/timekeys.scala`) and [[countKeys]]: clear the cache, run key
+    * `k` once through `noop` on `warmDir`, clear the cache again, then run
+    * `measure`. The first clear keeps the warm run from reading what the
+    * previous key left cached (the pair kernel, and what is memoized
+    * against it), so it takes the same path the measured run will. The warm
     * run compiles the generated classes the measured run needs right
     * before it, so the codegen cache (`spark.sql.codegen.cache.maxEntries`,
     * 100 entries) still holds them when `measure` runs, and it fills the
@@ -155,6 +158,7 @@ object Profile {
     * reported on stderr and `measure` still runs.
     */
   def warmThen[T](spark: SparkSession, k: String, warmDir: String)(measure: => T): T = {
+    spark.catalog.clearCache()
     try SparkEntry.queries(k)(spark, warmDir).write.format("noop").mode("overwrite").save()
     catch { case e: Throwable =>
       System.err.println(s"[warm] WARM-UP SKIPPED $k ($warmDir): ${e.getMessage}")

@@ -120,6 +120,7 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     shareGeneratedClasses(spark)
+    graft.plans.SmallSortRewrite.ensure(spark)
     val path = s"$dir/$name.parquet"
     val cached = schemaCache.get(path)
     if (cached != null) spark.read.schema(cached).parquet(path)

@@ -40,10 +40,7 @@ object TopK {
     */
   def ensureRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
     ensureStrategy(spark)
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ graft.plans.TopKRewrite
+    graft.plans.ensureOptimizerRule(spark, graft.plans.TopKRewrite)
   }
 
   /** Top `k` rows per `groupCols` group under `order` (column name →

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The library front door (graft.Graft.install): one call on an existing
-  * session registers the native expressions, the heap strategy and the
-  * top-k rewrite — idempotently. Also the artifact-isolation conf the
+  * session registers the native expressions, the heap strategy, the
+  * top-k rewrite and the small-sort rewrite — idempotently, also beside
+  * GraftExtensions and the fixture readers' own install. Also the artifact-isolation conf the
   * fixture readers set: fresh sessions share generated classes unless
   * their owner chose isolation.
   */
@@ -23,6 +24,7 @@ class GraftSpec extends AnyFunSuite {
       assert(cs.sessionState.planner.strategies
         .count(_ == plans.TopKPerGroupStrategy) == 1)
       assert(cs.experimental.extraOptimizations.count(_ == plans.TopKRewrite) == 1)
+      assert(cs.experimental.extraOptimizations.count(_ == plans.SmallSortRewrite) == 1)
 
       // dot_d usable from SQL text
       val dot = s.sql(
@@ -54,6 +56,43 @@ class GraftSpec extends AnyFunSuite {
       cs.experimental.extraOptimizations =
         cs.experimental.extraOptimizations.filterNot(_ == plans.TopKRewrite)
     }
+  }
+
+  /** Copies of `rule` the session's optimizer runs: injected at build
+    * time plus added at runtime.
+    */
+  private def copies(sess: org.apache.spark.sql.SparkSession,
+      rule: org.apache.spark.sql.catalyst.rules.Rule[_]): Int = {
+    val cs = sess.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    cs.sessionState.optimizer.extendedOperatorOptimizationRules.count(_ == rule) +
+      cs.experimental.extraOptimizations.count(_ == rule)
+  }
+
+  test("a fixture read adds SmallSortRewrite to its session exactly once") {
+    val fresh = s.newSession()
+    assert(copies(fresh, plans.SmallSortRewrite) == 0)
+    Tables.orders(fresh, d)
+    Tables.customer(fresh, d)
+    assert(copies(fresh, plans.SmallSortRewrite) == 1)
+    Graft.install(fresh) // the runtime front door finds the reader's copy
+    assert(copies(fresh, plans.SmallSortRewrite) == 1)
+  }
+
+  test("a GraftExtensions session runs each graft rule and strategy once, after install and a fixture read") {
+    val ext = org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    val cs = ext.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    Graft.install(ext)
+    Tables.orders(ext, d)
+    for (rule <- Seq(plans.TopKRewrite, plans.SmallSortRewrite)) {
+      assert(cs.sessionState.optimizer.extendedOperatorOptimizationRules.contains(rule))
+      assert(copies(ext, rule) == 1, s"${rule.ruleName} added again at runtime")
+    }
+    assert(cs.sessionState.planner.strategies.count(_ == plans.TopKPerGroupStrategy) == 1)
+    // the injected copy rewrites: a small global sort plans no range exchange
+    val plan = Tables.customer(ext, d).orderBy("c_acctbal", "c_custkey")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("Coalesce 1") && !plan.contains("rangepartitioning"), plan)
   }
 
   test("each function's register is check-then-add: a second call keeps the first registration") {

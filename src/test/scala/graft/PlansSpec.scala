@@ -82,6 +82,74 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     }
   }
 
+  /** `df` planned again from its logical plan, as a fresh query. */
+  private def replanned(df: org.apache.spark.sql.DataFrame) =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(s, df.queryExecution.logical)
+
+  /** `df` planned again with SmallSortRewrite taken out of the session's
+    * extra optimizations; every fixture read adds it back, so it is
+    * restored right after planning.
+    */
+  private def withoutSmallSort(df: org.apache.spark.sql.DataFrame) = {
+    val cs = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    cs.experimental.extraOptimizations =
+      cs.experimental.extraOptimizations.filterNot(_ == plans.SmallSortRewrite)
+    try { val off = replanned(df); off.queryExecution.executedPlan; off }
+    finally plans.SmallSortRewrite.ensure(s)
+  }
+
+  private def rangeSorted(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.toString.contains("rangepartitioning")
+
+  test("SmallSortRewrite: window_rank sorts in one task, rows identical to the range sort") {
+    val on = SparkEntry.queries("window_rank")(s, d)
+    val plan = on.queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning") && plan.contains("Coalesce 1"), plan)
+    val off = withoutSmallSort(on)
+    assert(rangeSorted(off), off.queryExecution.executedPlan.toString)
+    // same rows in the same order, not just the same multiset
+    val got = on.collect().toSeq
+    assert(got.nonEmpty && got == off.collect().toSeq)
+  }
+
+  test("SmallSortRewrite: an input over autoBroadcastJoinThreshold keeps its range sort") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+    val q = Tables.customer(s, d).select("c_custkey", "c_acctbal").orderBy("c_acctbal", "c_custkey")
+    val est = q.queryExecution.optimizedPlan.collectFirst {
+      case Sort(_, true, Repartition(1, false, input), _) => input.stats.sizeInBytes
+    }.get
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    try {
+      s.conf.set(key, est.toString)
+      assert(!rangeSorted(replanned(q)), s"an input at the bound ($est bytes) sorts in one task")
+      s.conf.set(key, (est - 1).toString)
+      assert(rangeSorted(replanned(q)), s"an input over the bound (${est - 1}) keeps its range sort")
+      s.conf.set(key, "-1")
+      assert(rangeSorted(replanned(q)), "a negative bound turns the rule off")
+    } finally s.conf.unset(key)
+  }
+
+  test("SmallSortRewrite: explode-fed and nondeterministic inputs keep their range sort") {
+    val docs = Tables.documents(s, d)
+    // control: the same small input, sorted as is, is rewritten
+    assert(!rangeSorted(docs.select("doc_id", "lang").orderBy("lang", "doc_id")))
+    val exploded = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .orderBy("w", "doc_id")
+    assert(rangeSorted(exploded), "Spark's size estimate does not grow across an explode")
+    val ids = docs.select(col("doc_id"), monotonically_increasing_id().as("m")).orderBy("doc_id")
+    assert(rangeSorted(ids), "a nondeterministic input is left alone")
+  }
+
+  test("SmallSortRewrite: orderBy(...).limit(n) still plans TakeOrderedAndProject") {
+    val q = Tables.customer(s, d).select("c_custkey", "c_acctbal")
+      .orderBy(col("c_acctbal").desc, col("c_custkey")).limit(7)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    val got = q.collect().toSeq
+    assert(got.size == 7 && got == withoutSmallSort(q).collect().toSeq)
+  }
+
   test("scan_partitioned prunes to the lang=en directory and matches the flat scan") {
     val q = SparkEntry.queries("scan_partitioned")(s, d)
     val plan = q.queryExecution.executedPlan.toString
