@@ -22,8 +22,7 @@ import org.apache.spark.sql.SparkSession
   *     `bloom_agg` / `bloom_might_contain` (Spark-internal bloom pair);
   *   - the `TopKPerGroup` planner strategy (bounded-heap per-group top-k);
   *   - the `TopKRewrite` optimizer rule (the `row_number() <= k` window
-  *     idiom auto-plans as the heap operator; opt out per session with
-  *     `spark.graft.topkRewrite.enabled=false`);
+  *     idiom auto-plans as the heap operator);
   *   - the `SmallSortRewrite` optimizer rule: a global ORDER BY over an
   *     input Catalyst sizes at or under `spark.sql.autoBroadcastJoinThreshold`
   *     (deterministic, no `Generate`) sorts in one task behind a
@@ -53,7 +52,6 @@ object Graft {
     functions.PolyHashArr.register(spark)
     functions.Blooms.register(spark)
     functions.MisraGries.register(spark)
-    operators.TopK.ensureStrategy(spark)
     operators.TopK.ensureRewrite(spark)
     plans.SmallSortRewrite.ensure(spark)
   }

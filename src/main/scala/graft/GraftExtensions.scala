@@ -29,8 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // install graft.operators.TopK.ensureStrategy performs
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     // auto-rewrite of the window-rank top-k idiom into the bounded-heap
-    // operator (strictly gated — see TopKRewrite scaladoc; opt out with
-    // spark.graft.topkRewrite.enabled=false)
+    // operator (strictly gated — see TopKRewrite scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     // a global sort over a small input sorts in one task (coalesce(1)):
     // no range-sample job, no range shuffle — see SmallSortRewrite

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Per-tag Spark job and shuffle-record counts, plus a measured window's
   * codegen compile count: the one instrumentation path behind the count
   * gates (`KeyCountsSpec`, GraftSpec's fresh-session compile test) and
-  * the audit tools (`tools/keycounts.scala`, `tools/topkbench.scala`),
+  * the audit tool (`tools/keycounts.scala`),
   * and the per-key warm step ([[warmThen]]) every per-key runner uses.
   *
   * A tag is a string held in the [[TagProp]] local property, set around a

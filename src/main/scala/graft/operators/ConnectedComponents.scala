@@ -281,7 +281,6 @@ object ConnectedComponents {
       // the round's one substantive action: materializes the round's
       // caches and counts strict decreases
       val changed = next.filter(col("lbl") < col("prev_lbl")).count()
-      graft.plans.PlanProbe.capture("cc_round", next)
       // re-wrap as LogicalRDD: O(1) plan depth regardless of round count.
       // Pin the wrapped cache (a micro-job over `next`'s cache) BEFORE
       // retiring the round's intermediates, or the next round would

@@ -35,8 +35,7 @@ object TopK {
     * strategy it plans through) on `spark` if absent — the runtime twin
     * of `GraftExtensions.injectOptimizerRule`. After this, the plain
     * window idiom `row_number() OVER (...) <= k` plans as the bounded-heap
-    * operator automatically; disable per-session via
-    * `spark.graft.topkRewrite.enabled=false`.
+    * operator automatically.
     */
   def ensureRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
     ensureStrategy(spark)

@@ -34,8 +34,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * row_number form; in both measurements below the two plans shuffle the
   * same record count (= input partitions × groups × k) and give
   * exceptAll-verified identical output. Which one is faster depends on
-  * the configuration (tools/topkbench.scala, 50M rows / 100k groups /
-  * k=3, median of three runs each):
+  * the configuration (`git show 7bc26e9:tools/topkbench.scala`, 50M rows
+  * / 100k groups / k=3, median of three runs each):
   *
   *   - local[32], 32 shuffle partitions, 24 GB driver (BASELINE r18):
   *     9.6M records each; the codegen'd stock plan 2.75 s, this

@@ -46,12 +46,12 @@ import org.apache.spark.sql.types.IntegerType
   * O(n log k) bounded heap and leaves only the trivial ≤k-rows-per-group
   * sort for the rank recomputation.
   *
-  * Gated by `spark.graft.topkRewrite.enabled` (default true where the
-  * rule is installed — it only lives in sessions that opt into
-  * [[graft.GraftExtensions]] or `TopK.ensureRewrite`).
+  * The rule only lives in sessions that opt into
+  * [[graft.GraftExtensions]] or `TopK.ensureRewrite`; a session that
+  * removes it from `experimental.extraOptimizations` plans the idiom as
+  * stock Spark does.
   */
 object TopKRewrite extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.topkRewrite.enabled"
 
   private def limitFrom(cond: Expression, rn: Attribute): Option[Int] = {
     def isRn(e: Expression): Boolean = e match {
@@ -87,8 +87,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f @ Filter(cond, w: Window) =>
         rewritten(cond, w).getOrElse(f)
@@ -101,5 +100,4 @@ object TopKRewrite extends Rule[LogicalPlan] {
           .map(nw => Project(projList, nw))
           .getOrElse(f)
     }
-  }
 }

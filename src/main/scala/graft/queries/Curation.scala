@@ -62,8 +62,9 @@ object Curation {
   /** Reusable gaps-and-islands kernel: merge each user's [ts, ts+sessUs)
     * intervals and report (user_id, n_sessions, covered_us). Input needs
     * (user_id, event_id, ts_us). One user_id exchange feeds both windows
-    * AND both aggregates (subset-clustering satisfies them — PLANS.md);
-    * the only other exchange is the caller's presentation sort.
+    * AND both aggregates (subset-clustering satisfies them — see the
+    * interval keys in `tools/plans.scala`'s output); the only other
+    * exchange is the caller's presentation sort.
     */
   def mergedCoverage(events: DataFrame, sessUs: Long): DataFrame = {
     // BOTH windows order by (ts_us, event_id): with a ROWS frame a bare

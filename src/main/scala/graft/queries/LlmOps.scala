@@ -701,20 +701,15 @@ object LlmOps {
         // collect and the returned output plan — cache it so the
         // distance pass runs once, not twice
         if (k == kmeansRounds) asgn = graft.Caching.ensureCached(asgn)
-        val upd = asgn
+        cent = asgn
           .select(col("c"), posexplode(col("qv")))
           .groupBy("c", "pos")
           .agg(expr("cast(sum(col) div count(*) as bigint)").as("cve"))
-        cent = upd
           .collect().toSeq
           .groupBy(_.getLong(0)).toSeq
           .map { case (c, rows) =>
             (c, rows.sortBy(_.getInt(1)).map(_.getLong(2))) }
           .sortBy(_._1)
-        // round plan (argmin + centroid mean — the whole per-round pass)
-        // for the PLANS.md iterative-family evidence; no-op unless the
-        // capture conf is set
-        if (k == 1) graft.plans.PlanProbe.capture("kmeans_round", upd)
       }
       val cks = cent.map { case (c, cv) => (c, cv.sum) }.toDF("c", "cent_sum")
       asgn.groupBy("c")
@@ -807,8 +802,9 @@ object LlmOps {
     },
 
     // The refinement step standard IVF-PQ deployments put on top of ADC
-    // (r20, VERDICT r19 item 3): the annbench sweep measured recall@3
-    // FLAT at 0.707 across nprobe 1..16 at 200k vectors — cell routing
+    // (r20, VERDICT r19 item 3): the ANN sweep (`git show
+    // 7bc26e9:tools/annbench.scala`) measured recall@3 FLAT at 0.707
+    // across nprobe 1..16 at 200k vectors — cell routing
     // already reaches every true neighbor, ADC quantization error is
     // what misorders the top-3 — and exact re-rank of the top-8 ADC
     // candidates recovered recall 1.000 at 1/15th the brute wall (15×
@@ -1159,12 +1155,12 @@ object LlmOps {
   private final val ivfPqNProbe = 2
 
   /** ADC-shortlist size the exact re-rank refines (r20). The 200k-vector
-    * annbench sweep measured recall@3 FLAT at 0.707 across nprobe 1..16
-    * (routing already reaches every true neighbor's cell; ADC
-    * quantization error is what misorders the top-3) and re-ranking the
-    * top-8 ADC candidates with exact L2 recovered recall 1.000 at
-    * 1/15th the brute wall (15× faster) — so the recall knob is R, not
-    * nprobe. */
+    * ANN sweep (`git show 7bc26e9:tools/annbench.scala`) measured recall@3
+    * FLAT at 0.707 across nprobe 1..16 (routing already reaches every
+    * true neighbor's cell; ADC quantization error is what misorders the
+    * top-3) and re-ranking the top-8 ADC candidates with exact L2
+    * recovered recall 1.000 at 1/15th the brute wall (15× faster) — so
+    * the recall knob is R, not nprobe. */
   private final val ivfPqRerank = 8
 
   /** Shared DuckDB CTE chain for the two IVF-PQ twins, ending at

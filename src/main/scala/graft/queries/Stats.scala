@@ -440,16 +440,13 @@ object Stats {
     val layers = collection.mutable.ArrayBuffer(layer)
     val merges = collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     for (k <- 1 to BpeRounds) {
-      val winnerDf = layer.filter(length(col("r")) >= 2)
+      val winner = layer.filter(length(col("r")) >= 2)
         .select(explode(expr(
           "transform(sequence(1, length(r) - 1), i -> substring(r, i, 2))")).as("pair"),
           col("c"))
         .groupBy("pair").agg(sum("c").as("cnt"))
         .orderBy(col("cnt").desc, col("pair")).limit(1)
-      val winner = winnerDf.collect()
-      // round plan (vocabulary-layer pair agg + argmax) for the PLANS.md
-      // iterative-family evidence; no-op unless the capture conf is set
-      if (k == 1) graft.plans.PlanProbe.capture("bpe_round", winnerDf)
+        .collect()
       // a corpus whose every token collapses below 2 symbols leaves no
       // pair to merge — fail with the cause rather than an index error
       // (the oracle's NULL-subquery replace would quietly no-op instead)

@@ -137,4 +137,27 @@ class GraftSpec extends AnyFunSuite {
     SparkEntry.queries("window_rank")(fresh, d).write.format("noop").mode("overwrite").save()
     assert(fresh.conf.get(key) == "true")
   }
+
+  /** The engine reads one graft conf: the test-armed domain guard
+    * (`ExactRatio.DomainGuardConf`). Tooling and test switches stay out of
+    * src/main: a tool registers what it needs through public Spark API, a
+    * test takes a rule out of `experimental.extraOptimizations`. A new
+    * `"spark.graft.` literal goes red here.
+    */
+  test("src/main reads no spark.graft conf but the domain guard") {
+    def walk(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles).getOrElse(Array.empty[java.io.File]).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory,
+      s"census root ${root.getAbsolutePath} missing - the suite must run from the repo root")
+    val literal = "\"spark\\.graft\\.[^\"]*\"".r
+    val found = (for {
+      f <- walk(root)
+      m <- literal.findAllIn(java.nio.file.Files.readString(f.toPath))
+    } yield s"${f.getName}: $m").sorted
+    assert(found == Seq("ExactRatio.scala: \"spark.graft.domainGuard\""),
+      s"graft confs read by src/main drifted from the domain guard alone: $found")
+  }
 }

@@ -571,10 +571,10 @@ class MlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     info(f"IVF-PQ recall@3 vs exact L2: $recall%.3f")
     // r20: deterministic fixture constant (measured 0.260) — gate at
     // ~90% of measured instead of the old 0.18 floor. The 200k-vector
-    // annbench sweep shows recall FLAT across nprobe 1..16 (routing
-    // already finds the right cells; ADC quantization bounds recall),
-    // so nprobe=2 stays the operating point and the recall lever is
-    // exact re-rank, not more cells.
+    // ANN sweep (`git show 7bc26e9:tools/annbench.scala`) shows recall
+    // FLAT across nprobe 1..16 (routing already finds the right cells;
+    // ADC quantization bounds recall), so nprobe=2 stays the operating
+    // point and the recall lever is exact re-rank, not more cells.
     assert(recall >= 0.24, f"IVF-PQ recall collapsed: $recall%.3f")
   }
 
@@ -586,7 +586,7 @@ class MlSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     // quantization misorders INSIDE the top-8 shortlist; the residual
     // gap is true neighbors the noisy ADC ordering keeps OUT of the
     // shortlist on near-random vectors, PQ's worst case — on the
-    // structured 200k annbench corpus the same R=8 re-rank measures
+    // structured 200k ANN-sweep corpus the same R=8 re-rank measures
     // recall 1.000).
     val exact = exactL2Top3()
     def recallOf(key: String): Double = {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,13 +60,12 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
       val got = q.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
       // identical rows INCLUDING the recomputed rank when the rule is off
-      s.conf.set(plans.TopKRewrite.ConfKey, "false")
-      val offPlan = q.queryExecution.executedPlan.toString
-      assert(!offPlan.contains("TopKPerGroup"), s"conf kill-switch ignored:\n$offPlan")
-      val off = q.collect()
+      val offQ = withoutRule(plans.TopKRewrite)(q)
+      val offPlan = offQ.queryExecution.executedPlan.toString
+      assert(!offPlan.contains("TopKPerGroup"), s"rule still applied once removed:\n$offPlan")
+      val off = offQ.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
       assert(got == off, "rewritten rows diverge from the window idiom")
-      s.conf.unset(plans.TopKRewrite.ConfKey)
       // ineligible shapes pass through untouched: rank() is not row_number
       val rankQ = Tables.orders(s, d)
         .withColumn("rk", rank().over(w)).filter(col("rk") <= 3)
@@ -76,7 +78,6 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
         .filter(col("rn") <= 3)
       assert(!twoQ.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
     } finally {
-      s.conf.unset(plans.TopKRewrite.ConfKey)
       cs.experimental.extraOptimizations =
         cs.experimental.extraOptimizations.filterNot(_ == plans.TopKRewrite)
     }
@@ -86,16 +87,16 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
   private def replanned(df: org.apache.spark.sql.DataFrame) =
     org.apache.spark.sql.GraftSqlBridge.ofRows(s, df.queryExecution.logical)
 
-  /** `df` planned again with SmallSortRewrite taken out of the session's
-    * extra optimizations; every fixture read adds it back, so it is
-    * restored right after planning.
+  /** `df` planned again with `rule` taken out of the session's extra
+    * optimizations; the rule is restored right after planning (every
+    * fixture read would add SmallSortRewrite back anyway).
     */
-  private def withoutSmallSort(df: org.apache.spark.sql.DataFrame) = {
+  private def withoutRule(rule: Rule[LogicalPlan])(df: DataFrame) = {
     val cs = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     cs.experimental.extraOptimizations =
-      cs.experimental.extraOptimizations.filterNot(_ == plans.SmallSortRewrite)
+      cs.experimental.extraOptimizations.filterNot(_ == rule)
     try { val off = replanned(df); off.queryExecution.executedPlan; off }
-    finally plans.SmallSortRewrite.ensure(s)
+    finally plans.ensureOptimizerRule(s, rule)
   }
 
   private def rangeSorted(df: org.apache.spark.sql.DataFrame) =
@@ -105,7 +106,7 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     val on = SparkEntry.queries("window_rank")(s, d)
     val plan = on.queryExecution.executedPlan.toString
     assert(!plan.contains("rangepartitioning") && plan.contains("Coalesce 1"), plan)
-    val off = withoutSmallSort(on)
+    val off = withoutRule(plans.SmallSortRewrite)(on)
     assert(rangeSorted(off), off.queryExecution.executedPlan.toString)
     // same rows in the same order, not just the same multiset
     val got = on.collect().toSeq
@@ -147,7 +148,7 @@ class PlansSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEach {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
     val got = q.collect().toSeq
-    assert(got.size == 7 && got == withoutSmallSort(q).collect().toSeq)
+    assert(got.size == 7 && got == withoutRule(plans.SmallSortRewrite)(q).collect().toSeq)
   }
 
   test("scan_partitioned prunes to the lang=en directory and matches the flat scan") {

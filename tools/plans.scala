@@ -1,13 +1,26 @@
+// Physical-plan evidence for every registered key, plus the executed
+// per-round plans of the iterative operators, written to target/PLANS.md
+// (generated, not committed). Run from the repo root:
+//   sbt package && SPARK_GRAFT_SF_DIR=<fixtures>/sf0.1 \
+//   $SPARK_HOME/bin/spark-shell --driver-memory 8g \
+//     --conf spark.sql.session.timeZone=UTC \
+//     --jars target/scala-2.13/sd2_drp_experimentgenspark_2.13-0.1.0.jar \
+//     -I tools/plans.scala < /dev/null
+// (the default 1g heap OOMs past ~130 plans at sf0.1)
 {
 import java.nio.file.{Files, Paths}
-val d = "/root/testdata/sf0.1"
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+  sys.error("set SPARK_GRAFT_SF_DIR to a fixture directory"))
 // ALL keys (VERDICT r16 item 2: plan evidence for every key, not a
 // curated subset) - the registry is the source of truth, so a new key
 // automatically joins the dump.
 val keys = graft.SparkEntry.queries.keys.toSeq.sorted
 val sb = new StringBuilder
-sb.append("""# PLANS -- physical-plan evidence at sf0.1
-
+sb.append(s"# PLANS -- physical-plan evidence at $d\n")
+sb.append("""
 What to check per plan (and what holds below, generated from the real
 executed plans):
 
@@ -197,7 +210,7 @@ executed plans):
   class test is a map-side exact-decimal comparison against literal
   4T/5 and 19T/20 thresholds.
 
-Regenerate: `sbt package && /opt/spark/bin/spark-shell --driver-memory 8g --jars target/scala-2.13/*.jar -I tools/plans.scala` (the default 1g heap OOMs past ~130 plans)
+Regenerate with `tools/plans.scala` (run line in its header).
 """)
 for (k <- keys) {
   val df = graft.SparkEntry.queries(k)(spark, d)
@@ -207,54 +220,77 @@ for (k <- keys) {
 
 // ---- iterative-family EXECUTED round plans (VERDICT r12 gap #1) ----
 // The multi-job operators do their real work in per-round actions whose
-// plans never appear in the returned frame; PlanProbe records each hooked
-// round's executed plan when the capture conf is set. dedup_cluster /
-// dedup_retention / graph_degree solve their (tiny, jac>=0.5) pair graphs
-// locally at every tested SF, so the distributed round below is captured
-// from a FORCED loop (localSolveMaxEdges = -1) over the REAL jaccard pair
-// graph — the exact plan the operator runs once the graph outgrows the
-// local bound.
-spark.conf.set("spark.graft.capturePlans", "true")
-graft.plans.PlanProbe.clear()
-spark.catalog.clearCache()
+// plans never appear in the returned frame. A QueryExecutionListener
+// records every action's executed plan while each loop runs; a section
+// takes the first plan of the round's action that holds the round's
+// marker, i.e. round 1. dedup_cluster / dedup_retention / graph_degree
+// solve their (tiny, jac>=0.5) pair graphs locally at every tested SF, so
+// the distributed round is captured from a FORCED loop
+// (localSolveMaxEdges = -1) over the REAL jaccard pair graph -- the exact
+// plan the operator runs once the graph outgrows the local bound.
+val executed = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+val recorder = new QueryExecutionListener {
+  def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    executed.add(funcName -> qe.executedPlan.toString)
+  def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+}
+def noop(df: org.apache.spark.sql.DataFrame): Unit =
+  df.write.format("noop").mode("overwrite").save()
+// Profile.take drains the listener bus with one sentinel job: every
+// execution event posted before it has been delivered when it returns.
+def firstRound(action: String, marker: String)(run: => Unit): String = {
+  spark.catalog.clearCache()
+  graft.Profile.take(spark)
+  executed.clear()
+  run
+  graft.Profile.take(spark)
+  executed.asScala.collectFirst { case (`action`, p) if p.contains(marker) => p }
+    .getOrElse(sys.error(s"no $action plan holding '$marker' was recorded"))
+}
+spark.listenerManager.register(recorder)
 // kmeans_iter + bpe_train execute their rounds while running normally
-graft.SparkEntry.queries("kmeans_iter")(spark, d).write.format("noop").mode("overwrite").save()
-spark.catalog.clearCache()
-graft.SparkEntry.queries("bpe_train")(spark, d).write.format("noop").mode("overwrite").save()
-spark.catalog.clearCache()
+val kmeansRound = firstRound("collect", "posexplode") {
+  noop(graft.SparkEntry.queries("kmeans_iter")(spark, d))
+}
+val bpeRound = firstRound("collect", "TakeOrderedAndProject") {
+  noop(graft.SparkEntry.queries("bpe_train")(spark, d))
+}
 // forced distributed CC loop over the real pair graph (the
-// dedup_ngram_jaccard output IS the jac>=0.5 pair set)
-val ccEdges = graft.SparkEntry.queries("dedup_ngram_jaccard")(spark, d)
-  .select($"da".as("a"), $"db".as("b"))
-graft.operators.ConnectedComponents
-  .minLabelFromEdges(ccEdges, localSolveMaxEdges = -1L)
-  .write.format("noop").mode("overwrite").save()
+// dedup_ngram_jaccard output IS the jac>=0.5 pair set); each round's one
+// substantive action counts the labels that fell below prev_lbl
+val ccRound = firstRound("count", "prev_lbl") {
+  val ccEdges = graft.SparkEntry.queries("dedup_ngram_jaccard")(spark, d)
+    .select($"da".as("a"), $"db".as("b"))
+  noop(graft.operators.ConnectedComponents.minLabelFromEdges(ccEdges, localSolveMaxEdges = -1L))
+}
+spark.listenerManager.unregister(recorder)
 spark.catalog.clearCache()
 sb.append("""
 # Iterative-family executed round plans
 
 `dedup_cluster` / `dedup_retention` / `graph_degree` share one pipeline:
 the gram kernel + banded shingle equi-join (dumped above as
-`dedup_ngram_jaccard` — their pair graphs ARE that plan) feeding
+`dedup_ngram_jaccard` -- their pair graphs ARE that plan) feeding
 ConnectedComponents. At every tested SF the jac>=0.5 pair graph is tiny
 (79 edges at sf0.1), so the hybrid solves it driver-side (one bounded
-collect, labels return as a LocalRelation — the r13 endpoints-only fast
+collect, labels return as a LocalRelation -- the r13 endpoints-only fast
 path; the final plans above show the label join). The sections below are
-the EXECUTED per-round plans of the distributed paths — captured live via
-graft.plans.PlanProbe from a forced loop over the real pair graph and from
-kmeans_iter/bpe_train's actual runs — i.e. the plan shape each round pays
-once the data outgrows the local/model bound. Check: one shuffle join +
-one aggregation per round, no NLJ, no cartesian, no unpruned scan.
+the EXECUTED round-1 plans of the distributed paths -- recorded by a
+QueryExecutionListener from a forced loop over the real pair graph and
+from kmeans_iter/bpe_train's actual runs -- i.e. the plan shape each
+round pays once the data outgrows the local/model bound. Check: one
+shuffle join or aggregation per round, no NLJ over data, no cartesian,
+no unpruned scan.
 """)
-for ((key, title) <- Seq(
-    ("cc_round", "connected-components round (forced distributed loop, real jaccard pair graph): edge-cache join + min-label agg + pointer-jump self-join"),
-    ("kmeans_round", "kmeans_iter round: broadcast-literal centroids -> combinable min(struct) argmin -> (c, pos) combinable mean"),
-    ("bpe_round", "bpe_train round: vocabulary-layer pair explosion -> combinable sum -> 1-row TakeOrdered argmax"))) {
-  val p = graft.plans.PlanProbe.get(key).getOrElse(sys.error(s"probe $key not captured"))
-  sb.append(s"\n## $title\n\n```\n").append(p.take(5000)).append("\n```\n")
+for ((title, p) <- Seq(
+    ("connected-components round (forced distributed loop, real jaccard pair graph): edge-cache join + min-label agg + pointer-jump self-join", ccRound),
+    ("kmeans_iter round: broadcast-literal centroids -> combinable min(struct) argmin -> (c, pos) combinable mean", kmeansRound),
+    ("bpe_train round: vocabulary-layer pair explosion -> combinable sum -> 1-row TakeOrdered argmax", bpeRound))) {
+  sb.append(s"\n## $title\n\n```\n").append(p.take(8000)).append("\n```\n")
 }
-spark.conf.unset("spark.graft.capturePlans")
-Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-println("PLANS_WRITTEN")
+val out = Paths.get("target", "PLANS.md")
+Files.createDirectories(out.getParent)
+Files.writeString(out, sb.toString)
+println(s"PLANS_WRITTEN ${out.toAbsolutePath}")
 }
 sys.exit(0)
